@@ -4,6 +4,7 @@ computes independently of the code under test:
 - catalog rows: the first output of each row against its DuckDB oracle
   (SparkEntry.oracleSql) over the same generated tables; rows without an
   oracle are held to the same hash on every repeat (done in the harness);
+  q224's oracle has its near-dup pairs cut to the MinHash-LSH candidates;
 - silver templates: the same SQL run by DuckDB over the written silver zone;
 - Runner.run: its Result against the bronze/silver/audit rules re-derived
   in DuckDB from the raw CSV, and every written zone against that.
@@ -73,11 +74,124 @@ def compare_frames(got, want):
     return None
 
 
-def check_catalog(con, path, oracle):
+def check_catalog(con, path, oracle, name=""):
     files = glob.glob(os.path.join(path, "*.parquet"))
     got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True) if files \
         else pd.DataFrame()
+    if name in LSH_TWIN_ROWS:
+        try:
+            oracle = lsh_restricted(con, oracle)
+        except ValueError as e:
+            return str(e)
     return compare_frames(got, con.execute(oracle).fetchdf())
+
+
+# ── MinHash-LSH near-dup stage (q224) ────────────────────────────────────
+#
+# q224's oracle drops a kept page when ANY earlier page reaches trigram
+# Jaccard >= 0.6 (all pairs), while CorpusCurate verifies only the pairs
+# MinHash-LSH proposes (DedupQueries: 16 xxhash64 minhashes, 4 bands of 4).
+# On the catalog's own fixture every such pair is proposed; on a seeded
+# corpus a pair at Jaccard ~0.8 is missed about one time in ten, so the
+# check restricts the oracle's pair join to the LSH candidates, computed
+# here from the oracle's own pages with the same hash function.
+
+LSH_TWIN_ROWS = {"q224_web_curate_e2e"}
+ALL_PAIRS = "FROM g a JOIN g b ON a.page_id < b.page_id"
+MINHASHES, BANDS, MAX_BUCKET_REPS = 16, 4, 64
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+                           0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+
+
+def _rotl(x, r):
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc, lane):
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def xxh64(data, seed):
+    """XXH64 of `data` as a signed long, the value Spark's xxhash64 gives
+    (seed 42 for the first argument, each result the seed of the next)."""
+    seed &= _M64
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(v[k], int.from_bytes(data[i + 8 * k:i + 8 * k + 8], "little"))
+                 for k in range(4)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, int.from_bytes(data[i:i + 8], "little")), 27) * _P1
+             + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (int.from_bytes(data[i:i + 4], "little") * _P1 & _M64), 23) * _P2
+             + _P3) & _M64
+        i += 4
+    while i < n:
+        h = (_rotl(h ^ (data[i] * _P5 & _M64), 11) * _P1) & _M64
+        i += 1
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _band_keys(text):
+    """(band, band hash) keys of a text's word-trigram minhash signature."""
+    toks = text.split(" ")
+    grams = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    if not grams:
+        return []
+    first = [xxh64(g.encode(), 42) for g in grams]
+    sig = [min(xxh64(j.to_bytes(4, "little"), h) for h in first) for j in range(MINHASHES)]
+    rows = MINHASHES // BANDS
+    keys = []
+    for b in range(BANDS):
+        h = 42
+        for v in sig[b * rows:(b + 1) * rows]:
+            h = xxh64(v.to_bytes(8, "little", signed=True), h)
+        keys.append((b, h))
+    return keys
+
+
+def lsh_candidates(docs):
+    """(a, b) pairs, a < b, sharing a band bucket in which a ranks among
+    the first MAX_BUCKET_REPS ids; `docs` is a list of (id, text)."""
+    buckets = {}
+    for doc_id, text in docs:
+        for key in _band_keys(text):
+            buckets.setdefault(key, []).append(doc_id)
+    pairs = set()
+    for ids in buckets.values():
+        ids.sort()
+        for r, a in enumerate(ids[:MAX_BUCKET_REPS]):
+            pairs.update((a, b) for b in ids[r + 1:])
+    return sorted(pairs)
+
+
+def lsh_restricted(con, oracle):
+    """The oracle with its all-pairs near-dup join cut to the LSH candidates
+    (held in a temporary table of this connection)."""
+    if oracle.count(ALL_PAIRS) != 1:
+        raise ValueError("oracle has no single all-pairs near-dup join to restrict")
+    head = oracle[:oracle.rfind("SELECT")]
+    docs = con.execute(head + "SELECT page_id, ctext FROM exact").fetchall()
+    con.execute("CREATE OR REPLACE TEMP TABLE lsh_pairs (a BIGINT, b BIGINT)")
+    pairs = lsh_candidates(docs)
+    if pairs:
+        con.executemany("INSERT INTO lsh_pairs VALUES (?, ?)", pairs)
+    return oracle.replace(ALL_PAIRS, ALL_PAIRS +
+                          " JOIN lsh_pairs p ON p.a = a.page_id AND p.b = b.page_id")
 
 
 # ── silver templates ─────────────────────────────────────────────────────

@@ -118,7 +118,7 @@ def check_ops(res, dirs):
         if op["kind"] == "template":
             return check.check_template(cur, op)
         if "check_path" in op and "oracle" in op:
-            return check.check_catalog(cur, op["check_path"], op["oracle"])
+            return check.check_catalog(cur, op["check_path"], op["oracle"], op["name"])
         return None
 
     todo = [op for op in res["ops"] if op["ok"]]

@@ -29,6 +29,24 @@ class Helpers(unittest.TestCase):
         self.assertIsNotNone(check.compare_frames(a, b.assign(x=[2, 3])))
         self.assertIsNotNone(check.compare_frames(a, b.assign(x=[2.0, 1.0])))
 
+    def test_xxh64_matches_spark_xxhash64(self):
+        # Spark 4.1: xxhash64('a b c'), xxhash64(<a 45-byte string>), xxhash64('a b c', 3)
+        h = check.xxh64(b"a b c", 42)
+        self.assertEqual(h, -2167479932694485896)
+        self.assertEqual(check.xxh64(b"the quick brown fox jumps over the lazy dog!!", 42),
+                         2818261134456583224)
+        self.assertEqual(check.xxh64((3).to_bytes(4, "little"), h), 4104345984614524395)
+
+    def test_lsh_restriction_keeps_candidate_pairs_only(self):
+        con = check.connect()
+        oracle = ("WITH exact AS (SELECT * FROM (VALUES (1, 'a b c d'), (2, 'a b c d'), "
+                  "(3, 'p q r s')) t(page_id, ctext)), g AS (SELECT page_id FROM exact) "
+                  f"SELECT count(*) AS n {check.ALL_PAIRS}")
+        self.assertEqual(con.execute(oracle).fetchone()[0], 3)
+        self.assertEqual(con.execute(check.lsh_restricted(con, oracle)).fetchone()[0], 1)
+        with self.assertRaises(ValueError):
+            check.lsh_restricted(con, "SELECT 1")
+
     def test_tables_are_seeded(self):
         one, two = gen_tables.tables(0.001, 5), gen_tables.tables(0.001, 5)
         for name in one:
