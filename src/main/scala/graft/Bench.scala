@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -41,7 +42,9 @@ object Bench {
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name))
         try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
+        }
     }
     // Pre-build the persisted structures for the TIMED corpus (fixture
     // setup): q104/q105 probe the indexes, q115 reads the z-ordered layout
@@ -58,7 +61,7 @@ object Bench {
       IndexCache.ensureWarcGzFixture(spark, sfDir)
       IndexCache.ensureSubstrIndex(spark, sfDir)
       graft.ml.ModelStore.ensureLogReg(spark, sfDir): Unit
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] prebuild failed: ${e.getMessage}")
     }
     // Untimed TIMED-SF materialization: the warm-up loop above runs at
@@ -67,33 +70,15 @@ object Bench {
     // corpus (q01 measured 9.6 s driver vs 1.3 s quiet-box in r10 — a
     // phantom regression three rounds running). One pass over every table
     // in sfDir moves that one-time cost out of the first timed slot.
-    // (SPARK_GRAFT_WARMREAD=0 is dev-only: reproduces the pre-fix bench
-    // for A/B adjudication of the r10 q01/q149 inflation.)
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMREAD", "1") != "0")
-      new java.io.File(sfDir).listFiles().toSeq
-        .filter(f => f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          try spark.read.parquet(f.getPath)
-            .write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
+    new java.io.File(sfDir).listFiles().toSeq
+      .filter(f => f.getName.endsWith(".parquet"))
+      .foreach { f =>
+        try spark.read.parquet(f.getPath)
+          .write.mode("overwrite").format("noop").save()
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] warm-read ${f.getName} failed: ${e.getMessage}")
         }
-    // Between-query pin sweep (default OFF; SPARK_GRAFT_SWEEP=1 enables
-    // for A/B). Kept as the experimental knob that ADJUDICATED the r10
-    // q149 accumulation hypothesis: per-query storage snapshots
-    // (SPARK_GRAFT_MEMLOG) showed the catalog's eager
-    // `localCheckpoint(true)` pins do NOT accumulate across the run —
-    // Spark's ContextCleaner GC-unpersists each query's dead blocks as
-    // soon as its frames go out of scope (pinned=0-1, memMB~0 at every
-    // probe) — and the explicit sweep measured net-NEGATIVE (~29 s
-    // slower full-run r11: synchronous block-removal RPCs + a WARN per
-    // checkpointed RDD, buying storage that was already free). See
-    // BASELINE.md round-11 adjudication.
-    val sweep = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "0") == "1"
-    val memlog = sys.env.getOrElse("SPARK_GRAFT_MEMLOG", "0") == "1"
-    def sweepPins(): Unit = if (sweep) {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+      }
     // MANDATORY cache isolation between timed queries (r14): several
     // queries now `persist()` their internal multi-consumer frames, and
     // Spark's CacheManager matches CANONICALIZED PLANS — without an
@@ -101,21 +86,14 @@ object Bench {
     // q36b after q107b's md5 signature bank) would silently serve from
     // the earlier query's cache instead of computing from the parquet
     // inputs. Every timed query must start cache-cold; this is the
-    // measurement contract, not a tuning knob (unlike the r11 SWEEP
-    // experiment, which concerned localCheckpoint pins that the
-    // ContextCleaner already reclaimed — CacheManager entries are held
-    // STRONGLY and never self-expire).
+    // measurement contract, not a tuning knob (CacheManager entries are
+    // held STRONGLY and never self-expire).
     def clearQueryCaches(): Unit = spark.catalog.clearCache()
-    sweepPins() // the warm-up + prebuild loops leave pins of their own
     clearQueryCaches()
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val starts = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val ordered0 = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Dev-only: reversed-order run for the accumulation experiment (if a
-    // late-run query speeds up when run early, in-run state is the cause).
-    val ordered = if (sys.env.get("SPARK_GRAFT_ORDER").contains("reverse"))
-      ordered0.reverse else ordered0
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // ── SELF-ADJUDICATION (see BenchAdj) ─────────────────────────────────
     // Three straight rounds burned their verdict cycle proving box
     // contention innocent by judge rerun (r11: driver 720.8 s vs judge
@@ -134,8 +112,8 @@ object Bench {
     // rounding step (0.08 → 0.2) — a compute-bound control tracks
     // contention proportionally. Each sample records its offset into
     // the timed loop so the JSON localizes the window by itself.
-    val ctrlName = ordered0.map(_._1).find(_.startsWith("q07_"))
-      .getOrElse(ordered0.head._1)
+    val ctrlName = ordered.map(_._1).find(_.startsWith("q07_"))
+      .getOrElse(ordered.head._1)
     val ctrlFn = SparkEntry.queries(ctrlName)
     val ambient = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     val wall0 = System.nanoTime()
@@ -144,7 +122,9 @@ object Bench {
       try {
         ctrlFn(spark, sfDir).write.mode("overwrite").format("noop").save()
         ambient += (((t0 - wall0) / 1e9, (System.nanoTime() - t0) / 1e9))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] control $ctrlName failed: ${e.getMessage}")
+      }
     }
     var idx = 0
     ordered.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
@@ -163,12 +143,6 @@ object Bench {
         failed += name
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
-      if (memlog) {
-        val info = spark.sparkContext.getRDDStorageInfo
-        System.err.println(f"[memlog] $name pinned=${info.length}%d " +
-          f"memMB=${info.map(_.memSize).sum / 1e6}%.1f")
-      }
-      sweepPins()
       clearQueryCaches()
     }
     timeCtrl() // close the ambient series at end-of-run
@@ -180,7 +154,10 @@ object Bench {
     val (refMap, refSf) = try {
       val src = scala.io.Source.fromFile(refPath, "UTF-8")
       try BenchAdj.parseRefMap(src.mkString) finally src.close()
-    } catch { case _: Throwable => (Map.empty[String, Double], None) }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] no usable ref $refPath: ${e.getMessage}")
+      (Map.empty[String, Double], None)
+    }
     val refUsable = refMap.nonEmpty && refSf.contains(sfShortNow)
     val retimed = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
     // Ratio flags need a same-SF reference; the top-10-slowest rule
@@ -193,8 +170,9 @@ object Bench {
           SparkEntry.queries(name)(spark, sfDir)
             .write.mode("overwrite").format("noop").save()
           retimed(name) = (timings(name), (System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => () }
-        sweepPins()
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] retime $name failed: ${e.getMessage}")
+        }
         clearQueryCaches()
       }
     // TWO-ARTIFACT CONTRACT (see README). The driver keeps only the LAST
@@ -255,7 +233,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")
       try w.println(fullJson) finally w.close()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     // Stdout artifact: greedily pack slowest-first under the budget.

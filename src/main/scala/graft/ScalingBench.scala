@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Scaling datapoints for the per-query baseline comparison (BASELINE.md):
@@ -63,19 +65,19 @@ object ScalingBench {
     // the Bench.scala warm-read ported here): the sandbox drops the page
     // cache mid-session, so without this the first timed run of a query
     // absorbs a cold parquet read and subset medians carry a 2-5 s box
-    // spread (the r14 q62/q107 adjudication noise). Same dev knob as
-    // Bench: SPARK_GRAFT_WARMREAD=0 reproduces the cold-read behaviour.
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMREAD", "1") != "0")
-      Sfs.map(sf => if (sf.startsWith("/")) sf else s"/root/testdata/$sf")
-        .foreach { dir =>
-          Option(new java.io.File(dir).listFiles()).toSeq.flatten
-            .filter(_.getName.endsWith(".parquet"))
-            .foreach { f =>
-              try spark.read.parquet(f.getPath)
-                .write.mode("overwrite").format("noop").save()
-              catch { case _: Throwable => () }
+    // spread (the r14 q62/q107 adjudication noise).
+    Sfs.map(sf => if (sf.startsWith("/")) sf else s"/root/testdata/$sf")
+      .foreach { dir =>
+        Option(new java.io.File(dir).listFiles()).toSeq.flatten
+          .filter(_.getName.endsWith(".parquet"))
+          .foreach { f =>
+            try spark.read.parquet(f.getPath)
+              .write.mode("overwrite").format("noop").save()
+            catch { case NonFatal(e) =>
+              System.err.println(s"[scaling] warm-read ${f.getPath} failed: ${e.getMessage}")
             }
-        }
+          }
+      }
     val out = names.map { n =>
       val per = Sfs.map(sf => s""""$sf":${f"${median3(run(n, sf))}%.3f"}""")
       s""""$n":{${per.mkString(",")}}"""

@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -33,7 +34,7 @@ object Verify {
         spark.catalog.clearCache()
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -52,7 +54,7 @@ object WindowAudit {
       names: Seq[String]): Seq[Site] =
     names.flatMap { n =>
       try sitesOf(n, SparkEntry.queries(n)(spark, sfDir))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[window-audit] $n failed: ${e.getMessage}")
         Seq.empty
       }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Pins
+
 /** Duplicate-cluster resolution: turn near-dup candidate PAIRS (q36/q38
   * output) into CLUSTERS via connected components — the step that decides
   * which documents actually get dropped in a dedup pipeline.
@@ -42,6 +44,8 @@ import org.apache.spark.sql.types._
   * the same.
   */
 object DedupClusters {
+
+  private val NullIds = "connectedComponents: pairs hold a null doc_a/doc_b"
 
   /** pairs(doc_a, doc_b) → (doc_id, cluster_id = min doc_id reachable).
     * Only documents that appear in some pair are emitted (singletons need
@@ -94,6 +98,7 @@ object DedupClusters {
     var i = 0
     while (i < rows.length) {
       val row = rows(i)
+      require(!row.isNullAt(0) && !row.isNullAt(1), NullIds)
       val a = row.getAs[Number](0).longValue
       val b = row.getAs[Number](1).longValue
       if (!parent.containsKey(a)) parent.put(a, a)
@@ -123,17 +128,17 @@ object DedupClusters {
   /** The 100 TB shape: iterative min-label propagation, one job and one
     * shuffle per iteration (the changed-flag count both materializes the
     * persisted next-generation labels and answers convergence). */
-  private def distributedComponents(pairs: DataFrame, maxIter: Int): DataFrame = {
+  private def distributedComponents(pairs: DataFrame, maxIter: Int)
+      : DataFrame = Pins.scope { pins =>
     // ONE scan of the (possibly expensive) pair pipeline: explode each
     // pair into both directions instead of a union of two projections —
     // the union form computed the whole upstream (e.g. q38's all-pairs
-    // verify) twice, once per branch.
-    val edges = pairs.select(explode(array(
+    // verify) twice, once per branch. Reused every iteration.
+    val edges = pins.persist(pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .persist() // reused every iteration; freed after convergence
+      .distinct())
     // Iteration 1 folded into the seed: with identity labels the min
     // neighbor label of `node` is simply min(src) over its in-edges, so
     // the first join of the generic loop is a no-op — seed labels with
@@ -170,7 +175,13 @@ object DedupClusters {
             .as("label"),
           (col("nbr_label") < col("label")).as("__changed"))
         .persist()
-      converged = next.filter(col("__changed")).count() == 0L
+      // A null pair id surfaces as a null node (edges are symmetric); its
+      // count rides the same aggregate, so the check costs no extra job.
+      val Row(changed: Long, nullIds: Long) = next.agg(
+        count(when(col("__changed"), 1)), count(when(col("node").isNull, 1)))
+        .collect()(0)
+      require(nullIds == 0L, NullIds)
+      converged = changed == 0L
       pinned.foreach(_.unpersist(false)) // superseded generation
       pinned = Some(next)
       labels = next.drop("__changed")
@@ -186,10 +197,8 @@ object DedupClusters {
       }
     }
     require(converged, s"connectedComponents did not converge in $maxIter iterations")
-    edges.unpersist(false)
-    // The final generation stays pinned (the result reads it); callers
-    // that fully materialize the result may clearCache per the Bench
-    // contract, or let the ContextCleaner reclaim it.
+    // The final generation stays out of the scope (the result reads it);
+    // the harness's clearCache or the ContextCleaner reclaims it.
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 }

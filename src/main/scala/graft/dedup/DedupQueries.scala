@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.analytics.{Ops, QueryDef}
 import Ops._
 
@@ -109,24 +110,17 @@ object DedupQueries {
       .withColumn("n_grams", size(col("grams_h")))
   }
 
-  /** q38's exact all-pairs Jaccard body, factored (r15) so eager
-    * consumers can release the shared pin: returns (pair frame, pinned
-    * hashed-gram handle). Shingles hashed to sorted long arrays ONCE per
-    * doc ([[hashedGrams]]); the O(pairs) inner loop is a codegen'd
+  /** q38's exact all-pairs Jaccard body over an already-PINNED
+    * [[hashedGrams]] frame (both self-join sides consume it; unpinned,
+    * the shingle hashing ran twice). Shingles are hashed to sorted long
+    * arrays ONCE per doc; the O(pairs) inner loop is a codegen'd
     * two-pointer merge on primitive longs (graft_intersect_card) instead
     * of string-set hashing — values identical to the string-set form
     * modulo xxhash64 collisions (~2^-64, far below the oracle's 1e-6
-    * rounding). The gram frame is PINNED: both self-join sides consume
-    * it (unpinned, the shingle hashing ran twice). q38 keeps the pin for
-    * its lazy result (the Bench clearCache contract reclaims it);
-    * q57/q155's CC consumes the pairs eagerly and unpersists the handle
-    * before returning. */
-  private def ngramJaccardWithPin(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    guardBruteForce(s, d, "q38_ngram_jaccard")
-    val docs = hashedGrams(s, d).persist()
-    val a = docs.as("a"); val b = docs.as("b")
-    val pairs = a.join(b, col("a.source") === col("b.source") &&
+    * rounding). */
+  private def ngramJaccard(grams: DataFrame): DataFrame = {
+    val a = grams.as("a"); val b = grams.as("b")
+    a.join(b, col("a.source") === col("b.source") &&
         col("a.doc_id") < col("b.doc_id") &&
         // drop degenerate pairs where BOTH gram sets are empty (<=2-token
         // docs): jaccard would be 0/0 (ANSI divide-by-zero)
@@ -145,7 +139,6 @@ object DedupQueries {
             (col("a.n_grams") + col("b.n_grams") - col("n_inter")))
           .otherwise(lit(0.0))
           .as("jaccard"))
-    (pairs, docs)
   }
 
   /** MinHash signatures via explode → codegen'd hash-agg of K seeded
@@ -974,7 +967,11 @@ object DedupQueries {
       notes = "64-bit SimHash from token-hash bit votes; rows-only (xxhash64 engine-specific)"),
 
     // ── n-gram Jaccard within source groups (exact, set-based) ─────────
-    QueryDef("q38_ngram_jaccard", (s, d) => ngramJaccardWithPin(s, d)._1,
+    // q38 keeps its lazy gram pin: the harness's clearCache reclaims it.
+    QueryDef("q38_ngram_jaccard", (s, d) => {
+      guardBruteForce(s, d, "q38_ngram_jaccard")
+      ngramJaccard(hashedGrams(s, d).persist())
+    },
       Some("""
       WITH g AS (
         SELECT doc_id, source,
@@ -999,15 +996,13 @@ object DedupQueries {
     // via iterative min-label propagation (DedupClusters). The oracle walks
     // the same graph with a recursive CTE — tractable at oracle scale,
     // while the Spark loop is the 100 TB form.
-    QueryDef("q57_dup_clusters", (s, d) => {
+    QueryDef("q57_dup_clusters", (s, d) => Pins.scope { pins =>
       // CC consumes the q38 pair pipeline EAGERLY (bounded take or
-      // iterative loop), so the shared hashed-gram pin releases before
-      // return (r15 hygiene).
-      val (jac, pin) = ngramJaccardWithPin(s, d)
-      val pairs = jac.filter(col("jaccard") >= 0.6).select("doc_a", "doc_b")
-      val cc = DedupClusters.connectedComponents(pairs)
-      pin.unpersist(false)
-      cc
+      // iterative loop), so the gram pin is scoped to this call.
+      guardBruteForce(s, d, "q38_ngram_jaccard")
+      val jac = ngramJaccard(pins.persist(hashedGrams(s, d)))
+      DedupClusters.connectedComponents(
+        jac.filter(col("jaccard") >= 0.6).select("doc_a", "doc_b"))
     }, Some("""
       WITH RECURSIVE g AS (
         SELECT doc_id, source,
@@ -1046,18 +1041,15 @@ object DedupQueries {
     // losses (pairs whose 16-slot signatures disagree on all 4 bands) and
     // additionally CATCHES cross-source near-dups q57's source blocking
     // skips. Parity is pinned by DedupClustersLshSpec.
-    QueryDef("q62_dup_clusters_lsh", (s, d) => {
+    QueryDef("q62_dup_clusters_lsh", (s, d) => Pins.scope { pins =>
       // Pins: band self-join reads signatures twice, verify reads the
       // gram sets twice (the q36b/q141 staging discipline). CC consumes
       // the edges EAGERLY (bounded take or iterative loop), so the pins
-      // release before return (r15 hygiene).
-      val sigs = signatures(s, d).persist()
-      val grams = hashedGrams(s, d).persist()
-      val edges = verifyJaccard(lshCandidatePairs(sigs), grams, 0.6)
-      val cc = DedupClusters.connectedComponents(edges)
-      sigs.unpersist(false)
-      grams.unpersist(false)
-      cc
+      // are scoped to this call.
+      val sigs = pins.persist(signatures(s, d))
+      val grams = pins.persist(hashedGrams(s, d))
+      DedupClusters.connectedComponents(
+        verifyJaccard(lshCandidatePairs(sigs), grams, 0.6))
     }, None,
       notes = "scale-path near-dup clusters: LSH candidates -> exact verify (candidates only) -> CC; rows-only (band hashes engine-specific)"),
 
@@ -1381,13 +1373,13 @@ object DedupQueries {
     QueryDef("q107_lsh_canonical", (s, d) => {
       // Pins: band self-join reads signatures twice, verify reads the
       // gram sets twice (the q36b/q141 staging discipline). CC consumes
-      // the edges EAGERLY, so the pins release before return (r15).
-      val sigs = signatures(s, d).persist()
-      val grams = hashedGrams(s, d).persist()
-      val edges = verifyJaccard(lshCandidatePairs(sigs), grams, 0.6)
-      val cc = DedupClusters.connectedComponents(edges)
-      sigs.unpersist(false)
-      grams.unpersist(false)
+      // the edges EAGERLY, so the pins are scoped to the CC call.
+      val cc = Pins.scope { pins =>
+        val sigs = pins.persist(signatures(s, d))
+        val grams = pins.persist(hashedGrams(s, d))
+        DedupClusters.connectedComponents(
+          verifyJaccard(lshCandidatePairs(sigs), grams, 0.6))
+      }
       canonicalElection(cc, t(s, d, "documents"))
     }, None,
       notes = "LSH candidates -> exact verify -> CC -> canonical election: the q62+q81 composition as one query (rows-only; parity spec vs q81 modulo LSH recall)"),
@@ -2622,20 +2614,19 @@ object DedupQueries {
       // PIN the signature bank (both sides of the band self-join replay
       // the 16-min-md5 aggregation otherwise) and the hashed gram sets
       // (both verify sides scan them) — the q36b discipline. CC consumes
-      // the edges EAGERLY, so the pins release before return (r15).
-      val sigs = md5Signatures(s, d).persist()
-      val grams = hashedGrams(s, d).persist()
-      val bands = md5Bands(sigs)
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-            col("a.bh") === col("b.bh") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val edges = verifyJaccard(cand, grams, 0.6)
-      val cc = DedupClusters.connectedComponents(edges)
-      sigs.unpersist(false)
-      grams.unpersist(false)
+      // the edges EAGERLY, so the pins are scoped to the CC call.
+      val cc = Pins.scope { pins =>
+        val sigs = pins.persist(md5Signatures(s, d))
+        val grams = pins.persist(hashedGrams(s, d))
+        val bands = md5Bands(sigs)
+        val cand = bands.as("a").join(bands.as("b"),
+            col("a.band_id") === col("b.band_id") &&
+              col("a.bh") === col("b.bh") &&
+              col("a.doc_id") < col("b.doc_id"))
+          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+          .distinct()
+        DedupClusters.connectedComponents(verifyJaccard(cand, grams, 0.6))
+      }
       canonicalElection(cc, t(s, d, "documents"))
     }, Some {
       val sigSql = md5SigSql

@@ -7,6 +7,22 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** Null-element handling shared by the compiled array expressions: an
+  * input array holding a null element yields a null result. */
+private[functions] object NullElements {
+  def in(arr: ArrayData): Boolean = {
+    var i = 0
+    while (i < arr.numElements() && !arr.isNullAt(i)) i += 1
+    i < arr.numElements()
+  }
+
+  /** Whether `e` can yield an array with null elements. */
+  def possible(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+}
+
 /** Compiled BPE merge application (r15, the graft_cdc_chunks pattern
   * applied to the tokenizer family — guide §4: lambda higher-order
   * functions evaluate INTERPRETED, element by element, outside
@@ -81,12 +97,14 @@ object BpeMerge {
     * split every legacy caller used (symbols never contain spaces:
     * split-on-' ' tokens / hex codes and their concatenations; empty
     * symbols occur on adversarial doubled-space corpora and take the
-    * fold branch, matching bpeMergeExpr's branch rule verbatim). */
+    * fold branch, matching bpeMergeExpr's branch rule verbatim). None
+    * when the list holds a null pair: the result is then null. */
   def compilePairs(e: Expression)
-      : Array[(UTF8String, UTF8String, UTF8String, Boolean)] = {
+      : Option[Array[(UTF8String, UTF8String, UTF8String, Boolean)]] = {
     require(e.foldable, "the merge list must be a literal array of 'a b' pairs")
     val arr = e.eval().asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map { i =>
+    if (NullElements.in(arr)) None
+    else Some((0 until arr.numElements()).map { i =>
       val pair = arr.getUTF8String(i).toString
       val sp = pair.indexOf(' ')
       require(sp >= 0, s"merge pair must be 'a b' (space-separated), got '$pair'")
@@ -94,7 +112,7 @@ object BpeMerge {
       val b = pair.substring(sp + 1)
       (UTF8String.fromString(a), UTF8String.fromString(b),
         UTF8String.fromString(a + b), a != b && b.nonEmpty)
-    }.toArray
+    }.toArray)
   }
 
   def applyAll(syms: Array[UTF8String],
@@ -126,16 +144,20 @@ case class BpeApplyMerges(left: Expression, right: Expression)
   }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // an array holding a null symbol or a null merge pair yields null
+  override def nullable: Boolean = super.nullable ||
+    NullElements.possible(left) || NullElements.possible(right)
   override def prettyName: String = "graft_bpe_apply"
 
   @transient private lazy val merges = BpeMerge.compilePairs(right)
 
   override protected def nullSafeEval(tk: Any, unused: Any): Any = {
     val in = tk.asInstanceOf[ArrayData]
+    if (merges.isEmpty || NullElements.in(in)) return null
     val syms = new Array[UTF8String](in.numElements())
     var i = 0
     while (i < syms.length) { syms(i) = in.getUTF8String(i); i += 1 }
-    BpeMerge.applyAll(syms, merges)
+    BpeMerge.applyAll(syms, merges.get)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -160,11 +182,15 @@ case class ByteBpeEncode(left: Expression, right: Expression)
   }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // a merge list holding a null pair yields null
+  override def nullable: Boolean =
+    super.nullable || NullElements.possible(right)
   override def prettyName: String = "graft_byte_bpe_encode"
 
   @transient private lazy val merges = BpeMerge.compilePairs(right)
 
   override protected def nullSafeEval(word: Any, unused: Any): Any = {
+    if (merges.isEmpty) return null
     val bytes = word.asInstanceOf[UTF8String].getBytes
     val syms = new Array[UTF8String](bytes.length)
     var i = 0
@@ -172,7 +198,7 @@ case class ByteBpeEncode(left: Expression, right: Expression)
       syms(i) = ByteBpeEncode.HexSyms(bytes(i) & 0xFF)
       i += 1
     }
-    BpeMerge.applyAll(syms, merges)
+    BpeMerge.applyAll(syms, merges.get)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,

@@ -41,12 +41,16 @@ case class WinnowFps(child: Expression)
   }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  // a token array holding a null element yields null
+  override def nullable: Boolean =
+    child.nullable || NullElements.possible(child)
   override def prettyName: String = "graft_winnow_fps"
 
   private val Space = Array[Byte](' ')
 
   override protected def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[ArrayData]
+    if (NullElements.in(toks)) return null
     val n = toks.numElements()
     if (n < 7) return new GenericArrayData(Array.empty[Any])
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.streaming.StreamingDocIngest
 import graft.text.TextSignals
 
@@ -35,13 +36,15 @@ import graft.text.TextSignals
   * Scale posture: every stage is a catalog-audited shape (narrow gate,
   * one fp-keyed window, LSH band shuffles + candidate-only verify, one
   * source-keyed window); the driver actions are the manifest COUNTS — no
-  * row ever reaches the driver. The exact- and near-dup survivor frames
-  * are PINNED (lazy `persist` — the first count materializes the cache,
-  * every later stage reads it) because each has several consumers
-  * (counts, the next stage's multiple scans, the stats aggregate) —
-  * unpinned, the heavy LSH+verify stage replayed once per downstream
-  * action. At 100 TB swap the pins for zone writes, exactly as Runner
-  * stages through zones. */
+  * row ever reaches the driver. Each survivor generation (exact,
+  * near-dup, and the optional containment/semantic stages) is PINNED in
+  * the caller's [[graft.Pins]] scope (lazy `persist` — the first count
+  * materializes the cache, every later stage reads it) because each has
+  * several consumers (counts, the next stage's multiple scans, the stats
+  * aggregate) — unpinned, the heavy LSH+verify stage replayed once per
+  * downstream action. The scope holds at most 4 generations of
+  * curated-scale text until it exits. At 100 TB swap the pins for zone
+  * writes, exactly as Runner stages through zones. */
 object CorpusCurate {
 
   final case class Manifest(
@@ -66,20 +69,14 @@ object CorpusCurate {
     * `semantic = Some((embeddings, tau))` switches on the q74 semantic
     * stage, where `embeddings` is a (vec_id, embedding) frame whose ids
     * align with doc_ids (docs without an embedding pass through — the
-    * stage can only judge what the encoder embedded). */
-  /** `retainPin = true` (default) leaves the final survivor frame cached
-    * — callers that keep consuming the returned frame (the CLIs, q253's
-    * composition) read it for free, and release via
-    * `spark.catalog.clearCache()` or session end. `retainPin = false`
-    * unpersists EVERY internal pin before returning (r15 hygiene, ADVICE
-    * r14): correct for manifest-only callers (the counts have already
-    * materialized every stage), at the cost of a full recompute should
-    * the returned frame be re-consumed later. */
-  def run(docs: DataFrame, minQuality: Double = 1.0, minJ: Double = 0.6,
-      shardTokens: Long = 2048L,
+    * stage can only judge what the encoder embedded).
+    *
+    * Every internal pin lives in `pins`: the returned frame reads them,
+    * so it must be consumed inside the caller's `Pins.scope`. */
+  def run(pins: Pins, docs: DataFrame, minQuality: Double = 1.0,
+      minJ: Double = 0.6, shardTokens: Long = 2048L,
       containmentTau: Option[Double] = None,
-      semantic: Option[(DataFrame, Double)] = None,
-      retainPin: Boolean = true): (DataFrame, Manifest) = {
+      semantic: Option[(DataFrame, Double)] = None): (DataFrame, Manifest) = {
     require(shardTokens > 0, s"shardTokens must be positive, got $shardTokens")
     // n0/n1 RIDE the exact-dedup pass via observe() (r15, guide §2.4):
     // the head aggregate previously scanned `docs` (and evaluated the
@@ -100,12 +97,11 @@ object CorpusCurate {
     // left side) and transitively by every later stage — unpinned, each
     // of those replayed quality gate + fp window from the source. Text
     // at this point is curated-scale (html already dropped upstream).
-    val exact = gated
+    val exact = pins.persist(gated
       .withColumn("fp", TextSignals.normalizedFingerprint(col("text")))
       .withColumn("__rn",
         row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
-      .filter(col("__rn") === 1).drop("__rn")
-      .persist()
+      .filter(col("__rn") === 1).drop("__rn"))
     val n2 = exact.count()
     val headRow = headObs.get // latched by the count above
     val n0 = headRow("n0").asInstanceOf[Long]
@@ -115,31 +111,17 @@ object CorpusCurate {
     // stages, the shard window AND the stats aggregate — unpinned, the
     // full LSH-candidates + exact-verify pipeline re-ran once per
     // downstream action (the r14 bench measured 3-4 replays per call).
-    val (nearDf, releaseTwinPins) =
-      StreamingDocIngest.nearDupBatchTwinWithRelease(exact, minJ)
-    val near = nearDf.persist()
+    val near = pins.persist(
+      StreamingDocIngest.nearDupBatchTwin(pins, exact, minJ))
     val n3 = near.count()
-    // `near` is materialized: the twin's internal signature/gram pins and
-    // the superseded exact pin release here (every later stage reads the
-    // cached `near` rows; a recompute-on-eviction walks lineage, exactly
-    // the pre-pin posture).
-    releaseTwinPins()
-    exact.unpersist(false)
-    // the currently-pinned survivor generation (superseded pins release
-    // as soon as their successor materializes)
-    var live: DataFrame = near
 
     // When an optional stage is OFF its frame IS the previous one —
     // recounting an identical frame buys nothing, so the count is reused.
     val (contained, n4) = containmentTau match {
       case Some(tau) =>
-        val c = near.join(graft.dedup.DedupQueries.containmentDrops(
-          near.select("doc_id", "text"), tau), Seq("doc_id"), "left_anti")
-          .persist()
-        val n = c.count()
-        live.unpersist(false)
-        live = c
-        (c, n)
+        val c = pins.persist(near.join(graft.dedup.DedupQueries.containmentDrops(
+          near.select("doc_id", "text"), tau), Seq("doc_id"), "left_anti"))
+        (c, c.count())
       case None => (near, n3)
     }
 
@@ -158,12 +140,8 @@ object CorpusCurate {
           contained.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
         val drops = SimilarityQueries.dominatedIn(alive, tau)
           .select(col("vec_id").as("doc_id"))
-        val sdf = contained.join(drops, Seq("doc_id"), "left_anti")
-          .persist()
-        val n = sdf.count()
-        live.unpersist(false)
-        live = sdf
-        (sdf, n)
+        val sdf = pins.persist(contained.join(drops, Seq("doc_id"), "left_anti"))
+        (sdf, sdf.count())
       case None => (contained, n4)
     }
 
@@ -179,7 +157,6 @@ object CorpusCurate {
     val stats = curated.agg(
       coalesce(sum(col("n_tokens")), lit(0L)).as("toks"),
       countDistinct(col("source"), col("shard_id")).as("shards")).collect()(0)
-    if (!retainPin) live.unpersist(false)
 
     val manifest = Manifest(
       inputDocs = n0,
@@ -209,9 +186,12 @@ object CorpusCurate {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val (curated, m) = run(spark.read.parquet(inDir))
-      curated.write.mode("overwrite")
-        .option("compression", "snappy").parquet(s"$outRoot/curated")
+      val m = Pins.scope { pins =>
+        val (curated, m) = run(pins, spark.read.parquet(inDir))
+        curated.write.mode("overwrite")
+          .option("compression", "snappy").parquet(s"$outRoot/curated")
+        m
+      }
       val json =
         s"""{"input_docs":${m.inputDocs},"quality_dropped":${m.qualityDropped},""" +
           s""""exact_dup_dropped":${m.exactDupDropped},"near_dup_dropped":${m.nearDupDropped},""" +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.text.{HtmlExtract, TextClean, UrlOps}
 
 /** Web-corpus curation end-to-end — the MARKUP front door in front of
@@ -47,14 +48,14 @@ object WebCurate {
 
   /** `pages` must expose (page_id, url, html, source). Returns the
     * curated frame (CorpusCurate columns + url_canon/domain) and the
-    * two-level manifest. */
-  /** `retainPin` forwards to [[CorpusCurate.run]] (r15 hygiene): `false`
-    * releases every internal cache pin before returning — correct for
-    * manifest-only callers. */
-  def run(pages: DataFrame, maxPerDomain: Long = 3L,
+    * two-level manifest.
+    *
+    * The post-extract checkpoint and every [[CorpusCurate.run]] pin live
+    * in `pins`: the returned frame reads them, so it must be consumed
+    * inside the caller's `Pins.scope`. */
+  def run(pins: Pins, pages: DataFrame, maxPerDomain: Long = 3L,
       minQuality: Double = 1.0, minJ: Double = 0.6,
-      shardTokens: Long = 2048L,
-      retainPin: Boolean = true): (DataFrame, WebManifest) = {
+      shardTokens: Long = 2048L): (DataFrame, WebManifest) = {
     require(maxPerDomain > 0, s"maxPerDomain must be positive: $maxPerDomain")
     // The crawl is scanned exactly ONCE, however many manifest counts are
     // taken (r15, VERDICT r14 #7 — was twice since r14, per-count lineage
@@ -88,13 +89,12 @@ object WebCurate {
       .withColumn("__rn", row_number().over(wDom))
       .filter(col("__rn") <= maxPerDomain).drop("__rn")
 
-    val texts0 = capped
+    val texts0 = pins.checkpoint(capped
       .withColumn("text",
         TextClean.clean(HtmlExtract.extract(col("html")).getField("text")))
       .drop("html") // bytes stop here
       .observe(extractObs, count(lit(1)).as("n2"),
-        count(when(length(col("text")) > 0, 1)).as("n3"))
-      .localCheckpoint(true)
+        count(when(length(col("text")) > 0, 1)).as("n3")))
     val n0 = headObs.get("n0").asInstanceOf[Long]
     val n1 = urlObs.get("n1").asInstanceOf[Long]
     val extractRow = extractObs.get
@@ -102,10 +102,9 @@ object WebCurate {
     val n3 = extractRow("n3").asInstanceOf[Long]
     val texts = texts0.filter(length(col("text")) > 0)
 
-    val (curated, inner) = CorpusCurate.run(
+    val (curated, inner) = CorpusCurate.run(pins,
       texts.withColumnRenamed("page_id", "doc_id"),
-      minQuality = minQuality, minJ = minJ, shardTokens = shardTokens,
-      retainPin = retainPin)
+      minQuality = minQuality, minJ = minJ, shardTokens = shardTokens)
     (curated, WebManifest(
       pages = n0,
       urlDupDropped = n0 - n1,
@@ -129,9 +128,12 @@ object WebCurate {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val (curated, m) = run(spark.read.parquet(inDir))
-      curated.write.mode("overwrite")
-        .option("compression", "snappy").parquet(s"$outRoot/curated")
+      val m = Pins.scope { pins =>
+        val (curated, m) = run(pins, spark.read.parquet(inDir))
+        curated.write.mode("overwrite")
+          .option("compression", "snappy").parquet(s"$outRoot/curated")
+        m
+      }
       val c = m.curated
       val json =
         s"""{"pages":${m.pages},"url_dup_dropped":${m.urlDupDropped},""" +

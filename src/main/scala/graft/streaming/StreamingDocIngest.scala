@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Pins
 import graft.text.TextSignals
 
 /** Streaming document ingestion for the training-data pipeline: the
@@ -190,8 +191,8 @@ object StreamingDocIngest {
       vectorIndexName: Option[String], setSimRoot: Option[String],
       minJ: Double): Unit = {
     val (survivorsDf, sigRows) = survivorsOf(batch, sigPath, minJ)
-    val survivors = survivorsDf.persist()
-    try {
+    Pins.scope { pins =>
+      val survivors = pins.persist(survivorsDf)
       survivors.write.mode("append").parquet(outPath)
       graft.text.PostingsIndex.buildOrAppend(
         survivors.select("doc_id", "text"), postingsRoot)
@@ -214,25 +215,17 @@ object StreamingDocIngest {
             .select("doc_id", "grams_h", "n_grams"))
       }
       sigRows.write.mode("append").parquet(sigPath)
-    } finally survivors.unpersist()
+    }
   }
 
   /** One-shot batch computation with the identical survivor rule — drop
     * every doc with a lower-id LSH-verified >= minJ witness, kept or not —
     * for the batch⇄stream parity spec. (q62 continues past this point to
     * connected components; the ingest stage only needs the drop set.)
-    * The internal signature/gram pins stay cached for the frame's
-    * lifetime (the CacheManager holds them strongly); callers that
-    * materialize the result and want the blocks back should use
-    * [[nearDupBatchTwinWithRelease]] (r15 hygiene — ADVICE r14). */
-  def nearDupBatchTwin(docs: DataFrame, minJ: Double = 0.6): DataFrame =
-    nearDupBatchTwinWithRelease(docs, minJ)._1
-
-  /** [[nearDupBatchTwin]] plus a release handle: invoke it AFTER the
-    * returned frame has fully materialized (e.g. a count on a persisted
-    * copy) to unpersist the internal signature/gram pins. */
-  private[graft] def nearDupBatchTwinWithRelease(docs: DataFrame,
-      minJ: Double): (DataFrame, () => Unit) = {
+    * The internal signature/gram pins live in the caller's `pins`, so the
+    * returned frame must be consumed inside that scope. */
+  def nearDupBatchTwin(pins: Pins, docs: DataFrame,
+      minJ: Double = 0.6): DataFrame = {
     import graft.dedup.DedupQueries
     val d = docs.select("doc_id", "text")
     // PIN the signature and gram frames (batch-only API — callers are
@@ -240,12 +233,11 @@ object StreamingDocIngest {
     // lshCandidatePairs consumes the signatures twice and verifyJaccard
     // consumes the gram sets twice; unpinned, each side replayed the
     // full shingle pass over `docs`' lineage.
-    val sigs = DedupQueries.signaturesOf(d).persist()
-    val grams = DedupQueries.hashedGramsOf(d).persist()
+    val sigs = pins.persist(DedupQueries.signaturesOf(d))
+    val grams = pins.persist(DedupQueries.hashedGramsOf(d))
     val dropped = DedupQueries.verifyJaccard(
       DedupQueries.lshCandidatePairs(sigs), grams, minJ)
       .select(col("doc_b").as("doc_id")).distinct()
-    (docs.join(dropped, Seq("doc_id"), "left_anti"),
-      () => { sigs.unpersist(false); grams.unpersist(false); () })
+    docs.join(dropped, Seq("doc_id"), "left_anti")
   }
 }

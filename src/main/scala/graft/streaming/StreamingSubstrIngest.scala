@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.Pins
 import graft.dedup.SubstrIndex
 
 /** Streaming ExactSubstr ingest — the continuous counterpart of q251/q252,
@@ -101,8 +102,8 @@ object StreamingSubstrIngest {
     // and the re-writes start clean
     delete(s, s"$landedDir/b$batchId")
     delete(s, s"$covOut/b$batchId")
-    val docs = batch.select("doc_id", "text").persist()
-    try {
+    Pins.scope { pins =>
+      val docs = pins.persist(batch.select("doc_id", "text"))
       val corpus = LedgerIO
         .readOrEmpty(s, landedDir, CorpusSchema, recursive = true)
         .select("doc_id", "text")
@@ -113,7 +114,7 @@ object StreamingSubstrIngest {
       import s.implicits._
       Seq(batchId).toDF("batch_id")
         .write.mode("overwrite").parquet(ledgerDir)
-    } finally docs.unpersist()
+    }
   }
 
   /** Wire a (doc_id, text, ...) stream through [[substrBatch]]. */

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.analytics.{Ops, QueryDef}
 import Ops._
 import graft.functions.{DetMath, DetMathSql}
@@ -101,7 +102,7 @@ object TextQueries {
       .agg(count(lit(1)).as("dl"), tfCols: _*)
       .localCheckpoint(true)
     val stackArgs = terms.zipWithIndex.map { case (tm, i) =>
-      s"'${tm}', __tf$i" }.mkString(", ") // fixed alphanumeric demo terms
+      s"${sqlStrLit(tm)}, __tf$i" }.mkString(", ")
     val tf = agg.selectExpr("doc_id",
         s"stack(${terms.size}, $stackArgs) AS (tok, tf)")
       .filter(col("tf") > 0)
@@ -494,22 +495,21 @@ object TextQueries {
     * narrow codegen'd NFC map; vocab-sized merge application joined
     * back by word; the q89/q94 two-pass global offsets (never a
     * single-partition window); block-keyed hash agg. The curated frame
-    * and the per-doc encode frame are pinned (`localCheckpoint`) —
-    * three consumers each, lineage replays cut exactly where a real
-    * pipeline would stage through zone writes. Factored out of the
-    * QueryDef so PretrainE2eSpec can drive the identities directly. */
+    * and the per-doc encode frame are pinned (scoped `localCheckpoint`s,
+    * released with WebCurate's pins on return) — three consumers each,
+    * lineage replays cut exactly where a real pipeline would stage
+    * through zone writes. Factored out of the QueryDef so
+    * PretrainE2eSpec can drive the identities directly. */
   private[text] def pretrainE2e(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = Pins.scope { pins =>
     val dir = graft.IndexCache.ensureWarcGzFixture(s, d)
     val (curated0, m) =
-      graft.pipeline.WebCurate.run(graft.io.WarcIO.readPagesGz(s, dir))
-    val c = m.curated
+      graft.pipeline.WebCurate.run(pins, graft.io.WarcIO.readPagesGz(s, dir))
     // NFC before tokenization (q246's stage in composition; identity on
     // this ASCII fixture — q246 gates the non-trivial branches — but the
     // stage must sit in the chain so a real corpus hits it).
-    val curated = curated0
-      .select(col("doc_id"), TextClean.nfc(col("text")).as("text"))
-      .localCheckpoint(true)
+    val curated = pins.checkpoint(curated0
+      .select(col("doc_id"), TextClean.nfc(col("text")).as("text")))
     // q247's training, served FROZEN (train-once/serve-anywhere — the
     // session-cached artifact; the q253 oracle replays training anyway,
     // so the cache cannot mask a training defect)
@@ -526,10 +526,9 @@ object TextQueries {
     val wenc = enc.select(col("word"),
       expr("octet_length(word)").cast("long").as("n_b"),
       size(col("tk")).cast("long").as("n_syms"))
-    val perdoc = dw.join(wenc, Seq("word"))
+    val perdoc = pins.checkpoint(dw.join(wenc, Seq("word"))
       .groupBy("doc_id")
-      .agg(sum("n_b").as("n_bytes"), sum("n_syms").as("n_bpe"))
-      .localCheckpoint(true)
+      .agg(sum("n_b").as("n_bytes"), sum("n_syms").as("n_bpe")))
     val B = 512L
     val blocks = graft.operators.GlobalOrder
       .withRunningTotals(
@@ -549,18 +548,33 @@ object TextQueries {
       coalesce(sum("block_tokens"), lit(0L)).as("pt"),
       coalesce(max("block_id"), lit(-1L)).as("mb"),
       coalesce(sum("n_docs"), lit(0L)).as("bd")).collect()(0)
-    import s.implicits._
-    Seq((m.pages, m.urlDupDropped, m.domainCapDropped, m.emptyExtractDropped,
-      c.inputDocs, c.qualityDropped, c.exactDupDropped, c.nearDupDropped,
-      c.containmentDropped, c.semanticDropped, c.keptDocs, c.keptTokens,
-      c.shards, e.getLong(0), e.getLong(1), e.getLong(0) - e.getLong(1),
-      p.getLong(0), p.getLong(1), p.getLong(2), p.getLong(3)))
-      .toDF("pages", "url_dup_dropped", "domain_cap_dropped",
-        "empty_extract_dropped", "input_docs", "quality_dropped",
-        "exact_dup_dropped", "near_dup_dropped", "containment_dropped",
-        "semantic_dropped", "kept_docs", "kept_tokens", "shards",
-        "n_bytes", "n_bpe_tokens", "n_merges_applied",
-        "n_blocks", "packed_tokens", "max_block_id", "block_docs_sum")
+    webManifestRow(s, m,
+      "n_bytes" -> e.getLong(0), "n_bpe_tokens" -> e.getLong(1),
+      "n_merges_applied" -> (e.getLong(0) - e.getLong(1)),
+      "n_blocks" -> p.getLong(0), "packed_tokens" -> p.getLong(1),
+      "max_block_id" -> p.getLong(2), "block_docs_sum" -> p.getLong(3))
+  }
+
+  /** The two-level WebCurate manifest as ONE local row of 13 bigint
+    * columns (q224/q235/q245's oracled surface), `extra` appended in
+    * order (q253's encode/pack totals). */
+  private def webManifestRow(s: org.apache.spark.sql.SparkSession,
+      m: graft.pipeline.WebCurate.WebManifest,
+      extra: (String, Long)*): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val c = m.curated
+    val cols = Seq("pages" -> m.pages, "url_dup_dropped" -> m.urlDupDropped,
+      "domain_cap_dropped" -> m.domainCapDropped,
+      "empty_extract_dropped" -> m.emptyExtractDropped,
+      "input_docs" -> c.inputDocs, "quality_dropped" -> c.qualityDropped,
+      "exact_dup_dropped" -> c.exactDupDropped,
+      "near_dup_dropped" -> c.nearDupDropped,
+      "containment_dropped" -> c.containmentDropped,
+      "semantic_dropped" -> c.semanticDropped, "kept_docs" -> c.keptDocs,
+      "kept_tokens" -> c.keptTokens, "shards" -> c.shards) ++ extra
+    s.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(cols.map(_._2))),
+      StructType(cols.map(kv => StructField(kv._1, LongType, nullable = false))))
   }
 
   /** Byte-level row-form corpus for the oracle: DISTINCT words (the
@@ -2149,24 +2163,13 @@ object TextQueries {
     // Scale: stages 1-3 are one narrow map + two WindowGroupLimit
     // windows; the inner chain inherits CorpusCurate's audited shapes;
     // the manifest counts are the only driver actions.
-    QueryDef("q224_web_curate_e2e", (s, d) => {
+    QueryDef("q224_web_curate_e2e", (s, d) => Pins.scope { pins =>
       val pages = t(s, d, "documents").select(
         col("doc_id").as("page_id"),
         UrlOps.syntheticUrl(col("doc_id")).as("url"),
         HtmlExtract.syntheticHtml(col("doc_id"), col("text")).as("html"),
         col("source"))
-      // manifest-only consumer: release every internal pin on return
-      val (_, m) = graft.pipeline.WebCurate.run(pages, retainPin = false)
-      val c = m.curated
-      import s.implicits._
-      Seq((m.pages, m.urlDupDropped, m.domainCapDropped,
-        m.emptyExtractDropped, c.inputDocs, c.qualityDropped,
-        c.exactDupDropped, c.nearDupDropped, c.containmentDropped,
-        c.semanticDropped, c.keptDocs, c.keptTokens, c.shards))
-        .toDF("pages", "url_dup_dropped", "domain_cap_dropped",
-          "empty_extract_dropped", "input_docs", "quality_dropped",
-          "exact_dup_dropped", "near_dup_dropped", "containment_dropped",
-          "semantic_dropped", "kept_docs", "kept_tokens", "shards")
+      webManifestRow(s, graft.pipeline.WebCurate.run(pins, pages)._2)
     }, Some(webCurateManifestOracle),
       notes = "crawl-to-shards e2e manifest gate driving pipeline/WebCurate.run: two-level partition identity (pages = urlDup + domainCap + emptyExtract + inner; inner = quality + exact + nearDup + kept) oracled from the generating formulas — q218's class proof, q217∘q222's formula-derivable cleaned text, q31/q35/q66 mirrors, and the exact-Jaccard twin of the LSH near-dup stage (deterministic parity on the ≤40-keeper fixture, verified at 3 SFs)"),
 
@@ -2186,21 +2189,10 @@ object TextQueries {
     // round-trips and the strict None-on-malformed posture. Scale: one
     // WARC file = one parse task (file-level parallelism, the crawl
     // sharding contract); bytes never shuffle.
-    QueryDef("q235_warc_front_door", (s, d) => {
+    QueryDef("q235_warc_front_door", (s, d) => Pins.scope { pins =>
       val dir = graft.IndexCache.ensureWarcFixture(s, d)
-      // manifest-only consumer: release every internal pin on return
-      val (_, m) = graft.pipeline.WebCurate.run(graft.io.WarcIO.readPages(s, dir),
-        retainPin = false)
-      val c = m.curated
-      import s.implicits._
-      Seq((m.pages, m.urlDupDropped, m.domainCapDropped,
-        m.emptyExtractDropped, c.inputDocs, c.qualityDropped,
-        c.exactDupDropped, c.nearDupDropped, c.containmentDropped,
-        c.semanticDropped, c.keptDocs, c.keptTokens, c.shards))
-        .toDF("pages", "url_dup_dropped", "domain_cap_dropped",
-          "empty_extract_dropped", "input_docs", "quality_dropped",
-          "exact_dup_dropped", "near_dup_dropped", "containment_dropped",
-          "semantic_dropped", "kept_docs", "kept_tokens", "shards")
+      webManifestRow(s, graft.pipeline.WebCurate.run(pins,
+        graft.io.WarcIO.readPages(s, dir))._2)
     }, Some(webCurateManifestOracle),
       notes = "raw WARC archive -> record parse -> HTTP entity -> WebCurate.run, hash-gated on q224's manifest oracle verbatim: any reader defect moves a count; file-level parallelism, bytes never shuffle"),
 
@@ -2220,21 +2212,10 @@ object TextQueries {
     // decompression happens inside each file's parse task; COMPRESSED
     // bytes are what the scan reads (the 3-5× I/O saving that makes gz
     // the transport), and neither form ever shuffles.
-    QueryDef("q245_warc_gz_front_door", (s, d) => {
+    QueryDef("q245_warc_gz_front_door", (s, d) => Pins.scope { pins =>
       val dir = graft.IndexCache.ensureWarcGzFixture(s, d)
-      // manifest-only consumer: release every internal pin on return
-      val (_, m) = graft.pipeline.WebCurate.run(graft.io.WarcIO.readPagesGz(s, dir),
-        retainPin = false)
-      val c = m.curated
-      import s.implicits._
-      Seq((m.pages, m.urlDupDropped, m.domainCapDropped,
-        m.emptyExtractDropped, c.inputDocs, c.qualityDropped,
-        c.exactDupDropped, c.nearDupDropped, c.containmentDropped,
-        c.semanticDropped, c.keptDocs, c.keptTokens, c.shards))
-        .toDF("pages", "url_dup_dropped", "domain_cap_dropped",
-          "empty_extract_dropped", "input_docs", "quality_dropped",
-          "exact_dup_dropped", "near_dup_dropped", "containment_dropped",
-          "semantic_dropped", "kept_docs", "kept_tokens", "shards")
+      webManifestRow(s, graft.pipeline.WebCurate.run(pins,
+        graft.io.WarcIO.readPagesGz(s, dir))._2)
     }, Some(webCurateManifestOracle),
       notes = ".warc.gz (gzip-member-per-record, the Common Crawl transport) -> concatenated-member decompress -> record parse -> WebCurate.run, hash-gated on q224's manifest oracle verbatim; decompression in-task, compressed bytes never shuffle"),
 

@@ -113,4 +113,28 @@ class DedupClustersSpec extends SparkSpec {
         s"distributed CC left ${after.size} persisted RDDs: $after")
     } finally spark.conf.set("graft.cc.localEdgeLimit", prev)
   }
+
+  private def nullPairs = {
+    import spark.implicits._
+    Seq((Some(1L), Some(2L)), (Some(2L), None), (Some(3L), Some(4L)))
+      .toDF("doc_a", "doc_b")
+  }
+
+  test("local path rejects null pair ids with a require") {
+    val e = intercept[IllegalArgumentException] {
+      DedupClusters.connectedComponents(nullPairs).collect()
+    }
+    assert(e.getMessage.contains("null doc_a/doc_b"), e.getMessage)
+  }
+
+  test("distributed path rejects null pair ids with a require") {
+    val prev = spark.conf.get("graft.cc.localEdgeLimit", "1000000")
+    spark.conf.set("graft.cc.localEdgeLimit", "0")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        DedupClusters.connectedComponents(nullPairs).collect()
+      }
+      assert(e.getMessage.contains("null doc_a/doc_b"), e.getMessage)
+    } finally spark.conf.set("graft.cc.localEdgeLimit", prev)
+  }
 }

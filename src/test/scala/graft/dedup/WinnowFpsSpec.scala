@@ -66,4 +66,15 @@ class WinnowFpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     assert(asMap(compiledFps(docs)) == asMap(legacyFps(docs)))
   }
+
+  test("a token array holding a null element yields null") {
+    graft.functions.GraftFunctions.register(spark)
+    import spark.implicits._
+    val toks = (1 to 9).map(i => s"t$i").toList
+    val out = Seq(toks, toks.updated(4, null), Seq[String](null)).toDF("tk")
+      .select(expr("graft_winnow_fps(tk)")).collect()
+    assert(!out(0).isNullAt(0) && out(0).getSeq[Long](0).nonEmpty)
+    assert(out(1).isNullAt(0) && out(2).isNullAt(0),
+      "a null token must yield null, not an NPE")
+  }
 }

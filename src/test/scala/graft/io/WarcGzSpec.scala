@@ -2,7 +2,7 @@ package graft.io
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{Pins, SparkSpec}
 
 /** `.warc.gz` transport contracts (VERDICT r11 punch #2): gzip-member-
   * per-record layout pinned byte-exactly, concatenated-member
@@ -161,9 +161,10 @@ class WarcGzSpec extends SparkSpec {
       graft.text.UrlOps.syntheticUrl(col("doc_id")).as("url"),
       graft.text.HtmlExtract.syntheticHtml(col("doc_id"), col("text")).as("html"),
       col("source"))
-    val (_, direct) = graft.pipeline.WebCurate.run(pages)
+    val (_, direct) = Pins.scope(graft.pipeline.WebCurate.run(_, pages))
     val gzDir = graft.IndexCache.ensureWarcGzFixture(spark, sf)
-    val (_, viaGz) = graft.pipeline.WebCurate.run(readPagesGz(spark, gzDir))
+    val (_, viaGz) =
+      Pins.scope(graft.pipeline.WebCurate.run(_, readPagesGz(spark, gzDir)))
     assert(viaGz == direct,
       s".warc.gz routing changed the manifest: $viaGz vs $direct")
   }

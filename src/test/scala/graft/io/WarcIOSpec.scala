@@ -2,7 +2,7 @@ package graft.io
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{Pins, SparkSpec}
 
 /** WARC container contracts: byte-level record round-trips (CRLF-heavy
   * and binary bodies included), strict None-on-malformed parsing, the
@@ -105,9 +105,10 @@ class WarcIOSpec extends SparkSpec {
       graft.text.UrlOps.syntheticUrl(col("doc_id")).as("url"),
       graft.text.HtmlExtract.syntheticHtml(col("doc_id"), col("text")).as("html"),
       col("source"))
-    val (_, direct) = graft.pipeline.WebCurate.run(pages)
+    val (_, direct) = Pins.scope(graft.pipeline.WebCurate.run(_, pages))
     val dir = graft.IndexCache.ensureWarcFixture(spark, sf)
-    val (_, viaWarc) = graft.pipeline.WebCurate.run(readPages(spark, dir))
+    val (_, viaWarc) =
+      Pins.scope(graft.pipeline.WebCurate.run(_, readPages(spark, dir)))
     assert(viaWarc == direct,
       s"WARC routing changed the manifest: $viaWarc vs $direct")
   }

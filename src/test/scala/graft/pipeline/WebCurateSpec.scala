@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Pins, SparkSpec}
 import graft.text.UrlOps
 
 /** [[WebCurate]] — every stage must fire on a handcrafted crawl with an
@@ -30,7 +30,7 @@ class WebCurateSpec extends SparkSpec {
   private def page(text: String) =
     s"<html><head><title>t</title></head><body><p>$text</p></body></html>"
 
-  test("handcrafted crawl: every stage fires, manifest pinned exactly") {
+  test("handcrafted crawl: every stage fires, manifest pinned exactly") { Pins.scope { pins =>
     import spark.implicits._
     val pages = Seq(
       (1L, "https://A.com/x?utm_source=t", page(tA), "crawl"),
@@ -50,7 +50,7 @@ class WebCurateSpec extends SparkSpec {
       (13L, "https://near.org/b", page(tN2), "crawl")) // near-dup of 12
       .toDF("page_id", "url", "html", "source")
 
-    val (curated, m) = WebCurate.run(pages)
+    val (curated, m) = WebCurate.run(pins, pages)
     assert(m.pages == 13L)
     assert(m.urlDupDropped == 1L, m.toString)
     assert(m.domainCapDropped == 2L, m.toString)
@@ -68,9 +68,9 @@ class WebCurateSpec extends SparkSpec {
     val tok = curated.filter(col("doc_id") === 1L)
       .select("n_tokens").head().getLong(0)
     assert(tok == tA.split(" ").length.toLong)
-  }
+  } }
 
-  test("fixture-scale synthesis satisfies the q218 class algebra") {
+  test("fixture-scale synthesis satisfies the q218 class algebra") { Pins.scope { pins =>
     val docs = graft.analytics.Ops
       .t(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id").as("page_id"),
@@ -78,7 +78,7 @@ class WebCurateSpec extends SparkSpec {
         graft.text.HtmlExtract.syntheticHtml(col("doc_id"), col("text"))
           .as("html"),
         col("source"))
-    val (curated, m) = WebCurate.run(docs)
+    val (curated, m) = WebCurate.run(pins, docs)
     // 500 pages over 40 canonical classes → 460 url-dups; the 40
     // survivors land on 40 distinct domains → the cap never fires; every
     // survivor extracts non-empty content
@@ -90,5 +90,5 @@ class WebCurateSpec extends SparkSpec {
     assert(m.curated.keptDocs >= 1L && m.curated.keptTokens > 0L)
     assert(curated.count() == m.curated.keptDocs)
     info(s"fixture-scale web manifest: $m")
-  }
+  } }
 }

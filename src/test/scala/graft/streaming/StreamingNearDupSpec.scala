@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Pins, SparkSpec}
 
 /** Streaming near-dup ingest contract:
   *  - batch⇄stream parity: replaying a corpus through the foreachBatch
@@ -35,9 +35,10 @@ class StreamingNearDupSpec extends SparkSpec {
     spark.read.parquet(path).select("doc_id")
       .collect().map(_.getLong(0)).toSet
 
-  private def twinSet(c: DataFrame): Set[Long] =
-    StreamingDocIngest.nearDupBatchTwin(c)
+  private def twinSet(c: DataFrame): Set[Long] = Pins.scope { pins =>
+    StreamingDocIngest.nearDupBatchTwin(pins, c)
       .select("doc_id").collect().map(_.getLong(0)).toSet
+  }
 
   test("survivor set is micro-batch-boundary invariant and equals the batch twin") {
     val c = corpus()

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Pins, SparkSpec}
 import graft.io.WarcIO
 
 /** The CONTINUOUS form of the q253 flagship composition, wired from the
@@ -75,10 +75,10 @@ class StreamingPretrainSpec extends SparkSpec {
 
     // one-shot twin: batch WebCurate over the full synthesis, then the
     // one-shot pack of the curated corpus in doc_id order
-    val curated1shot =
-      graft.pipeline.WebCurate.run(synthesis(0, 200))._1
-        .select("doc_id", "text")
-    val expected = {
+    val expected = Pins.scope { pins =>
+      val curated1shot =
+        graft.pipeline.WebCurate.run(pins, synthesis(0, 200))._1
+          .select("doc_id", "text")
       val perdoc = graft.text.TextQueries.byteBpeDocTokens(curated1shot, merges)
       graft.operators.GlobalOrder
         .withRunningTotals(perdoc, Seq(col("doc_id")), col("n_tokens"))

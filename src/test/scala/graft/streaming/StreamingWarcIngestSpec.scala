@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Pins, SparkSpec}
 import graft.io.WarcIO
 import graft.pipeline.WebCurate
 
@@ -56,8 +56,10 @@ class StreamingWarcIngestSpec extends SparkSpec {
     val cp = Files.createTempDirectory("graft-swarc-cp").toString
 
     val all = synthesis(0, 200)
-    val expected = WebCurate.run(all)._1
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val expected = Pins.scope { pins =>
+      WebCurate.run(pins, all)._1
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    }
 
     writeWave(synthesis(0, 100), warcDir, "wave1")
     runWave(warcDir, outRoot, cp)

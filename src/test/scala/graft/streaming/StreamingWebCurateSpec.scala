@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Pins, SparkSpec}
 import graft.pipeline.WebCurate
 
 /** [[StreamingWebCurate]] — the continuous crawl front door:
@@ -63,9 +63,10 @@ class StreamingWebCurateSpec extends SparkSpec {
     spark.read.parquet(s"$root/curated").select("doc_id")
       .collect().map(_.getLong(0)).toSet
 
-  private def oneShot(pages: DataFrame): Set[Long] =
-    WebCurate.run(pages)._1.select("doc_id")
+  private def oneShot(pages: DataFrame): Set[Long] = Pins.scope { pins =>
+    WebCurate.run(pins, pages)._1.select("doc_id")
       .collect().map(_.getLong(0)).toSet
+  }
 
   test("survivor set equals WebCurate.run — one batch and split replays") {
     val c = crawl()

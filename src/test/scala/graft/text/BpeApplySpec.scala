@@ -99,4 +99,28 @@ class BpeApplySpec extends SparkSpec {
     assert(w.select(expr(TextQueries.byteBpeEncodeExpr(Nil)))
       .head().getSeq[String](0) == Seq("68", "69"))
   }
+
+  test("graft_bpe_apply yields null for a null symbol or merge pair") {
+    graft.functions.GraftFunctions.register(spark)
+    import spark.implicits._
+    val tk = Seq(Seq("a", "b", "a"), Seq("a", null, "b")).toDF("tk")
+    val out = tk.select(
+      expr("graft_bpe_apply(tk, array('a b'))").as("m"),
+      expr("graft_bpe_apply(tk, array('a b', NULL))").as("nullPair"))
+      .collect()
+    assert(out(0).getSeq[String](0) == Seq("ab", "a"))
+    assert(out(1).isNullAt(0), "a null symbol must yield null")
+    assert(out.forall(_.isNullAt(1)), "a null merge pair must yield null")
+  }
+
+  test("graft_byte_bpe_encode yields null for a null merge pair") {
+    graft.functions.GraftFunctions.register(spark)
+    import spark.implicits._
+    val out = Seq("hi", "he").toDF("word").select(
+      expr("graft_byte_bpe_encode(word, array('68 69'))").as("m"),
+      expr("graft_byte_bpe_encode(word, array('68 69', NULL))").as("nullPair"))
+      .collect()
+    assert(out.map(_.getSeq[String](0)).toSeq == Seq(Seq("6869"), Seq("68", "65")))
+    assert(out.forall(_.isNullAt(1)), "a null merge pair must yield null")
+  }
 }
