@@ -114,7 +114,6 @@ object IndexCache {
     * current; returns the table-name prefix. Same sidecar-stamp
     * freshness as the vector index. */
   def ensureSubstrIndex(spark: SparkSession, sfDir: String): String = synchronized {
-    import org.apache.spark.sql.functions.{col, md5, substring}
     val name = substrIndexName(sfDir)
     val stamp = s"${contentStamp(s"$sfDir/documents.parquet")}:substr2"
     val marker = java.nio.file.Paths.get(
@@ -127,7 +126,7 @@ object IndexCache {
       spark.sql(s"DROP TABLE IF EXISTS ${name}_windows")
       dropStaleLocation(spark, s"${name}_windows")
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(!(substring(md5(col("doc_id").cast("string")), 1, 2) <= "19"))
+        .filter(!graft.dedup.DedupQueries.isDelta)
       graft.dedup.SubstrIndex.build(base, name)
       java.nio.file.Files.createDirectories(marker.getParent)
       java.nio.file.Files.writeString(marker, stamp): Unit
@@ -258,13 +257,13 @@ object IndexCache {
   def setsimRoot(sfDir: String): String =
     new java.io.File(s"target/graft_idx/${key(sfDir)}/setsim").getAbsolutePath
 
-  /** Ensure the set-sim prefix index over the q149 BASE split (md5 doc-id
-    * prefix > "19") exists and is current for `sfDir`; returns the root.
+  /** Ensure the set-sim prefix index over the q149 BASE split (NOT
+    * [[graft.dedup.DedupQueries.isDelta]]) exists and is current for
+    * `sfDir`; returns the root.
     * Build-once: q202 then probes it delta-proportionally — the serving
     * twin of q149's inline form, sharing q149's oracle (the q117/q120
     * precedent). */
   def ensureSetSim(spark: SparkSession, sfDir: String): String = synchronized {
-    import org.apache.spark.sql.functions.{col, md5, substring}
     val root = setsimRoot(sfDir)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
@@ -277,7 +276,7 @@ object IndexCache {
     if (!fresh) {
       val base = graft.dedup.DedupQueries.hashedGramsOf(docs)
         .select("doc_id", "grams_h", "n_grams")
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 2) > "19")
+        .filter(!graft.dedup.DedupQueries.isDelta)
       graft.dedup.SetSimIndex.build(base, root, tau = 0.5)
       java.nio.file.Files.writeString(marker, stamp)
     }

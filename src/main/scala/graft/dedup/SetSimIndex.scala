@@ -1,69 +1,130 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted exact set-similarity PREFIX index — the third persisted
-  * structure beside the BM25 postings ([[graft.text.PostingsIndex]]) and
-  * the IVF vectors ([[graft.similarity.VectorIndex]]), closing r07's
-  * "What's missing #2": q149's delta-vs-base PPJoin re-derived grams and
-  * the base-df prefix ordering inline on every run, so the incremental
-  * exact-dedup SERVING path re-scanned the base corpus per batch. This
-  * operator stores exactly what q149's scaladoc modeled
-  * (`DedupQueries.scala` q149: "what a persisted prefix index would
-  * store"), making the serving cost delta-proportional.
+/** The one exact set-similarity (Jaccard ≥ τ) join, and the persisted
+  * prefix index built from it.
   *
-  * Layout under `root/` (plain parquet, like PostingsIndex):
+  * Three primitives carry every exact Jaccard consumer except q38's brute
+  * reference (`DedupQueries.ngramJaccard`):
+  *  - [[prefixes]]: per doc, the first n − ⌈τ·n⌉ + 1 grams under a
+  *    caller-attached (df asc, g asc) order — rarest first;
+  *  - [[candidates]]: the prefix-equality join with the PPJoin length and
+  *    positional prunes;
+  *  - [[verify]]: the exact Jaccard of candidate pairs.
+  * Callers: q141 (self-join, df from one window over g), q149 (delta vs
+  * base, base-only df from a conditional window), [[build]]/[[append]]/
+  * [[probe]] (q202, the stored gram df), and the LSH paths, which verify
+  * their own candidates (q62, q107, q107b, `StreamingDocIngest`,
+  * `CorpusCurate` via `nearDupBatchTwin`).
+  *
+  * Soundness: prefix filtering is lossless for ANY total gram order,
+  * provided BOTH join sides use the SAME order (Chaudhuri et al.; the
+  * PPJoin papers assume df order only for selectivity) — a pair with
+  * J ≥ τ shares at least ⌈τ·n⌉ grams with either side of size n, so one
+  * of them lies in both prefixes. The prunes cannot drop a true pair:
+  *  - length: J ≥ τ forces τ·max(n_a, n_b) ≤ min(n_a, n_b);
+  *  - positional: no shared gram precedes the FIRST one a true pair
+  *    shares in either prefix, so its overlap is at most
+  *    min(n_a − pos_a, n_b − pos_b), and J ≥ τ needs overlap ≥
+  *    τ/(1+τ)·(n_a + n_b); that row survives and keeps the pair.
+  * The slice and both prunes compare in exact decimal arithmetic: in
+  * doubles the positional bound τ/(1+τ)·(n_a + n_b) can land one ulp
+  * above an integer (0.8/1.8·63 = 28.000000000000004) and drop a pair
+  * whose Jaccard is exactly τ (SetSimJoinSpec's 35/28 and 70/63 pairs).
+  *
+  * Index layout under `root/` (plain parquet, like PostingsIndex):
   *  - `gramdf`    (g, df)                — base gram document frequencies:
   *                                         the index's FROZEN total order
-  *  - `prefixes`  (g, doc_id, pos, n)    — per base doc, the first
-  *                                         n − ⌈τ·n⌉ + 1 grams under
-  *                                         (df asc, g asc) — rarest first
-  *  - `docs`      (doc_id, grams_h, n_grams) — full gram sets for the
-  *                                         exact verify step
+  *  - `prefixes`  (doc_id, n, pos, g)    — [[prefixes]] of each base doc
+  *  - `docs`      (doc_id, grams_h, n_grams) — full gram sets for [[verify]]
   *
-  * ORDER-FREEZE SEMANTICS (the part that makes [[append]] sound): prefix
-  * filtering is lossless for ANY total gram order, provided BOTH join
-  * sides use the SAME order (Chaudhuri et al.; the PPJoin papers assume
-  * df order only for selectivity). The order here is frozen at [[build]]
-  * time: [[append]] ranks new docs' prefixes under the ORIGINAL gramdf
-  * (unseen grams at df 0, gram-value tiebreak — still total), and
-  * [[probe]] ranks the delta the same way — so candidates stay lossless
-  * after any number of appends, only prefix SELECTIVITY decays as the
-  * frozen df drifts from the true df. A periodic [[build]] is the
-  * OPTIMIZE analog that refreshes the order. SetSimIndexSpec pins both:
-  * probe == the q149 inline form row-for-row, and append+probe ==
-  * rebuild+probe as a match-set (postings differ by design, results may
-  * not).
+  * ORDER-FREEZE SEMANTICS (the part that makes [[append]] sound): the
+  * order is frozen at [[build]] time. [[append]] ranks new docs' prefixes
+  * under the ORIGINAL gramdf (unseen grams at df 0, gram-value tiebreak —
+  * still total), and [[probe]] ranks the delta the same way — so
+  * candidates stay lossless after any number of appends; only prefix
+  * SELECTIVITY decays as the frozen df drifts from the true df. A
+  * periodic [[build]] is the OPTIMIZE analog that refreshes the order.
+  * SetSimIndexSpec pins both: probe == q149 row-for-row, and append+probe
+  * == rebuild+probe as a match set (postings differ by design, results
+  * may not).
   *
   * Scale shape: [[probe]] touches the delta (narrow gram hashing), one
   * broadcast-or-shuffle join of delta prefixes against the gram-keyed
-  * base `prefixes` parquet (pushed-filter scan on g is possible when the
-  * delta's gram set is small), and a verify join against `docs` keyed by
+  * base `prefixes` parquet, and a verify join against `docs` keyed by
   * the candidate doc ids — base never self-joins, never re-scans text.
   */
 object SetSimIndex {
 
-  /** Prefix length for a set of size n at threshold `tau`:
-    * n − ⌈τ·n⌉ + 1 (0 for empty sets). */
-  private def prefixLenExpr(n: String, tau: Double): String =
-    s"greatest(cast($n - ceil($tau * $n) + 1 as int), 0)"
+  private def exact(tau: Double): java.math.BigDecimal =
+    new java.math.BigDecimal(java.lang.Double.toString(tau))
 
-  /** Rank each doc's grams by the given (g, df) order and keep the
-    * prefix: (doc_id, n, pos, g) with pos 0-based in rarest-first order.
-    * `grams` must expose (doc_id, grams_h, n_grams). */
-  private def prefixesUnder(grams: DataFrame, gramdf: DataFrame,
-      tau: Double): DataFrame = {
-    val ex = grams.select(col("doc_id"), explode(col("grams_h")).as("g"))
-    ex.join(gramdf, Seq("g"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .groupBy("doc_id")
+  /** Prefix postings (keys…, n, pos, g) of (doc_id, g, df) rows — one row
+    * per distinct gram of a doc, with df the caller's order key. Any
+    * further column is a per-doc attribute carried through as a key
+    * (q149's `is_delta`). pos is 0-based in (df asc, g asc) order. */
+  def prefixes(rows: DataFrame, tau: Double): DataFrame = {
+    val keys = rows.columns.filterNot(Set("g", "df")).toSeq.map(col)
+    rows.groupBy(keys: _*)
       .agg(sort_array(collect_list(struct(col("df"), col("g")))).as("ord"))
-      .select(col("doc_id"), size(col("ord")).as("n"),
-        posexplode(expr("transform(slice(ord, 1, " +
-          prefixLenExpr("size(ord)", tau) + "), x -> x.g)"))
-          .as(Seq("pos", "g")))
+      .select(keys ++ Seq(size(col("ord")).as("n"),
+        posexplode(expr("transform(slice(ord, 1, greatest(cast(size(ord) - " +
+          s"ceil(${exact(tau).toPlainString}BD * size(ord)) + 1 as int), 0)), " +
+          "x -> x.g)")).as(Seq("pos", "g"))): _*)
   }
+
+  /** Candidate pairs (doc_a from `a`, doc_b from `b`) of two [[prefixes]]
+    * frames ranked under the same order: one row per surviving shared
+    * prefix gram, so callers `distinct()` the pairs. `side` is an extra
+    * join condition over the `a`/`b` aliases (the self-join's
+    * `a.doc_id < b.doc_id`). */
+  def candidates(a: DataFrame, b: DataFrame, tau: Double,
+      side: Column = lit(true)): DataFrame = {
+    val t = lit(exact(tau))
+    a.as("a").join(b.as("b"),
+        col("a.g") === col("b.g") && side &&
+          col("b.n") >= t * col("a.n") && col("a.n") >= t * col("b.n") &&
+          least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) *
+            (lit(1) + t) >= t * (col("a.n") + col("b.n")))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+  }
+
+  /** Exact Jaccard of candidate `pairs` (doc_a, doc_b): (doc_a, doc_b,
+    * jaccard) for jaccard ≥ τ, with doc_a's gram set from `docsA` and
+    * doc_b's from `docsB`, both (doc_id, grams_h, n_grams) with sorted
+    * hashed grams. O(candidates), never O(n²). */
+  def verify(pairs: DataFrame, docsA: DataFrame, docsB: DataFrame,
+      tau: Double): DataFrame = {
+    graft.functions.GraftFunctions.register(pairs.sparkSession)
+    val union = col("na") + col("nb") - col("n_inter")
+    pairs
+      .join(docsA.select(col("doc_id").as("doc_a"), col("grams_h").as("ga"),
+        col("n_grams").as("na")), Seq("doc_a"))
+      .join(docsB.select(col("doc_id").as("doc_b"), col("grams_h").as("gb"),
+        col("n_grams").as("nb")), Seq("doc_b"))
+      .withColumn("n_inter", expr("graft_intersect_card(ga, gb)"))
+      // TOTAL division: Catalyst may push a downstream jaccard filter
+      // into the join condition, where conjunct order is undefined and
+      // an ANSI 0/0 would abort the job before any guard runs
+      .withColumn("jaccard", when(union > 0,
+        col("n_inter").cast("double") / union).otherwise(lit(0.0)))
+      .filter(col("jaccard") >= tau)
+      .select("doc_a", "doc_b", "jaccard")
+  }
+
+  /** [[verify]] with both sides' gram sets in one frame. */
+  def verify(pairs: DataFrame, docs: DataFrame, tau: Double): DataFrame =
+    verify(pairs, docs, docs, tau)
+
+  /** [[prefixes]] of `grams` (doc_id, grams_h, n_grams) under a stored
+    * (g, df) order; grams it has not seen rank at df 0. */
+  private def prefixesUnder(grams: DataFrame, gramdf: DataFrame,
+      tau: Double): DataFrame =
+    prefixes(grams.select(col("doc_id"), explode(col("grams_h")).as("g"))
+      .join(gramdf, Seq("g"), "left")
+      .withColumn("df", coalesce(col("df"), lit(0L))), tau)
 
   /** Build (or rebuild — refreshing the frozen order) from the base
     * corpus. `base` must expose (doc_id, grams_h, n_grams). */
@@ -83,8 +144,8 @@ object SetSimIndex {
   /** Absorb a delta into the index under the FROZEN build-time order:
     * delta prefixes rank by the stored gramdf (unseen grams at df 0) and
     * APPEND to `prefixes`/`docs`; gramdf itself is immutable until the
-    * next [[build]] (see order-freeze note above). Cost is
-    * delta-proportional: the base postings are never rewritten. */
+    * next [[build]]. Cost is delta-proportional: the base postings are
+    * never rewritten. */
   def append(spark: SparkSession, root: String, delta: DataFrame,
       tau: Double = 0.5): Unit = {
     val gramdf = spark.read.parquet(s"$root/gramdf")
@@ -98,34 +159,13 @@ object SetSimIndex {
     * (doc_a = indexed, doc_b = delta, jaccard), exactly q149's output
     * shape. The indexed side comes wholly from the stored prefix
     * postings + gram sets; the delta side is ranked under the same
-    * frozen order, so the PPJoin length/positional prunes stay lossless. */
+    * frozen order. */
   def probe(spark: SparkSession, root: String, delta: DataFrame,
       tau: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val gramdf = spark.read.parquet(s"$root/gramdf")
-    val basePre = spark.read.parquet(s"$root/prefixes")
-    val baseDocs = spark.read.parquet(s"$root/docs")
-    val deltaPre = prefixesUnder(delta, gramdf, tau)
-    val minOv = lit(tau / (1 + tau)) *
-      (col("a.n") + col("b.n")).cast("double")
-    val cand = basePre.as("a")
-      .join(deltaPre.as("b"),
-        col("a.g") === col("b.g") &&
-          col("b.n").cast("double") >= lit(tau) * col("a.n") &&
-          col("a.n").cast("double") >= lit(tau) * col("b.n") &&
-          (lit(1) + least(col("a.n") - col("a.pos") - 1,
-            col("b.n") - col("b.pos") - 1)).cast("double") >= minOv)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    cand
-      .join(baseDocs.select(col("doc_id").as("doc_a"),
-        col("grams_h").as("ga"), col("n_grams").as("na")), Seq("doc_a"))
-      .join(delta.select(col("doc_id").as("doc_b"),
-        col("grams_h").as("gb"), col("n_grams").as("nb")), Seq("doc_b"))
-      .withColumn("n_inter", expr("graft_intersect_card(ga, gb)").cast("long"))
-      .withColumn("j0", col("n_inter").cast("double") /
-        (col("na") + col("nb") - col("n_inter")))
-      .filter(col("j0") >= tau)
-      .select(col("doc_a"), col("doc_b"), round(col("j0"), 6).as("jaccard"))
+    val cand = candidates(spark.read.parquet(s"$root/prefixes"),
+      prefixesUnder(delta, gramdf, tau), tau).distinct()
+    verify(cand, spark.read.parquet(s"$root/docs"), delta, tau)
+      .withColumn("jaccard", round(col("jaccard"), 6))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Pins
+import graft.dedup.SetSimIndex
 import graft.text.TextSignals
 
 /** Streaming document ingestion for the training-data pipeline: the
@@ -142,7 +143,7 @@ object StreamingDocIngest {
     // between mkdir and first part-file commit) reads as empty, no wedge
     val base = LedgerIO.readOrEmpty(spark, sigPath, sigRows.schema)
 
-    val innerDrops = DedupQueries.verifyJaccard(
+    val innerDrops = SetSimIndex.verify(
       DedupQueries.lshCandidatePairs(sigs), grams, minJ).select("doc_b")
     // base docs arrived earlier by construction: base is always the witness
     val crossPairs = DedupQueries.bandsOf(base)
@@ -152,7 +153,7 @@ object StreamingDocIngest {
       .select("doc_a", "doc_b").distinct()
     val gramsAll = grams.select("doc_id", "grams_h", "n_grams")
       .unionByName(base.select("doc_id", "grams_h", "n_grams"))
-    val crossDrops = DedupQueries.verifyJaccard(crossPairs, gramsAll, minJ)
+    val crossDrops = SetSimIndex.verify(crossPairs, gramsAll, minJ)
       .select("doc_b")
 
     val dropped = innerDrops.unionByName(crossDrops).distinct()
@@ -230,12 +231,12 @@ object StreamingDocIngest {
     val d = docs.select("doc_id", "text")
     // PIN the signature and gram frames (batch-only API — callers are
     // CorpusCurate and specs): the band self-join inside
-    // lshCandidatePairs consumes the signatures twice and verifyJaccard
+    // lshCandidatePairs consumes the signatures twice and the verify
     // consumes the gram sets twice; unpinned, each side replayed the
     // full shingle pass over `docs`' lineage.
     val sigs = pins.persist(DedupQueries.signaturesOf(d))
     val grams = pins.persist(DedupQueries.hashedGramsOf(d))
-    val dropped = DedupQueries.verifyJaccard(
+    val dropped = SetSimIndex.verify(
       DedupQueries.lshCandidatePairs(sigs), grams, minJ)
       .select(col("doc_b").as("doc_id")).distinct()
     docs.join(dropped, Seq("doc_id"), "left_anti")

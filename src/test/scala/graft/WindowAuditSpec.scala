@@ -18,8 +18,11 @@ package graft
 class WindowAuditSpec extends SparkSpec {
 
   test("every unpartitioned window in the catalog sits over a bounded frame") {
-    val sites = WindowAudit.audit(spark, "/root/testdata/sf0.001",
-      SparkEntry.queries.keys.toSeq.sorted)
+    val WindowAudit.Report(sites, failures) = WindowAudit.audit(spark,
+      "/root/testdata/sf0.001", SparkEntry.queries.keys.toSeq.sorted)
+    // a query whose plan cannot be built has unknown sites: it fails the
+    // gate rather than passing it silently
+    assert(failures.isEmpty, s"queries failed to plan: $failures")
     val unbounded = sites.filterNot(_.bounded)
     assert(unbounded.isEmpty,
       s"unpartitioned windows over UNBOUNDED frames: $unbounded")

@@ -27,7 +27,7 @@ class LshCanonicalSpec extends SparkSpec {
 
   private def docs = graft.analytics.Ops.t(spark, sf, "documents")
 
-  private def lshEdges = DedupQueries.verifyJaccard(
+  private def lshEdges = SetSimIndex.verify(
     DedupQueries.lshCandidatePairs(DedupQueries.signaturesOf(docs)),
     DedupQueries.hashedGramsOf(docs), 0.6)
 
@@ -36,7 +36,7 @@ class LshCanonicalSpec extends SparkSpec {
     val allPairs = ids.select(col("doc_id").as("doc_a"))
       .crossJoin(ids.select(col("doc_id").as("doc_b")))
       .filter(col("doc_a") < col("doc_b"))
-    DedupQueries.verifyJaccard(allPairs, DedupQueries.hashedGramsOf(docs), 0.6)
+    SetSimIndex.verify(allPairs, DedupQueries.hashedGramsOf(docs), 0.6)
   }
 
   private def edgeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

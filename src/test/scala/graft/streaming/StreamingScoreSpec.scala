@@ -130,8 +130,8 @@ class StreamingScoreSpec extends SparkSpec {
       rows.grouped(200).foreach { chunk =>
         input.addData(chunk.toSeq); q.processAllAvailable()
       }
-      // listener events are delivered asynchronously after progress
-      spark.streams.removeListener(listener)
+      // listener events are delivered asynchronously after progress, so
+      // the listener stays registered (until finally) while they drain
       val deadline = System.currentTimeMillis() + 30000
       while (seen.map(_._1).sum < rows.length &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
