@@ -46,7 +46,7 @@ object ExplainAudit {
                 else SparkEntry.queries.keys.toSeq.sorted
     // Dev-only (same contract as Bench/ScalingBench): SPARK_GRAFT_CONF
     // injects "k=v;k=v" session confs so conf-keyed paths can be
-    // plan-audited in both states (e.g. graft.cc.localEdgeLimit=0).
+    // plan-audited in both states (e.g. spark.graft.substr.hotWindowCap=64).
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).filter(_.nonEmpty)
       .map(_.split("=", 2)).collect { case Array(k, v) => (k.trim, v.trim) }

@@ -27,7 +27,7 @@ object IndexCache {
     * indexes are retired without scanning a byte of data — the posture
     * that stays O(files) at 100 TB (a row-count marker alone let a
     * same-count content change serve stale pairs to spec/ungated callers). */
-  private def contentStamp(path: String): Long = {
+  private[graft] def contentStamp(path: String): Long = {
     def walk(f: java.io.File): Iterator[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).iterator.flatMap(_.iterator.flatMap(walk))
@@ -63,45 +63,21 @@ object IndexCache {
     val pRoot = postingsRoot(sfDir)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
-    val pStamp = s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}"
-    val marker = java.nio.file.Paths.get(pRoot, "_GRAFT_N_DOCS")
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == pStamp)
-        .getOrElse(false)
-    if (!fresh) {
+    buildOnce(spark, pRoot, "_GRAFT_N_DOCS",
+        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}") {
       graft.text.PostingsIndex.build(docs, pRoot)
-      java.nio.file.Files.writeString(marker, pStamp)
     }
     val vName = vectorIndexName(sfDir)
-    // Same content-fingerprint freshness as the file-backed indexes: the
-    // cells/centroids tables live in the session catalog, so a sidecar
-    // marker under this cache's namespace carries the stamp — existence
-    // alone let a same-session embeddings rewrite serve stale cells to
-    // q105/q114/q168/q207.
-    val vStamp = contentStamp(s"$sfDir/embeddings.parquet").toString
-    val vMarker = java.nio.file.Paths.get(
-      s"target/graft_idx/${key(sfDir)}", "_GRAFT_VEC_STAMP")
-    val vFresh = java.nio.file.Files.isRegularFile(vMarker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(vMarker).trim == vStamp)
-        .getOrElse(false)
-    if (!vFresh || !spark.catalog.tableExists(s"${vName}_centroids") ||
-        !spark.catalog.tableExists(s"${vName}_cells")) {
-      // A previous JVM may have left the managed-table DIRECTORIES in the
-      // shared warehouse while this session's in-memory catalog has no
-      // entry — saveAsTable would then fail with locationAlreadyExists.
-      // These locations are owned by this cache (derived names), so a
-      // stale orphan is safe to clear before rebuilding.
-      Seq(s"${vName}_centroids", s"${vName}_cells").foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        dropStaleLocation(spark, t)
-      }
+    // The cells/centroids tables live in the session catalog, so a
+    // sidecar marker under this cache's namespace carries the stamp —
+    // existence alone let a same-session embeddings rewrite serve stale
+    // cells to q105/q114/q168/q207.
+    buildOnce(spark, cacheDir(sfDir), "_GRAFT_VEC_STAMP",
+        contentStamp(s"$sfDir/embeddings.parquet").toString,
+        Seq(s"${vName}_centroids", s"${vName}_cells")) {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select("vec_id", "embedding")
       graft.similarity.VectorIndex.build(emb, vName)
-      java.nio.file.Files.createDirectories(vMarker.getParent)
-      java.nio.file.Files.writeString(vMarker, vStamp): Unit
     }
     (pRoot, vName)
   }
@@ -115,21 +91,12 @@ object IndexCache {
     * freshness as the vector index. */
   def ensureSubstrIndex(spark: SparkSession, sfDir: String): String = synchronized {
     val name = substrIndexName(sfDir)
-    val stamp = s"${contentStamp(s"$sfDir/documents.parquet")}:substr2"
-    val marker = java.nio.file.Paths.get(
-      s"target/graft_idx/${key(sfDir)}", "_GRAFT_SUBSTR_STAMP")
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh || !spark.catalog.tableExists(s"${name}_windows")) {
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_windows")
-      dropStaleLocation(spark, s"${name}_windows")
+    buildOnce(spark, cacheDir(sfDir), "_GRAFT_SUBSTR_STAMP",
+        s"${contentStamp(s"$sfDir/documents.parquet")}:substr2",
+        Seq(s"${name}_windows")) {
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(!graft.dedup.DedupQueries.isDelta)
       graft.dedup.SubstrIndex.build(base, name)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.writeString(marker, stamp): Unit
     }
     name
   }
@@ -160,24 +127,12 @@ object IndexCache {
     * content-fingerprint freshness discipline as the IVF index. */
   def ensurePq(spark: SparkSession, sfDir: String): String = synchronized {
     val name = pqIndexName(sfDir)
-    val stamp = contentStamp(s"$sfDir/embeddings.parquet").toString
-    val marker = java.nio.file.Paths.get(
-      s"target/graft_idx/${key(sfDir)}", "_GRAFT_PQ_STAMP")
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh || !spark.catalog.tableExists(s"${name}_codebook") ||
-        !spark.catalog.tableExists(s"${name}_codes")) {
-      Seq(s"${name}_codebook", s"${name}_codes").foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        dropStaleLocation(spark, t)
-      }
+    buildOnce(spark, cacheDir(sfDir), "_GRAFT_PQ_STAMP",
+        contentStamp(s"$sfDir/embeddings.parquet").toString,
+        Seq(s"${name}_codebook", s"${name}_codes")) {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select("vec_id", "embedding")
       graft.similarity.PqIndex.build(emb, name)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.writeString(marker, stamp): Unit
     }
     name
   }
@@ -201,20 +156,14 @@ object IndexCache {
     val root = zlayoutRoot(sfDir)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val nRows = li.count()
-    val zStamp = s"$nRows:${contentStamp(s"$sfDir/lineitem.parquet")}"
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_N_ROWS")
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == zStamp)
-        .getOrElse(false)
-    if (!fresh) {
+    buildOnce(spark, root, "_GRAFT_N_ROWS",
+        s"$nRows:${contentStamp(s"$sfDir/lineitem.parquet")}") {
       graft.operators.ZOrderLayout.write(li,
         org.apache.spark.sql.functions.col("l_partkey"),
         org.apache.spark.sql.functions.col("l_suppkey"),
         root, numFiles = 16)
       graft.operators.SkippingIndex.buildManifest(spark, root,
         Seq("l_partkey", "l_suppkey"))
-      java.nio.file.Files.writeString(marker, zStamp)
     }
     root
   }
@@ -238,16 +187,10 @@ object IndexCache {
     val root = dedupPairsRoot(sfDir)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_N_DOCS")
-    val stamp = s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:pairs1"
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh) {
+    buildOnce(spark, root, "_GRAFT_N_DOCS",
+        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:pairs1") {
       graft.dedup.DedupQueries.dedupMethodPairs(spark, sfDir)
         .coalesce(4).write.mode("overwrite").parquet(s"$root/pairs")
-      java.nio.file.Files.writeString(marker, stamp)
     }
     s"$root/pairs"
   }
@@ -267,18 +210,12 @@ object IndexCache {
     val root = setsimRoot(sfDir)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_N_DOCS")
-    val stamp = s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:setsim1"
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh) {
+    buildOnce(spark, root, "_GRAFT_N_DOCS",
+        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:setsim1") {
       val base = graft.dedup.DedupQueries.hashedGramsOf(docs)
         .select("doc_id", "grams_h", "n_grams")
         .filter(!graft.dedup.DedupQueries.isDelta)
       graft.dedup.SetSimIndex.build(base, root, tau = 0.5)
-      java.nio.file.Files.writeString(marker, stamp)
     }
     root
   }
@@ -299,16 +236,10 @@ object IndexCache {
     val root = jpegCorpusRoot(sfDir)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_N_DOCS")
-    val stamp = s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:jpeg1"
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh) {
+    buildOnce(spark, root, "_GRAFT_N_DOCS",
+        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:jpeg1") {
       graft.multimodal.Multimodal.jpegFromDocuments(spark, sfDir)
         .write.mode("overwrite").parquet(s"$root/media")
-      java.nio.file.Files.writeString(marker, stamp)
     }
     s"$root/media"
   }
@@ -322,29 +253,10 @@ object IndexCache {
     * ([[graft.io.WarcIO.writePages]]), stamped against the documents
     * corpus like the JPEG fixture — so q235 times the READ+parse path a
     * crawl ingest pays, not the fixture serialization. */
-  def ensureWarcFixture(spark: SparkSession, sfDir: String): String = synchronized {
-    val root = warcFixtureRoot(sfDir)
-    val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_STAMP")
-    val stamp = s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:warc1"
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh) {
-      import org.apache.spark.sql.functions.col
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val pages = docs.select(
-        col("doc_id").as("page_id"),
-        graft.text.UrlOps.syntheticUrl(col("doc_id")).as("url"),
-        graft.text.HtmlExtract.syntheticHtml(col("doc_id"), col("text"))
-          .as("html"),
-        col("source"))
-      graft.io.WarcIO.writePages(pages, root)
-      java.nio.file.Files.writeString(marker, stamp)
+  def ensureWarcFixture(spark: SparkSession, sfDir: String): String =
+    synchronized {
+      warcFixture(spark, sfDir, warcFixtureRoot(sfDir), "warc1", gzip = false)
     }
-    root
-  }
 
   /** Root for the persisted `.warc.gz` fixture (q245's compressed-archive
     * input — the Common Crawl transport form of [[warcFixtureRoot]]). */
@@ -357,28 +269,55 @@ object IndexCache {
     * [[graft.io.WarcIO.writePages]] with gzip-member-per-record transport
     * — so q245 times decompress+parse, the cost a real Common Crawl
     * ingest pays per file. */
-  def ensureWarcGzFixture(spark: SparkSession, sfDir: String): String = synchronized {
-    val root = warcGzFixtureRoot(sfDir)
-    val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_STAMP")
-    val stamp = s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:warcgz1"
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh) {
+  def ensureWarcGzFixture(spark: SparkSession, sfDir: String): String =
+    synchronized {
+      warcFixture(spark, sfDir, warcGzFixtureRoot(sfDir), "warcgz1",
+        gzip = true)
+    }
+
+  private def warcFixture(spark: SparkSession, sfDir: String, root: String,
+      version: String, gzip: Boolean): String = {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    buildOnce(spark, root, "_GRAFT_STAMP",
+        s"${docs.count()}:${contentStamp(s"$sfDir/documents.parquet")}:$version") {
       import org.apache.spark.sql.functions.col
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val pages = docs.select(
         col("doc_id").as("page_id"),
         graft.text.UrlOps.syntheticUrl(col("doc_id")).as("url"),
         graft.text.HtmlExtract.syntheticHtml(col("doc_id"), col("text"))
           .as("html"),
         col("source"))
-      graft.io.WarcIO.writePages(pages, root, gzip = true)
-      java.nio.file.Files.writeString(marker, stamp)
+      graft.io.WarcIO.writePages(pages, root, gzip = gzip)
     }
     root
+  }
+
+  private def cacheDir(sfDir: String): String = s"target/graft_idx/${key(sfDir)}"
+
+  /** The build-once protocol every cached artifact shares: run `build`
+    * unless `dir/marker` holds `stamp` and every catalog table in
+    * `tables` exists, then write `stamp` there. Before the build, each
+    * of `tables` is dropped and its warehouse directory cleared: a
+    * previous JVM may have left a managed-table directory while this
+    * session's in-memory catalog has no entry, and saveAsTable would
+    * then fail with locationAlreadyExists (the names are derived, so the
+    * locations are this cache's own). */
+  private[graft] def buildOnce(spark: SparkSession, dir: String,
+      marker: String, stamp: String, tables: Seq[String] = Nil)(
+      build: => Unit): Unit = {
+    val path = java.nio.file.Paths.get(dir, marker)
+    val fresh = java.nio.file.Files.isRegularFile(path) &&
+      scala.util.Try(java.nio.file.Files.readString(path).trim == stamp)
+        .getOrElse(false) && tables.forall(spark.catalog.tableExists)
+    if (!fresh) {
+      tables.foreach { t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        dropStaleLocation(spark, t)
+      }
+      build
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.writeString(path, stamp): Unit
+    }
   }
 
   /** Delete a managed-table directory orphaned by a dead session (the

@@ -5,12 +5,13 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The one release mechanism for pins (frames a call reads more than
   * once): `Pins.scope { pins => … }` hands the body a scope whose
-  * [[persist]] and [[checkpoint]] record what they pin, and releases all
-  * of it (`blocking = false`) when the body exits, normally or by
-  * exception.
+  * [[persist]], [[persistRows]] and [[checkpoint]] record what they pin,
+  * and releases all of it (`blocking = false`) when the body exits,
+  * normally or by exception.
   *
   * Contract: no frame that reads a scoped pin is used after its scope
   * exits. A caller that keeps consuming a returned frame opens the scope
@@ -31,11 +32,22 @@ final class Pins private () {
     df.persist()
   }
 
+  /** Partition-granular `persist`: a frame over a cached copy of `df`'s
+    * rows, each partition cached when an action first computes it. A
+    * partial action (`head`) fills only what it read and runs no job of
+    * its own; a [[persist]]ed frame is materialized whole, in one extra
+    * job, before AQE reads it. */
+  def persistRows(df: DataFrame): DataFrame = {
+    val rows = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    rdds += rows
+    df.sparkSession.createDataFrame(rows, df.schema)
+  }
+
   /** Eager `localCheckpoint(true)`; the checkpointed RDD is read off the
     * returned plan's `LogicalRDD` so its blocks release with the scope. */
   def checkpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
-    rdds ++= cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+    rdds ++= Pins.checkpointRdds(cp)
     cp
   }
 
@@ -46,6 +58,10 @@ final class Pins private () {
 }
 
 object Pins {
+  /** The checkpointed RDDs a frame reads: its plan's `LogicalRDD` leaves. */
+  private[graft] def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+
   def scope[A](body: Pins => A): A = {
     val pins = new Pins
     try body(pins) finally pins.release()

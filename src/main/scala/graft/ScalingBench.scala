@@ -37,7 +37,7 @@ object ScalingBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Dev-only (same contract as Bench): SPARK_GRAFT_CONF injects "k=v;k=v"
     // session confs — A/B adjudication of conf-keyed paths (e.g.
-    // graft.cc.localEdgeLimit=0 re-measures the distributed CC loop).
+    // spark.graft.substr.hotWindowCap=64 re-measures the capped q249).
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).filter(_.nonEmpty)
       .map(_.split("=", 2)).collect { case Array(k, v) => (k.trim, v.trim) }

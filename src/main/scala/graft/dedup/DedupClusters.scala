@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,74 +10,62 @@ import graft.Pins
   * output) into CLUSTERS via connected components — the step that decides
   * which documents actually get dropped in a dedup pipeline.
   *
-  * Two execution paths, selected by a declared size bound (r15):
+  * The pair source is pinned once (`pairs.select(doc_a, doc_b)`, scoped
+  * to the call), so the upstream pair pipeline (e.g. q38's all-pairs
+  * verify) runs once whichever path answers. Two paths, selected by the
+  * constant bound [[LocalEdgeLimit]]:
   *
   *  - LOCAL UNION-FIND for bounded edge sets: dedup pair sets are tiny
-  *    relative to their corpus (pairs ∝ near-duplicates, not documents),
-  *    so the common case is thousands-to-millions of edges feeding an
-  *    iterative loop whose per-iteration cost is pure fixed job overhead
-  *    (~0.2-0.4 s × diameter+1 iterations × 2-3 jobs of scheduling on
-  *    label frames of a few KB). The driver takes at most
-  *    `graft.cc.localEdgeLimit`+1 pair rows (`head`, an incremental
-  *    executeTake — ONE bounded action, no shuffle of its own) and, when
-  *    the set fits, resolves components with path-compressed union-find
-  *    and returns a LocalRelation: zero shuffles, zero iterations, zero
-  *    cache pins, and downstream consumers see a broadcastable relation.
-  *    guide §1.2/§2.4: the cheapest shuffle is the one that never runs.
+  *    relative to their corpus (pairs ∝ near-duplicates, not documents).
+  *    The driver takes at most `LocalEdgeLimit`+1 pair rows (`head`, one
+  *    bounded action) and, when the set fits, resolves components with
+  *    path-compressed union-find and returns a LocalRelation: zero
+  *    shuffles, zero iterations, and downstream consumers see a
+  *    broadcastable relation.
   *
-  *  - ITERATIVE MIN-LABEL PROPAGATION above the bound (or for non-integral
-  *    id types): one shuffle join + one hash-agg per iteration, driver
-  *    only orchestrates and checks an O(1) convergence bit — the 100 TB
-  *    shape, unchanged from r14.
-  *
-  * The bound is a conf knob, not a constant tuned to the bench:
-  * `graft.cc.localEdgeLimit` (default 1,000,000 pair rows ≈ 100 MB of
-  * driver rows, comfortably under the 1 GB maxResultSize default). Set 0
-  * to force the distributed loop (specs exercise both paths). At 100 TB
-  * an over-the-bound edge set falls through automatically after one
-  * bounded take.
-  *
-  * Scale notes (distributed path): `localCheckpoint` truncates the
-  * growing lineage every 8 generations (on a cluster, prefer `checkpoint`
-  * to HDFS for fault tolerance); for adversarial high-diameter graphs
-  * swap in star contraction / alternating large-small — the API stays
-  * the same.
+  *  - MIN-LABEL PROPAGATION above the bound (or for non-integral id
+  *    types): one shuffle join + one hash-agg per generation. Each label
+  *    generation is an eager `localCheckpoint`, so it enters the next
+  *    plan as a leaf and the plan is the same size every iteration; the
+  *    changed-row and null-id counts ride that checkpoint job through
+  *    `observe`. A superseded generation is released as soon as its
+  *    successor is materialized (at most two are held); only the final
+  *    one outlives the call. The loop runs until no label changes, which
+  *    always happens: a label only ever decreases and takes values in the
+  *    finite set of ids, so after at most (component diameter + 1)
+  *    generations none changes. On a cluster, swap `localCheckpoint` for
+  *    `checkpoint` to reliable storage for fault tolerance.
   */
 object DedupClusters {
 
   private val NullIds = "connectedComponents: pairs hold a null doc_a/doc_b"
 
+  /** Pair rows the driver resolves locally: ≈100 MB of driver rows,
+    * under the 1 GB `spark.driver.maxResultSize` default. */
+  val LocalEdgeLimit = 1000000
+
   /** pairs(doc_a, doc_b) → (doc_id, cluster_id = min doc_id reachable).
     * Only documents that appear in some pair are emitted (singletons need
-    * no resolution).
-    *
-    * `maxIter` is a safety bound on the distributed loop, not a tuning
-    * knob: iterations needed = component diameter, and the default 64
-    * covers even a 64-edit incremental-revision chain (real near-dup
-    * clusters are diameter 1–3). Hitting the bound FAILS LOUDLY (require)
-    * rather than silently emitting half-merged clusters — wrong dedup
-    * output deletes the wrong documents. The local path is exact at any
-    * diameter. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 64): DataFrame = {
-    val spark = pairs.sparkSession
-    val dt = pairs.schema("doc_a").dataType
-    val localLimit = spark.conf
-      .get("graft.cc.localEdgeLimit", "1000000").toInt
-    val integral = dt match {
-      case LongType | IntegerType => true
-      case _ => false
+    * no resolution). Both paths are exact at any diameter. */
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs, LocalEdgeLimit)
+
+  /** [[connectedComponents]] with the local bound as a parameter, so
+    * specs reach both paths (0 forces the distributed loop). */
+  private[dedup] def connectedComponents(pairs: DataFrame, localLimit: Int)
+      : DataFrame = Pins.scope { pins =>
+    val src = pins.persistRows(pairs.select(col("doc_a"), col("doc_b")))
+    val dt = src.schema("doc_a").dataType
+    val taken = dt match {
+      // limit+1 rows, so an over-the-bound set is detected, never
+      // silently truncated; union-find absorbs duplicate edges
+      case LongType | IntegerType => Some(src.head(localLimit + 1))
+      case _ => None
     }
-    if (integral && localLimit > 0) {
-      // ONE bounded action over the raw pair pipeline: no explode, no
-      // distinct (union-find absorbs duplicate edges), limit+1 rows so
-      // over-the-bound sets are detected, never silently truncated.
-      val taken = pairs.select(col("doc_a"), col("doc_b"))
-        .head(localLimit + 1)
-      if (taken.length <= localLimit)
-        return localComponents(spark, taken, dt)
-      // over the bound: fall through to the scale path
+    taken.filter(_.length <= localLimit) match {
+      case Some(rows) => localComponents(pairs.sparkSession, rows, dt)
+      case None => distributedComponents(pins, src)
     }
-    distributedComponents(pairs, maxIter)
   }
 
   /** Path-compressed union-find with union-by-min: the root of every set
@@ -125,80 +113,48 @@ object DedupClusters {
       StructField("cluster_id", dt, nullable = true))))
   }
 
-  /** The 100 TB shape: iterative min-label propagation, one job and one
-    * shuffle per iteration (the changed-flag count both materializes the
-    * persisted next-generation labels and answers convergence). */
-  private def distributedComponents(pairs: DataFrame, maxIter: Int)
-      : DataFrame = Pins.scope { pins =>
-    // ONE scan of the (possibly expensive) pair pipeline: explode each
-    // pair into both directions instead of a union of two projections —
-    // the union form computed the whole upstream (e.g. q38's all-pairs
-    // verify) twice, once per branch. Reused every iteration.
+  /** Iterative min-label propagation over the pinned pair source, one
+    * checkpointed generation per iteration. */
+  private def distributedComponents(pins: Pins, pairs: DataFrame)
+      : DataFrame = {
+    // Both directions plus a self-loop per endpoint, from one scan of the
+    // pair source; read every iteration. The self-loop carries a node's
+    // own label into its min, so one join + one agg is a whole step.
+    val a = col("doc_a")
+    val b = col("doc_b")
     val edges = pins.persist(pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+        struct(a.as("src"), b.as("dst")), struct(b.as("src"), a.as("dst")),
+        struct(a.as("src"), a.as("dst")), struct(b.as("src"), b.as("dst"))))
+        .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct())
-    // Iteration 1 folded into the seed: with identity labels the min
-    // neighbor label of `node` is simply min(src) over its in-edges, so
-    // the first join of the generic loop is a no-op — seed labels with
-    // least(node, min neighbor) directly (edges are symmetric, so every
-    // node appears as dst).
-    val seed = edges.groupBy(col("dst").as("node"))
-      .agg(min(col("src")).as("nbr"))
-      .select(col("node"), least(col("node"), col("nbr")).as("label"))
-      .persist()
-    var labels: DataFrame = seed
-    // `pinned` is the HANDLE that was actually persisted. Unpersisting a
-    // derived frame (e.g. next.drop("__changed")) is a silent no-op —
-    // Spark's CacheManager only uncaches plans that sameResult the cached
-    // plan — so superseded generations would stay pinned until
-    // clearCache (ADVICE r14). None after a localCheckpoint generation:
-    // dropping a locally-checkpointed RDD's blocks would lose data its
-    // truncated lineage cannot recompute.
-    var pinned: Option[DataFrame] = Some(seed)
-    var iter = 1
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(min(col("label")).as("nbr_label"))
-      // ONE job per iteration: the changed flag rides the label update,
-      // and counting the changed rows both MATERIALIZES the persisted
-      // next-labels cache and answers convergence — the previous form
-      // paid a checkpoint job plus a separate convergence join per
-      // iteration (3 shuffles/2 jobs; now 1/1).
-      val next = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("label"),
-          (col("nbr_label") < col("label")).as("__changed"))
-        .persist()
-      // A null pair id surfaces as a null node (edges are symmetric); its
-      // count rides the same aggregate, so the check costs no extra job.
-      val Row(changed: Long, nullIds: Long) = next.agg(
-        count(when(col("__changed"), 1)), count(when(col("node").isNull, 1)))
-        .collect()(0)
-      require(nullIds == 0L, NullIds)
-      converged = changed == 0L
-      pinned.foreach(_.unpersist(false)) // superseded generation
-      pinned = Some(next)
-      labels = next.drop("__changed")
-      iter += 1
-      // Adversarial high-diameter graphs: cut the join lineage every 8
-      // generations so plan growth stays bounded (each cut is one extra
-      // job, amortized over 8 iterations; diameter-1-3 dedup graphs never
-      // reach it).
-      if (iter % 8 == 0) {
-        labels = labels.localCheckpoint(true)
-        pinned.foreach(_.unpersist(false)) // checkpoint holds the blocks now
-        pinned = None
-      }
+    // One step: (src, dst, label of src) → the next generation (node,
+    // label), materialized as a checkpointed leaf. A null pair id
+    // surfaces as a null node; the changed and null counts ride the
+    // checkpoint job.
+    def step(labelled: DataFrame): (DataFrame, Long) = {
+      val obs = Observation()
+      val next = labelled.groupBy(col("dst").as("node"))
+        .agg(min(col("label")).as("label"),
+          min(when(col("src") === col("dst"), col("label"))).as("old"))
+        .observe(obs,
+          count(when(col("label") < col("old"), 1)).as("changed"),
+          count(when(col("node").isNull, 1)).as("nulls"))
+        .select(col("node"), col("label"))
+        .localCheckpoint(true)
+      val m = obs.get
+      require(m("nulls") == 0L, NullIds)
+      (next, m("changed").asInstanceOf[Long])
     }
-    require(converged, s"connectedComponents did not converge in $maxIter iterations")
-    // The final generation stays out of the scope (the result reads it);
-    // the harness's clearCache or the ContextCleaner reclaims it.
+    // the first step starts from identity labels: label(src) = src
+    var (labels, changed) = step(edges.withColumn("label", col("src")))
+    while (changed > 0L) {
+      val (next, c) = step(
+        edges.join(labels.withColumnRenamed("node", "src"), "src"))
+      Pins.checkpointRdds(labels).foreach(_.unpersist(false)) // superseded
+      labels = next
+      changed = c
+    }
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 }

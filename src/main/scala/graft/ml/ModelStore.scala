@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   * the artifact self-describing, and DOUBLE round-trips bit-exactly through
   * parquet — so a stored-model score is bit-identical to an inline-trained
   * score (MlQueriesSpec pins this), which is what lets q120 share q117's
-  * DuckDB oracle verbatim. Freshness rides a doc-count marker like the
-  * postings index: cheap metadata, no column scan.
+  * DuckDB oracle verbatim. Freshness rides the same count + content stamp
+  * as the postings index: cheap metadata, no column scan.
   */
 object ModelStore {
 
@@ -43,20 +43,14 @@ object ModelStore {
   def ensureLogReg(spark: SparkSession, sfDir: String): String = synchronized {
     val root = graft.IndexCache.modelRoot(sfDir)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val nDocs = docs.count()
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_N_DOCS")
-    // marker = "<nDocs>:<arithmetic version>" — the version token retires
-    // stored weights when the TRAINING arithmetic changes (detmath1 = the
-    // DetMath deterministic sigmoid), not just when the corpus does; a
-    // doc-count-only marker served stale pre-DetMath weights as "fresh"
-    val stamp = s"$nDocs:detmath1"
-    val fresh = java.nio.file.Files.isRegularFile(marker) &&
-      scala.util.Try(
-        java.nio.file.Files.readString(marker).trim == stamp)
-        .getOrElse(false)
-    if (!fresh) {
+    // stamp = "<nDocs>:<content stamp>:<arithmetic version>": the content
+    // stamp retires weights trained on a same-count corpus rewrite, the
+    // version token retires them when the TRAINING arithmetic changes
+    // (detmath1 = the DetMath deterministic sigmoid)
+    val content = graft.IndexCache.contentStamp(s"$sfDir/documents.parquet")
+    graft.IndexCache.buildOnce(spark, root, "_GRAFT_N_DOCS",
+        s"${docs.count()}:$content:detmath1") {
       save(spark, root, MlQueries.FeatureNames, MlQueries.trainOn(docs))
-      java.nio.file.Files.writeString(marker, stamp)
     }
     root
   }

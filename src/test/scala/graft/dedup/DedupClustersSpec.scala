@@ -1,26 +1,30 @@
 package graft.dedup
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 /** Connected-components pins: chains merge transitively, disjoint blobs
   * stay apart, labels are the min doc_id of each component — on BOTH
-  * execution paths (r15): the bounded local union-find (default) and the
-  * distributed min-label loop (`graft.cc.localEdgeLimit = 0`), plus the
-  * path-selection contract itself (over-the-bound sets fall through, the
-  * local path runs job-free and pin-free). */
+  * execution paths: the bounded local union-find (default bound) and the
+  * distributed min-label loop (bound 0, through the `private[dedup]`
+  * entry), plus the path-selection contract itself (over-the-bound sets
+  * fall through, the pair source runs once, the local path leaves no pin
+  * behind). */
 class DedupClustersSpec extends SparkSpec {
 
-  private def ccWith(limit: String)(pairs: (Long, Long)*): Map[Long, Long] = {
+  private def labelsOf(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def ccWith(limit: Int)(pairs: (Long, Long)*): Map[Long, Long] = {
     import spark.implicits._
-    val prev = spark.conf.get("graft.cc.localEdgeLimit", "1000000")
-    spark.conf.set("graft.cc.localEdgeLimit", limit)
-    try DedupClusters.connectedComponents(pairs.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    finally spark.conf.set("graft.cc.localEdgeLimit", prev)
+    labelsOf(DedupClusters.connectedComponents(
+      pairs.toDF("doc_a", "doc_b"), limit))
   }
 
   private def cc(pairs: (Long, Long)*): Map[Long, Long] =
-    ccWith("1000000")(pairs: _*)
+    ccWith(DedupClusters.LocalEdgeLimit)(pairs: _*)
 
   test("two disjoint components resolve to their min ids") {
     val labels = cc((1L, 2L), (2L, 3L), (5L, 6L))
@@ -46,15 +50,15 @@ class DedupClustersSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (10L, 11L), (11L, 12L), (10L, 12L), (12L, 10L), (20L, 20L),
       (2L, 1L), (30L, 31L))
-    val local = ccWith("1000000")(edges: _*)
-    val dist = ccWith("0")(edges: _*)
+    val local = cc(edges: _*)
+    val dist = ccWith(0)(edges: _*)
     assert(local == dist, s"paths disagree: local=$local dist=$dist")
     assert(local(6L) == 1L && local(12L) == 10L && local(20L) == 20L)
   }
 
   test("over-the-bound edge sets fall through to the distributed loop") {
     // limit = 2, 4 pair rows: head(3) sees 3 rows > limit -> distributed
-    val labels = ccWith("2")((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+    val labels = ccWith(2)((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
@@ -70,24 +74,24 @@ class DedupClustersSpec extends SparkSpec {
         }
       }
       spark.sparkContext.addSparkListener(l)
-      try { body; Thread.sleep(1000) } // listener bus is async
+      try { body; org.apache.spark.SpecBus.drain(spark.sparkContext) }
       finally spark.sparkContext.removeSparkListener(l)
       jobs.get()
     }
-    val pinsBefore = spark.sparkContext.getPersistentRDDs.size
+    val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val localJobs = countJobs {
       DedupClusters.connectedComponents(pairs.toDF("doc_a", "doc_b"))
         .collect(): Unit
     }
-    // zero NEW pins: the local path persists nothing
-    assert(spark.sparkContext.getPersistentRDDs.size == pinsBefore,
+    // zero NEW pins: the local path's pair-source pin ends with the call
+    // (compared by id: the ContextCleaner may drop an earlier case's
+    // unreferenced final generation meanwhile)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinsBefore).isEmpty,
       "local CC path left persisted RDDs behind")
-    val prev = spark.conf.get("graft.cc.localEdgeLimit", "1000000")
-    spark.conf.set("graft.cc.localEdgeLimit", "0")
-    val distJobs = try countJobs {
-      DedupClusters.connectedComponents(pairs.toDF("doc_a", "doc_b"))
+    val distJobs = countJobs {
+      DedupClusters.connectedComponents(pairs.toDF("doc_a", "doc_b"), 0)
         .collect(): Unit
-    } finally spark.conf.set("graft.cc.localEdgeLimit", prev)
+    }
     // the diameter-40 chain needs many label-propagation iterations, each
     // one job; the local path is a bounded take + a LocalRelation collect
     assert(localJobs < distJobs,
@@ -97,21 +101,16 @@ class DedupClustersSpec extends SparkSpec {
 
   test("distributed loop releases superseded generations (ADVICE r14)") {
     import spark.implicits._
-    // diameter ~12 chain: several superseded generations, one 8-iter
-    // localCheckpoint cut
+    // diameter ~12 chain: a dozen superseded generations
     val pairs = (1L to 12L).map(i => (i, i + 1L))
-    val prev = spark.conf.get("graft.cc.localEdgeLimit", "1000000")
-    spark.conf.set("graft.cc.localEdgeLimit", "0")
-    try {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      DedupClusters.connectedComponents(pairs.toDF("doc_a", "doc_b"))
-        .collect(): Unit
-      val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-      // at most the FINAL generation (plus its checkpoint blocks) may
-      // remain pinned; superseded generations and the edge frame must not
-      assert(after.size <= 2,
-        s"distributed CC left ${after.size} persisted RDDs: $after")
-    } finally spark.conf.set("graft.cc.localEdgeLimit", prev)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    DedupClusters.connectedComponents(pairs.toDF("doc_a", "doc_b"), 0)
+      .collect(): Unit
+    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
+    // at most the FINAL generation (plus its checkpoint blocks) may
+    // remain pinned; superseded generations and the edge frame must not
+    assert(after.size <= 2,
+      s"distributed CC left ${after.size} persisted RDDs: $after")
   }
 
   private def nullPairs = {
@@ -128,13 +127,46 @@ class DedupClustersSpec extends SparkSpec {
   }
 
   test("distributed path rejects null pair ids with a require") {
-    val prev = spark.conf.get("graft.cc.localEdgeLimit", "1000000")
-    spark.conf.set("graft.cc.localEdgeLimit", "0")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        DedupClusters.connectedComponents(nullPairs).collect()
-      }
-      assert(e.getMessage.contains("null doc_a/doc_b"), e.getMessage)
-    } finally spark.conf.set("graft.cc.localEdgeLimit", prev)
+    val e = intercept[IllegalArgumentException] {
+      DedupClusters.connectedComponents(nullPairs, 0).collect()
+    }
+    assert(e.getMessage.contains("null doc_a/doc_b"), e.getMessage)
+  }
+
+  test("a 100-node chain on the distributed path equals the union-find") {
+    // diameter 99: past any fixed iteration cap below 100
+    val chain = (1L until 100L).map(i => (i, i + 1))
+    val dist = ccWith(0)(chain: _*)
+    assert(dist == cc(chain: _*))
+    assert(dist.size == 100 && dist.values.forall(_ == 1L))
+  }
+
+  test("a seeded random graph gives the same labels on both paths") {
+    // four disjoint blocks of 250 ids, 500 random edges each
+    val rnd = new scala.util.Random(20141103L)
+    val edges = Seq.tabulate(2000) { i =>
+      val block = (i / 500) * 1000L
+      (block + rnd.nextInt(250), block + rnd.nextInt(250))
+    }
+    val local = cc(edges: _*)
+    assert(local.values.toSet.size > 1, "expected several components")
+    assert(ccWith(0)(edges: _*) == local)
+  }
+
+  test("the pair upstream runs exactly once in both regimes") {
+    val rows = 400L
+    // each upstream pair row bumps the accumulator once per evaluation
+    def runs(limit: Int): Long = {
+      val acc = spark.sparkContext.longAccumulator("cc_pair_upstream")
+      val tick = udf { (a: Long) => acc.add(1L); a }.asNondeterministic()
+      // a star around doc 0: two generations on the distributed path
+      val pairs = spark.range(1L, rows + 1L, 1L, 4)
+        .select(lit(0L).as("doc_a"), tick(col("id")).as("doc_b"))
+      val labels = labelsOf(DedupClusters.connectedComponents(pairs, limit))
+      assert(labels.size == rows + 1 && labels.values.forall(_ == 0L))
+      acc.value
+    }
+    assert(runs(DedupClusters.LocalEdgeLimit) == rows, "local regime")
+    assert(runs(2) == rows, "over-the-bound regime")
   }
 }

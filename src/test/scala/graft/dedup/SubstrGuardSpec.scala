@@ -20,7 +20,7 @@ class SubstrGuardSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   /** Collect substr_guard_* observed metrics fired after `body` runs —
-    * QueryExecutionListener delivery is async, so poll. */
+    * QueryExecutionListener delivery is async, so drain the bus. */
   private def withGuardMetrics(body: => Unit): Map[String, (Long, Long)] = {
     val seen = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -41,11 +41,7 @@ class SubstrGuardSpec extends SparkSpec {
     spark.listenerManager.register(l)
     try {
       body
-      // flush the async execution-listener bus
-      val deadline = System.currentTimeMillis() + 30000
-      while (seen.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      Thread.sleep(300) // let stragglers land
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       seen.asScala.toMap
     } finally spark.listenerManager.unregister(l)

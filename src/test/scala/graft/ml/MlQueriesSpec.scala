@@ -104,6 +104,36 @@ class MlQueriesSpec extends SparkSpec {
     assert(after == mtimes, "second ensure rewrote the persisted model")
   }
 
+  test("a same-count corpus rewrite retrains the stored model") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_model_stamp")
+    val corpus = s"$dir/documents.parquet"
+    // two 100-doc slices of the corpus: same row count, different text
+    def write(lo: Long): Array[Double] = {
+      val slice = docs.filter(col("doc_id") >= lo).orderBy("doc_id")
+        .limit(100)
+      slice.coalesce(1).write.mode("overwrite").parquet(corpus)
+      MlQueries.trainOn(spark.read.parquet(corpus))
+    }
+    val root = graft.IndexCache.modelRoot(dir.toString)
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    try {
+      val first = write(0L)
+      ModelStore.ensureLogReg(spark, dir.toString)
+      assert(ModelStore.load(spark, root)._2.sameElements(first))
+      val second = write(250L)
+      assert(!second.sameElements(first), "the slices must train apart")
+      ModelStore.ensureLogReg(spark, dir.toString)
+      assert(ModelStore.load(spark, root)._2.sameElements(second),
+        "a same-count rewrite served the stale model")
+    } finally {
+      rm(dir.toFile)
+      rm(new java.io.File(root).getParentFile)
+    }
+  }
+
   test("NB bucket counts merge by addition — incremental training is exact") {
     import org.apache.spark.sql.functions.col
     def counts(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
