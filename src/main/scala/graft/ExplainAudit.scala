@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Plan-audit tool: prints `.explain("formatted")` for the named catalog
   * queries (all of them when no names given) so scan pruning, pushed
@@ -10,35 +12,31 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainAudit {
 
+  /** Every node of a physical plan, root first: AQE input plans and query
+    * stages (which hide their subtree from `children`), children, and
+    * subqueries. A `ReusedExchangeExec` is a leaf here — it references a
+    * subtree that is already walked and that Spark executes once. */
+  private[graft] def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val hidden = p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.inputPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case _ => Seq.empty
+    }
+    p +: (hidden ++ p.children.flatMap(planNodes) ++
+      p.subqueries.flatMap(planNodes))
+  }
+
   /** How many times each source parquet table is scanned in one query's
     * PHYSICAL plan — the q182/q210 defect class detector (a corpus-scale
     * frame consumed N times with no pin re-scans the corpus N times).
     * Counts `FileSourceScanExec` nodes grouped by root-path basename;
     * pinned frames (`localCheckpoint`) surface as RDD scans, not file
-    * scans, so a correctly-pinned multi-consumer plan counts ONCE.
-    * Subqueries and reused exchanges/subtrees are walked too
-    * (`ReusedExchangeExec` references an already-counted subtree and is
-    * deliberately NOT double-counted — Spark executes it once). */
-  def tableScanCounts(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[String] = {
-      val here = p match {
-        case f: FileSourceScanExec =>
-          f.relation.location.rootPaths.map(_.getName).toSeq
-        case _ => Seq.empty
-      }
-      // AQE nodes hide their subtree from `children` — descend explicitly
-      val hidden = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _ => Seq.empty
-      }
-      here ++ hidden ++ p.children.flatMap(walk) ++ p.subqueries.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-      .groupBy(identity).map { case (k, v) => (k, v.size) }
-  }
+    * scans, so a correctly-pinned multi-consumer plan counts ONCE. */
+  def tableScanCounts(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+    planNodes(df.queryExecution.executedPlan).flatMap {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+      case _ => Seq.empty
+    }.groupBy(identity).map { case (k, v) => (k, v.size) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"

@@ -4,7 +4,6 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Unpartitioned-window audit (r15, VERDICT r14 #4/#5): enumerate every
@@ -29,18 +28,8 @@ object WindowAudit {
     * as "no sites". */
   final case class Report(sites: Seq[Site], failures: Seq[(String, String)])
 
-  private def collectPlans(p: SparkPlan): Seq[SparkPlan] = {
-    val hidden = p match {
-      case a: AdaptiveSparkPlanExec => collectPlans(a.inputPlan)
-      case q: QueryStageExec => collectPlans(q.plan)
-      case _ => Seq.empty
-    }
-    p +: (hidden ++ p.children.flatMap(collectPlans) ++
-      p.subqueries.flatMap(collectPlans))
-  }
-
   private def hasBoundBelow(p: SparkPlan): Boolean =
-    collectPlans(p).drop(1).exists {
+    ExplainAudit.planNodes(p).drop(1).exists {
       case _: TakeOrderedAndProjectExec | _: GlobalLimitExec |
           _: CollectLimitExec => true
       case _ => false
@@ -49,7 +38,7 @@ object WindowAudit {
   /** All unpartitioned-window sites in one query's executed plan. */
   def sitesOf(query: String,
       df: org.apache.spark.sql.DataFrame): Seq[Site] =
-    collectPlans(df.queryExecution.executedPlan).collect {
+    ExplainAudit.planNodes(df.queryExecution.executedPlan).collect {
       case w: WindowExec if w.partitionSpec.isEmpty =>
         Site(query, "WindowExec", hasBoundBelow(w))
       case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>

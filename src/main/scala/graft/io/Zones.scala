@@ -18,7 +18,7 @@ import graft.model.Schemas
   *  - writes partitionBy(txn_date) so every downstream date predicate
   *    partition-prunes;
   *  - append mode preserved for parity (reference B4); idempotent re-runs
-  *    available via dynamic partition overwrite;
+  *    via overwrite mode;
   *  - raw CSV reads use the explicit contract schema — no inferSchema pass
   *    over 100 TB.
   */
@@ -46,39 +46,29 @@ final case class Zones(root: String) {
     spark.read.option("header", "true").option("inferSchema", "true").csv(raw)
       .drop("ingest_date")
 
-  def readBronze(spark: SparkSession): DataFrame = spark.read.parquet(bronze)
-  def readSilver(spark: SparkSession): DataFrame = spark.read.parquet(silver)
-
-  /** Partitioned Parquet write (K1/K2); append for reference parity. */
-  def writePartitioned(df: DataFrame, path: String,
-      mode: String = "append", overwriteDynamic: Boolean = false): Unit = {
-    val w = df.write.mode(mode)
+  /** Partitioned Parquet write (K1/K2); append for reference parity.
+    * `overwrite` replaces the whole zone (Spark's default static partition
+    * overwrite). */
+  def writePartitioned(df: DataFrame, path: String, mode: String = "append"): Unit =
+    df.write.mode(mode)
       .option("compression", "snappy")
       .partitionBy("txn_date")
-    (if (overwriteDynamic)
-       w.option("partitionOverwriteMode", "dynamic")
-     else w).parquet(path)
+      .parquet(path)
+
+  /** Register bronze and silver in the session catalog — the Athena/Glue
+    * stand-in. */
+  def registerTables(spark: SparkSession): Unit = {
+    register(spark, "bronze_transactions", bronze)
+    register(spark, "silver_transactions", silver)
   }
 
-  /** Register bronze/silver in the session catalog — the Athena/Glue
-    * stand-in. On a Hive-backed session (`LakeCatalog.session`) these become
-    * persistent EXTERNAL tables with crawled partitions that survive JVM
-    * restarts; on the default in-memory catalog they are session temp views.
-    * Either way `spark.table("bronze_transactions")` resolves. */
-  def registerTables(spark: SparkSession): Unit =
-    if (LakeCatalog.isHive(spark)) {
-      LakeCatalog.registerExternal(spark, "bronze_transactions", bronze)
-      LakeCatalog.registerExternal(spark, "silver_transactions", silver)
-    } else {
-      readBronze(spark).createOrReplaceTempView("bronze_transactions")
-      readSilver(spark).createOrReplaceTempView("silver_transactions")
-    }
-
-  /** Catalog bronze only (silver may not exist yet mid-pipeline). */
-  def registerBronze(spark: SparkSession): Unit =
-    if (LakeCatalog.isHive(spark))
-      LakeCatalog.registerExternal(spark, "bronze_transactions", bronze)
-    else readBronze(spark).createOrReplaceTempView("bronze_transactions")
+  /** Register one zone as `name`. On a Hive-backed session
+    * (`LakeCatalog.session`) it becomes a persistent EXTERNAL table with
+    * crawled partitions that survives JVM restarts; on the default in-memory
+    * catalog a session temp view. Either way `spark.table(name)` resolves. */
+  private[graft] def register(spark: SparkSession, name: String, path: String): Unit =
+    if (LakeCatalog.isHive(spark)) LakeCatalog.registerExternal(spark, name, path)
+    else spark.read.parquet(path).createOrReplaceTempView(name)
 }
 
 /** Helpers for the driver-provided star-schema testdata (TESTDATA.md). */

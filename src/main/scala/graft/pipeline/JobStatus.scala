@@ -5,11 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Job-state reporting — the stand-in for the reference's EventBridge rule
   * on Glue job `state = FAILED` → SNS alert (`README.md:96-104`). Each
   * pipeline stage writes one JSON artifact with status, timing, the error
-  * (on failure), and stage metrics (e.g. the audit stage's DQ observation
-  * summary) to `<outDir>/<stage>_<runDate>.json`. A monitoring system tails
-  * that directory exactly as SNS subscribers consume the topic; on a real
-  * cluster `outDir` is an object-store prefix (the write goes through the
-  * Hadoop FS API, so hdfs:// and s3a:// roots work unchanged).
+  * (on failure), and stage metrics (e.g. bronze's `raw_rows`, the
+  * audit_summary stage's DQ summary) to `<outDir>/<stage>_<runDate>.json`.
+  * A monitoring system tails that directory exactly as SNS subscribers
+  * consume the topic; on a real cluster `outDir` is an object-store prefix
+  * (the write goes through the Hadoop FS API, so hdfs:// and s3a:// roots
+  * work unchanged).
   */
 object JobStatus {
 

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.io.Zones
 import graft.transform.{Audit, Bronze, Gold, Silver}
@@ -18,23 +18,35 @@ object Runner {
 
   /** raw CSV → bronze → silver (+ audit split + DQ summary) → gold. Every
     * stage reports SUCCESS/FAILED + timing through JobStatus.Reporter (the
-    * EventBridge/SNS monitoring equivalent, `README.md:96-104`). */
+    * EventBridge/SNS monitoring equivalent, `README.md:96-104`).
+    *
+    * One pass: every count in the Result rides a scan a stage already runs,
+    * as an `observe()` metric, and each is a whole-table count in both
+    * modes:
+    *  - `rawRows` — the raw CSV scan of the bronze write;
+    *  - `bronzeRows`, `invalidRows` — the DQ observation on the audit
+    *    write, which reads the whole bronze table;
+    *  - `silverRows` — gold's read of the whole silver table.
+    * Bronze and gold also carry their count in their stage report's
+    * metrics (`raw_rows`, `silver_rows`), audit_summary the DQ JSON. */
   def run(spark: SparkSession, zones: Zones,
       mode: String = "append", runDate: String = "1970-01-01"): Result = {
     // One bounded retry per stage (the Glue-trigger at-least-once stand-in):
     // safe because every retried stage body ends at its ONE write — either
-    // overwrite-mode, dynamic-partition overwrite (audit invalid), or an
-    // append guarded by the output-commit protocol (failed jobs commit
-    // nothing). Multi-action bodies are split into separate stages so a
-    // late-action failure never replays an earlier committed write.
+    // overwrite-mode (the audit zone always is) or an append guarded by the
+    // output-commit protocol (failed jobs commit nothing). Multi-action
+    // bodies are split into separate stages so a late-action failure never
+    // replays an earlier committed write. Each Observation is made inside
+    // its stage body: it serves one Dataset, so a retry needs a fresh one.
     val reporter = new JobStatus.Reporter(spark, s"${zones.root}/jobstatus", runDate,
       maxRetries = 1)
 
     // Bronze job (etl_transactions_bronze.py equivalent)
-    reporter.stage("bronze") {
-      val raw = zones.readRaw(spark)
+    val rawRows = reporter.stageWithMetrics("bronze") {
+      val (raw, rawObs) = counted(zones.readRaw(spark))
       zones.writePartitioned(Bronze.pipeline(raw), zones.bronze, mode)
-    }
+      rows(rawObs)
+    }(n => Some(s"""{"raw_rows":$n}"""))
 
     // Silver + audit jobs resolve bronze THROUGH THE CATALOG, mirroring the
     // reference's catalog-only reads (etl_transactions_silver.py:137-139) —
@@ -43,45 +55,52 @@ object Runner {
     // silver stage so a catalog failure (stale Derby lock, corrupt zone)
     // still produces a FAILED artifact for the monitor.
     val bronzeBack = reporter.stage("silver") {
-      zones.registerBronze(spark)
+      zones.register(spark, "bronze_transactions", zones.bronze)
       val b = spark.table("bronze_transactions")
       zones.writePartitioned(Silver.pipeline(b), zones.silver, mode)
       b
     }
 
-    // Audit: one extra scan of bronze, tag + split (README-declared layer).
-    // Two stages, because a retried body must be idempotent end-to-end:
-    //  - "audit" writes the invalid split via dynamic-partition OVERWRITE
-    //    (recomputed from bronze, so a retry rewrites the same partitions
-    //    with the same rows — append here would duplicate the audit zone
-    //    and inflate Result.invalidRows on any retry);
-    //  - "audit_summary" computes + writes the DQ summary (pure aggregate
-    //    plus an overwriting text write — trivially re-runnable). Its DQ
-    //    JSON rides along as the stage report's metrics object.
-    val tagged = Audit.tagRejects(bronzeBack)
-    reporter.stage("audit") {
+    // Audit: one extra scan of bronze, tag + split (README-declared layer),
+    // with the DQ counts riding the same scan. The invalid split is always
+    // recomputed from the whole bronze table, so it is written by plain
+    // OVERWRITE: a retry rewrites the same rows, and no partition from an
+    // earlier raw input survives. "audit_summary" only renders and writes
+    // the DQ JSON (no Spark job); it rides along as that report's metrics.
+    val dq = reporter.stage("audit") {
+      val (tagged, dqObs) = Audit.observed(Audit.tagRejects(bronzeBack))
       zones.writePartitioned(Audit.invalidRecords(tagged), zones.auditInvalid,
-        mode = "overwrite", overwriteDynamic = true)
+        mode = "overwrite")
+      dqObs.get
     }
     val dqJson = reporter.stageWithMetrics("audit_summary") {
-      val dq = Audit.dqSummaryJson(tagged, runDate)
-      writeText(spark, s"${zones.auditSummary}/dq_summary_$runDate.json", dq)
-      dq
-    }(dq => Some(dq))
+      val json = Audit.dqJson(dq, runDate)
+      writeText(spark, s"${zones.auditSummary}/dq_summary_$runDate.json", json)
+      json
+    }(Some(_))
 
     // Gold aggregates over silver (catalog read, inside the stage as above)
-    val silverBack = reporter.stage("gold") {
-      zones.registerTables(spark)
-      val sv = spark.table("silver_transactions")
+    val silverRows = reporter.stageWithMetrics("gold") {
+      zones.register(spark, "silver_transactions", zones.silver)
+      val (sv, svObs) = counted(spark.table("silver_transactions"))
       Gold.merchantDailyKpis(sv).write.mode("overwrite")
         .parquet(s"${zones.gold}/merchant_daily_kpis")
       Gold.dailyTotals(sv).write.mode("overwrite")
         .parquet(s"${zones.gold}/daily_totals")
-      sv
-    }
-    Result(zones.readRaw(spark).count(), bronzeBack.count(), silverBack.count(),
-      spark.read.parquet(zones.auditInvalid).count(), dqJson)
+      rows(svObs)
+    }(n => Some(s"""{"silver_rows":$n}"""))
+
+    Result(rawRows, dq("input_rows").asInstanceOf[Long], silverRows,
+      dq("invalid_rows").asInstanceOf[Long], dqJson)
   }
+
+  /** `df` with a row count that its first action fills in. */
+  private def counted(df: DataFrame): (DataFrame, Observation) = {
+    val obs = Observation()
+    (df.observe(obs, count(lit(1)).as("rows")), obs)
+  }
+
+  private def rows(obs: Observation): Long = obs.get("rows").asInstanceOf[Long]
 
   /** Writes through the Hadoop FileSystem API so the audit summary lands in
     * the SAME filesystem as the lake zones (hdfs://, s3a://, or local) —

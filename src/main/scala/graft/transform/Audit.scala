@@ -1,9 +1,7 @@
 package graft.transform
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-
-import graft.model.Schemas
 
 /** Audit / data-quality layer — the README-declared-but-unimplemented surface
   * of the reference (`README.md:53`, `:85-87`: invalid records with reasons
@@ -11,9 +9,10 @@ import graft.model.Schemas
   *
   * Design: ONE scan of bronze. `tagRejects` adds a `reject_reason` column in
   * a single projection (no per-rule passes); callers then split with two
-  * cheap filters (Catalyst shares the tagged plan) or write valid/invalid in
-  * two actions over a cached tag. At 100 TB this matters: rule-per-pass
-  * designs re-scan the lake once per rule.
+  * cheap filters (Catalyst shares the tagged plan). The DQ summary is not a
+  * second pass either: `observed` attaches its counts to the tagged frame,
+  * so the action that writes the invalid split also produces them. At
+  * 100 TB this matters: rule-per-pass designs re-scan the lake once per rule.
   *
   * Reasons map 1:1 to the generator's fault injector
   * (`src/data_generator/generate_transaction_data.py:111-140`); note
@@ -29,19 +28,17 @@ object Audit {
   /** Audit-only observation; does not filter (parity with reference). */
   val FlagBlankUser = "blank_user"
 
-  /** First-match reject reason, NULL when the row passes silver validation.
-    * Rule order mirrors the silver filter order (amount → currency → status,
-    * `etl_transactions_silver.py:126-128`). NULL currency/status must be
-    * tagged explicitly: `!isin(...)` evaluates to NULL (not true) for NULL
-    * input, while silver's `where(isin(...))` DROPS those rows — without
-    * the isNull arms the audit would disagree with the silver filters. */
-  def rejectReasonCol: Column =
-    when(col("amount").isNull || col("amount") <= 0, ReasonBadAmount)
-      .when(col("currency").isNull ||
-        !col("currency").isin(Schemas.validCurrencies: _*), ReasonBadCurrency)
-      .when(col("status").isNull ||
-        !col("status").isin(Schemas.validStatuses: _*), ReasonBadStatus)
-      .otherwise(lit(null).cast("string"))
+  /** First-match reject reason over `Silver.rules`, NULL when the row passes
+    * silver validation. A NULL rule result counts as a failure, because
+    * silver's `where` drops those rows too. */
+  def rejectReasonCol: Column = {
+    val arms = Silver.rules.map { case (reason, valid) =>
+      (!coalesce(valid, lit(false)), reason)
+    }
+    arms.tail.foldLeft(when(arms.head._1, arms.head._2)) {
+      case (c, (failed, reason)) => c.when(failed, reason)
+    }
+  }
 
   def tagRejects(bronze: DataFrame): DataFrame = bronze
     .withColumn("reject_reason", rejectReasonCol)
@@ -57,45 +54,38 @@ object Audit {
     tagged.filter(col("reject_reason").isNull)
       .drop("reject_reason", "blank_user_flag")
 
-  /** Per-reason counts — the distributable core of the DQ summary.
-    * (`groupBy(reject_reason).count` — partial aggregation map-side, tiny
-    * shuffle: at most 4 groups regardless of input size.) */
-  def countsByReason(tagged: DataFrame): DataFrame = tagged
-    .filter(col("reject_reason").isNotNull)
-    .groupBy("reject_reason").agg(count(lit(1)).as("n"))
-
-  /** One-row DQ summary (input/valid/invalid/blank_user counts) computed in
-    * a single aggregation pass — no collect-per-metric. */
-  def dqSummary(tagged: DataFrame): DataFrame = tagged.agg(
-    count(lit(1)).as("input_rows"),
-    count(when(col("reject_reason").isNull, 1)).as("valid_rows"),
-    count(col("reject_reason")).as("invalid_rows"),
-    count(when(col("blank_user_flag"), 1)).as("blank_user_rows"),
-    count(when(col("reject_reason") === ReasonBadAmount, 1)).as("n_bad_amount"),
-    count(when(col("reject_reason") === ReasonBadCurrency, 1)).as("n_bad_currency"),
-    count(when(col("reject_reason") === ReasonBadStatus, 1)).as("n_bad_status")
-  )
-
-  /** DQ summary as a single JSON line (the README's summary-JSON artifact,
-    * `README.md:87`). Runs the one-pass aggregation and renders on the
-    * driver — the aggregate is a single row, so this is safe at any scale. */
-  def dqSummaryJson(tagged: DataFrame, runDate: String): String = {
-    val row = dqSummary(tagged).withColumn("run_date", lit(runDate))
-    row.toJSON.collect().head
+  /** The DQ counts, in the order the summary JSON lists them. */
+  private def dqMetrics: Seq[(String, Column)] = {
+    def reason(r: String) = count(when(col("reject_reason") === r, 1))
+    Seq(
+      "input_rows" -> count(lit(1)),
+      "valid_rows" -> count(when(col("reject_reason").isNull, 1)),
+      "invalid_rows" -> count(col("reject_reason")),
+      "blank_user_rows" -> count(when(col("blank_user_flag"), 1)),
+      "n_bad_amount" -> reason(ReasonBadAmount),
+      "n_bad_currency" -> reason(ReasonBadCurrency),
+      "n_bad_status" -> reason(ReasonBadStatus))
   }
 
-  /** Zero-extra-scan DQ metrics: attach an [[org.apache.spark.sql.Observation]]
-    * to the tagged frame so whatever action runs next (e.g. the silver
-    * write) ALSO produces the counts — the 100 TB-friendly alternative to a
-    * second aggregation pass over the lake. Read `obs.get` after the
-    * action completes. */
-  def observed(tagged: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("dq")
-    val observed = tagged.observe(obs,
-      count(lit(1)).as("input_rows"),
-      count(when(col("reject_reason").isNull, 1)).as("valid_rows"),
-      count(col("reject_reason")).as("invalid_rows"),
-      count(when(col("blank_user_flag"), 1)).as("blank_user_rows"))
-    (observed, obs)
+  /** Zero-extra-scan DQ metrics: attach an [[Observation]] to the tagged
+    * frame so whatever action runs next (the audit write, in `Runner`) ALSO
+    * produces the counts. Read `obs.get` after the action completes; a
+    * retried action needs a fresh call, since an Observation serves one
+    * Dataset only. */
+  def observed(tagged: DataFrame): (DataFrame, Observation) = {
+    val obs = Observation("dq")
+    val cols = dqMetrics.map { case (name, c) => c.as(name) }
+    (tagged.observe(obs, cols.head, cols.tail: _*), obs)
+  }
+
+  /** The DQ summary as a single JSON line (the README's summary-JSON
+    * artifact, `README.md:87`): `observed`'s counts in order, then
+    * `run_date`. Rendered on the driver from the observed row. */
+  def dqJson(metrics: Map[String, Any], runDate: String): String = {
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+    dqMetrics.foreach { case (name, _) =>
+      node.put(name, metrics(name).asInstanceOf[Long])
+    }
+    node.put("run_date", runDate).toString
   }
 }

@@ -8,26 +8,24 @@ import graft.model.Schemas
 /** Silver-stage transforms: validation filters + status curation.
   *
   * Re-expresses the reference's silver Glue job
-  * (`src/glue_jobs/etl_transactions_silver.py`). All four stages are narrow
-  * (no shuffle — SURVEY.md §3.2): Catalyst collapses the three filters and
-  * pushes them into the bronze Parquet scan as row-group/page filters.
+  * (`src/glue_jobs/etl_transactions_silver.py`). Validation and curation are
+  * narrow (no shuffle — SURVEY.md §3.2): the three rules form one filter that
+  * Catalyst pushes into the bronze Parquet scan as row-group/page filters.
   */
 object Silver {
 
-  /** amount > 0 AND amount IS NOT NULL.
-    * Reference: `etl_transactions_silver.py:24-38` (validate_amount). */
-  def validateAmount(df: DataFrame): DataFrame =
-    df.where(col("amount") > 0 && col("amount").isNotNull)
-
-  /** currency ∈ {USD, EUR, GBP, JPY, AUD, CAD}.
-    * Reference: `etl_transactions_silver.py:41-57` (validate_currency_types). */
-  def validateCurrency(df: DataFrame): DataFrame =
-    df.where(col("currency").isin(Schemas.validCurrencies: _*))
-
-  /** status ∈ the 8 known statuses.
-    * Reference: `etl_transactions_silver.py:60-86` (validate_txn_statuses). */
-  def validateStatus(df: DataFrame): DataFrame =
-    df.where(col("status").isin(Schemas.validStatuses: _*))
+  /** The validation rules in the reference's order (`validate_bronze_df`,
+    * `etl_transactions_silver.py:115-130`): each is the audit reject reason
+    * and the predicate a valid row satisfies. Silver keeps the rows where
+    * all hold; `Audit.rejectReasonCol` tags the first that does not.
+    *  - amount > 0 (`validate_amount`, `:24-38`; NULL fails);
+    *  - currency ∈ {USD, EUR, GBP, JPY, AUD, CAD}
+    *    (`validate_currency_types`, `:41-57`);
+    *  - status ∈ the 8 known statuses (`validate_txn_statuses`, `:60-86`). */
+  val rules: Seq[(String, Column)] = Seq(
+    Audit.ReasonBadAmount -> (col("amount") > 0),
+    Audit.ReasonBadCurrency -> col("currency").isin(Schemas.validCurrencies: _*),
+    Audit.ReasonBadStatus -> col("status").isin(Schemas.validStatuses: _*))
 
   /** The curated-status CASE expression, exposed as a Column so the audit
     * layer can reuse it. Reference mapping:
@@ -44,15 +42,8 @@ object Silver {
   def curateStatus(df: DataFrame): DataFrame =
     df.withColumn("status_curated", statusCuratedCol(col("status")))
 
-  /** Ordered validation pipeline (reference `validate_bronze_df`,
-    * `etl_transactions_silver.py:115-130`). */
-  val stages: Seq[(String, DataFrame => DataFrame)] = Seq(
-    "validate_amount" -> validateAmount _,
-    "validate_currency" -> validateCurrency _,
-    "validate_status" -> validateStatus _,
-    "curate_status" -> curateStatus _
-  )
-
+  /** The rows that pass every rule, status-curated (reference
+    * `validate_bronze_df` + `curate_status`). */
   def pipeline(bronze: DataFrame): DataFrame =
-    stages.foldLeft(bronze) { case (d, (_, f)) => d.transform(f) }
+    curateStatus(bronze.where(rules.map(_._2).reduce(_ && _)))
 }

@@ -59,9 +59,9 @@ class JobStatusSpec extends SparkSpec {
   test("retried audit-style write stage does not duplicate the invalid zone") {
     // Regression: the audit stage once appended invalid records AND wrote
     // the DQ summary in one retried body — a summary failure after the
-    // append committed duplicated the zone on retry. The write is now
-    // dynamic-partition overwrite, so commit-then-fail-then-retry must
-    // leave exactly one copy.
+    // append committed duplicated the zone on retry. The write is now a
+    // full overwrite, so commit-then-fail-then-retry must leave exactly
+    // one copy.
     val dir = Files.createTempDirectory("graft-jobstatus-audit").toString
     val reporter = new JobStatus.Reporter(spark, dir, "2025-08-03", maxRetries = 1)
     val zones = graft.io.Zones(s"$dir/lake")
@@ -71,8 +71,7 @@ class JobStatusSpec extends SparkSpec {
     var calls = 0
     reporter.stage("audit") {
       calls += 1
-      zones.writePartitioned(invalid, zones.auditInvalid,
-        mode = "overwrite", overwriteDynamic = true)
+      zones.writePartitioned(invalid, zones.auditInvalid, mode = "overwrite")
       if (calls == 1) throw new RuntimeException("failure AFTER the committed write")
     }
     assert(calls == 2)
@@ -134,11 +133,19 @@ class JobStatusSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-lake-status").toString
     val zones = graft.io.Zones(root)
     graft.gen.FixtureGen.generate(zones.raw.stripSuffix("/transactions"))
-    Runner.run(spark, zones, mode = "overwrite", runDate = "2025-08-03")
+    val res = Runner.run(spark, zones, mode = "overwrite", runDate = "2025-08-03")
     val stages = Seq("bronze", "silver", "audit", "audit_summary", "gold")
-    for (s <- stages) {
-      val row = spark.read.json(s"$root/jobstatus/${s}_2025-08-03.json").collect().head
+    val rows = stages.map { s =>
+      s -> spark.read.json(s"$root/jobstatus/${s}_2025-08-03.json").collect().head
+    }.toMap
+    for ((s, row) <- rows)
       assert(row.getAs[String]("status") == "SUCCESS", s"stage $s not SUCCESS")
-    }
+    // every row count is readable from the reports alone
+    def metric(stage: String, key: String): Long =
+      rows(stage).getAs[org.apache.spark.sql.Row]("metrics").getAs[Long](key)
+    assert(metric("bronze", "raw_rows") == res.rawRows)
+    assert(metric("gold", "silver_rows") == res.silverRows)
+    assert(metric("audit_summary", "input_rows") == res.bronzeRows)
+    assert(metric("audit_summary", "invalid_rows") == res.invalidRows)
   }
 }

@@ -18,23 +18,27 @@ class SilverAuditSpec extends SparkSpec {
 
   private val good = ("t0", "u_1", "10.00", "GBP", "SETTLED", "2025-08-01T10:00:00")
 
+  /** Rows that pass the one named rule of `Silver.rules`. */
+  private def keep(reason: String)(df: org.apache.spark.sql.DataFrame) =
+    df.where(Silver.rules.toMap.apply(reason))
+
   test("validateAmount drops null and non-positive amounts") {
     val df = bronzeDf(Seq(good,
       ("t1", "u_1", "-5.00", "GBP", "SETTLED", "2025-08-01T10:00:00"),
       ("t2", "u_1", "0.00", "GBP", "SETTLED", "2025-08-01T10:00:00"),
       ("t3", "u_1", "junk", "GBP", "SETTLED", "2025-08-01T10:00:00")))
-    val kept = Silver.validateAmount(df).select("txn_id").collect().map(_.getString(0))
+    val kept = keep(Audit.ReasonBadAmount)(df).select("txn_id").collect().map(_.getString(0))
     assert(kept.toSet == Set("T0"))
   }
 
   test("validateCurrency keeps only the 6 known currencies") {
     val df = bronzeDf(Seq(good, ("t1", "u_1", "5.00", "ZZZ", "SETTLED", "2025-08-01T10:00:00")))
-    assert(Silver.validateCurrency(df).count() == 1)
+    assert(keep(Audit.ReasonBadCurrency)(df).count() == 1)
   }
 
   test("validateStatus keeps only the 8 known statuses") {
     val df = bronzeDf(Seq(good, ("t1", "u_1", "5.00", "GBP", "PENDINGISH", "2025-08-01T10:00:00")))
-    assert(Silver.validateStatus(df).count() == 1)
+    assert(keep(Audit.ReasonBadStatus)(df).count() == 1)
   }
 
   test("curateStatus maps every status to its curated value incl UNKNOWN") {
@@ -96,15 +100,15 @@ class SilverAuditSpec extends SparkSpec {
     assert(viaAudit == viaSilver)
   }
 
-  test("dqSummary counts in one pass") {
+  test("DQ summary counts in one pass") {
     val df = bronzeDf(Seq(good,
       ("t1", "u_1", "-5.00", "GBP", "SETTLED", "2025-08-01T10:00:00"),
       ("t4", "", "5.00", "GBP", "SETTLED", "2025-08-01T10:00:00")))
-    val row = Audit.dqSummary(Audit.tagRejects(df)).collect().head
-    assert(row.getAs[Long]("input_rows") == 3)
-    assert(row.getAs[Long]("valid_rows") == 2)
-    assert(row.getAs[Long]("invalid_rows") == 1)
-    assert(row.getAs[Long]("blank_user_rows") == 1)
+    val (observed, obs) = Audit.observed(Audit.tagRejects(df))
+    observed.write.mode("overwrite").format("noop").save()
+    assert(Audit.dqJson(obs.get, "2025-08-03") ==
+      """{"input_rows":3,"valid_rows":2,"invalid_rows":1,"blank_user_rows":1,""" +
+        """"n_bad_amount":1,"n_bad_currency":0,"n_bad_status":0,"run_date":"2025-08-03"}""")
   }
 
   test("gold merchantDailyKpis aggregates per merchant-day") {
