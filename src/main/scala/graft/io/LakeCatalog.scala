@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Persistent catalog stand-in for the reference's Glue Data Catalog.
   *
@@ -47,10 +48,14 @@ object LakeCatalog {
     * the metastore. Idempotent — call after every zone write. If the name
     * is already cataloged at a DIFFERENT location (zones root moved, two
     * lakes sharing a metastore) the stale entry is dropped and re-created
-    * rather than silently serving the old lake's data. Schema is inferred
-    * at (re-)creation; in-place schema evolution of an existing location
-    * needs an explicit drop + re-register, like re-running a Glue crawler. */
-  def registerExternal(spark: SparkSession, name: String, path: String): Unit = {
+    * rather than silently serving the old lake's data. A new entry takes
+    * `schema` (with `partitionCols` at its end) when given — no footer
+    * inference job — and the inferred footer schema otherwise; an existing
+    * entry keeps its schema, including one `refreshSchema` evolved, so
+    * in-place schema evolution needs `refreshSchema` or an explicit drop +
+    * re-register, like re-running a Glue crawler. */
+  def registerExternal(spark: SparkSession, name: String, path: String,
+      schema: Option[StructType] = None, partitionCols: Seq[String] = Nil): Unit = {
     // Qualify through the Hadoop FS: a relative local path in LOCATION would
     // otherwise resolve against the WAREHOUSE dir, not the caller's cwd
     // (and hdfs://, s3a:// roots pass through untouched).
@@ -71,7 +76,7 @@ object LakeCatalog {
         spark.sql(s"DROP TABLE $name")
       }
     }
-    spark.sql(s"CREATE TABLE IF NOT EXISTS $name USING PARQUET LOCATION '$loc'")
+    createExternal(spark, name, schema, partitionCols, loc.toString)
     // New files may have landed since the table was cataloged: drop cached
     // listings, then crawl for partition dirs added outside the catalog.
     spark.catalog.refreshTable(name)
@@ -95,7 +100,7 @@ object LakeCatalog {
     * Scale note: the merge pass reads footers only, not data — but ALL of
     * them; run it on evolution events (a new writer version), not per
     * query. Returns the merged schema so callers can diff/log it. */
-  def refreshSchema(spark: SparkSession, name: String): org.apache.spark.sql.types.StructType = {
+  def refreshSchema(spark: SparkSession, name: String): StructType = {
     val meta = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
     require(meta.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,
@@ -104,10 +109,8 @@ object LakeCatalog {
     val loc = meta.location.toString
     val partCols = meta.partitionColumnNames
     val merged = spark.read.option("mergeSchema", "true").parquet(loc).schema
-    val partClause =
-      if (partCols.nonEmpty) s" PARTITIONED BY (${partCols.mkString(", ")})" else ""
-    def create(schema: org.apache.spark.sql.types.StructType): Unit = spark.sql(
-      s"CREATE TABLE $name (${schema.toDDL}) USING PARQUET$partClause LOCATION '$loc'")
+    def create(schema: StructType): Unit =
+      createExternal(spark, name, Some(schema), partCols, loc)
     // Everything fallible (footer merge, DDL rendering) happens BEFORE the
     // drop; if the replacement CREATE itself still fails, re-register the
     // ORIGINAL schema so a failed refresh never deletes the catalog entry.
@@ -122,6 +125,16 @@ object LakeCatalog {
     try spark.catalog.recoverPartitions(name)
     catch { case _: org.apache.spark.sql.AnalysisException => () }
     merged
+  }
+
+  /** `CREATE TABLE IF NOT EXISTS` of an EXTERNAL parquet entry at `loc`;
+    * without `schema` Spark infers it from the footers. */
+  private def createExternal(spark: SparkSession, name: String,
+      schema: Option[StructType], partCols: Seq[String], loc: String): Unit = {
+    val columns = schema.fold("")(s => s" (${s.toDDL})")
+    val partitioned =
+      if (partCols.nonEmpty) s" PARTITIONED BY (${partCols.mkString(", ")})" else ""
+    spark.sql(s"CREATE TABLE IF NOT EXISTS $name$columns USING PARQUET$partitioned LOCATION '$loc'")
   }
 
   /** Compute table- and column-level statistics for the CBO — the missing

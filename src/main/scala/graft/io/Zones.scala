@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 
@@ -58,17 +59,22 @@ final case class Zones(root: String) {
   /** Register bronze and silver in the session catalog — the Athena/Glue
     * stand-in. */
   def registerTables(spark: SparkSession): Unit = {
-    register(spark, "bronze_transactions", bronze)
-    register(spark, "silver_transactions", silver)
+    register(spark, "bronze_transactions", bronze, Schemas.bronze)
+    register(spark, "silver_transactions", silver, Schemas.silver)
   }
 
-  /** Register one zone as `name`. On a Hive-backed session
-    * (`LakeCatalog.session`) it becomes a persistent EXTERNAL table with
-    * crawled partitions that survives JVM restarts; on the default in-memory
-    * catalog a session temp view. Either way `spark.table(name)` resolves. */
-  private[graft] def register(spark: SparkSession, name: String, path: String): Unit =
-    if (LakeCatalog.isHive(spark)) LakeCatalog.registerExternal(spark, name, path)
-    else spark.read.parquet(path).createOrReplaceTempView(name)
+  /** Register one zone as `name`, read by its contract `schema`. On a
+    * Hive-backed session (`LakeCatalog.session`) it becomes a persistent
+    * EXTERNAL table with crawled partitions that survives JVM restarts; on
+    * the default in-memory catalog a session temp view. Either way
+    * `spark.table(name)` resolves. The contract schema means no footer
+    * inference job, and a zone with no data files (an empty partitioned
+    * write leaves only `_SUCCESS`) still reads as an empty table. */
+  private[graft] def register(spark: SparkSession, name: String, path: String,
+      schema: StructType): Unit =
+    if (LakeCatalog.isHive(spark))
+      LakeCatalog.registerExternal(spark, name, path, Some(schema), Seq("txn_date"))
+    else spark.read.schema(schema).parquet(path).createOrReplaceTempView(name)
 }
 
 /** Helpers for the driver-provided star-schema testdata (TESTDATA.md). */

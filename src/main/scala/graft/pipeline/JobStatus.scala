@@ -14,6 +14,9 @@ import org.apache.spark.sql.SparkSession
   */
 object JobStatus {
 
+  /** The local property Spark shows as a job's description. */
+  val JobDescription = "spark.job.description"
+
   final case class StageReport(stage: String, status: String, startMs: Long,
       durationMs: Long, error: Option[String], metricsJson: Option[String],
       attempt: Int = 1) {
@@ -75,8 +78,22 @@ object JobStatus {
       * retried: a failure in metrics mapping or artifact writing after the
       * body succeeded propagates without re-executing the stage (re-running
       * committed data work because a report write hiccuped would be worse
-      * than the missing report). */
+      * than the missing report).
+      *
+      * Every Spark job the stage starts carries the stage name as its job
+      * description, a thread-local property, so stages that run at the same
+      * time on different threads keep their jobs apart; the caller's
+      * description is restored afterwards. */
     def stageWithMetrics[T](name: String)(body: => T)(
+        metrics: T => Option[String]): T = {
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty(JobDescription)
+      sc.setJobDescription(name)
+      try attempts(name)(body)(metrics)
+      finally sc.setLocalProperty(JobDescription, outer)
+    }
+
+    private def attempts[T](name: String)(body: => T)(
         metrics: T => Option[String]): T = {
       clearAttemptArtifacts(name) // a re-run must not inherit a stale trail
       var attempt = 1

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.io.Zones
 
@@ -69,13 +71,69 @@ class GoldenE2ESpec extends SparkSpec {
     assert(spark.read.parquet(zones.auditInvalid).count() == 7)
   }
 
+  test("all-invalid input: empty silver zone, gold tables written with 0 rows") {
+    val zones = lake("graft-all-invalid", graft.gen.FixtureGen.Config(
+      days = 1, rowsPerDay = 50, invalidRate = 0.0, seed = 7))
+    // every currency becomes ZZZ, so every row fails silver validation
+    val csv = Files.walk(java.nio.file.Paths.get(zones.raw))
+      .filter(_.toString.endsWith(".csv")).findFirst().get
+    val lines = Files.readAllLines(csv).asScala.toSeq
+    Files.write(csv, (lines.head +: lines.tail.map { l =>
+      l.split(",", -1).updated(4, "ZZZ").mkString(",")
+    }).asJava)
+    val res = Runner.run(spark, zones, mode = "overwrite", runDate = "2025-08-03")
+    assert((res.rawRows, res.bronzeRows, res.silverRows, res.invalidRows) ==
+      ((50L, 50L, 0L, 50L)))
+    assert(spark.read.parquet(zones.auditInvalid).count() == 50)
+    for (t <- Seq("merchant_daily_kpis", "daily_totals"))
+      assert(spark.read.parquet(s"${zones.gold}/$t").count() == 0, t)
+  }
+
+  test("bronze and silver footers carry their contract schema") {
+    // the zones are registered by Schemas.bronze/silver without reading a
+    // footer, so a column a transform adds must be added to Schemas too
+    val zones = lake("graft-contract", graft.gen.FixtureGen.Config())
+    Runner.run(spark, zones, mode = "overwrite", runDate = "2025-08-03")
+    def fields(t: org.apache.spark.sql.types.StructType) =
+      t.fields.map(f => (f.name, f.dataType)).toSeq
+    for ((path, contract) <- Seq(zones.bronze -> graft.model.Schemas.bronze,
+        zones.silver -> graft.model.Schemas.silver)) {
+      val footer = spark.read.parquet(path).schema
+      assert(fields(footer).sortBy(_._1) == fields(contract).sortBy(_._1), path)
+    }
+  }
+
+  test("a failed audit branch leaves gold run, then rethrows; nothing outlives run") {
+    val zones = lake("graft-audit-fails", graft.gen.FixtureGen.Config(
+      days = 1, rowsPerDay = 200, seed = 7))
+    // a regular file where the audit zone's directory must go: the audit
+    // write fails on both attempts
+    Files.writeString(java.nio.file.Paths.get(s"${zones.root}/audit"), "x")
+    val err = intercept[Exception] {
+      Runner.run(spark, zones, mode = "overwrite", runDate = "2025-08-03")
+    }
+    def status(stage: String): String = spark.read
+      .json(s"${zones.root}/jobstatus/${stage}_2025-08-03.json")
+      .collect().head.getAs[String]("status")
+    assert(status("audit") == "FAILED")
+    assert(status("gold") == "SUCCESS")
+    assert(!new java.io.File(s"${zones.root}/jobstatus/audit_summary_2025-08-03.json").exists())
+    val auditError = spark.read.json(s"${zones.root}/jobstatus/audit_2025-08-03.json")
+      .collect().head.getAs[String]("error")
+    assert(auditError == s"${err.getClass.getName}: ${Option(err.getMessage).getOrElse("")}")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.isAlive && t.getName.startsWith("graft-runner")))
+  }
+
   test("job ratchet: one seed-42 run takes every count from its own scans") {
     val zones = lake("graft-jobs", graft.gen.FixtureGen.Config())
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
+        descriptions.add(String.valueOf(
+          s.properties.getProperty(JobStatus.JobDescription))): Unit
       }
     }
     org.apache.spark.SpecBus.drain(spark.sparkContext)
@@ -84,8 +142,13 @@ class GoldenE2ESpec extends SparkSpec {
       Runner.run(spark, zones, mode = "overwrite", runDate = "2025-08-03")
       org.apache.spark.SpecBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
-    // re-reading the zones for the Result counts (9 jobs) or aggregating
-    // bronze a second time for the DQ summary (2) would break this
-    assert(jobs.get() <= 12, s"Runner.run took ${jobs.get()} jobs")
+    val jobs = descriptions.asScala.toSeq
+    // re-reading the zones for the Result counts (9 jobs), aggregating
+    // bronze a second time for the DQ summary (2) or inferring a zone's
+    // schema from its footers (1 per registration) would break this
+    assert(jobs.size <= 10, s"Runner.run took ${jobs.size} jobs")
+    // stages overlap in time, so each job must name its stage itself
+    val stages = Set("bronze", "silver", "audit", "audit_summary", "gold")
+    assert(jobs.forall(stages), s"jobs outside a stage: $jobs")
   }
 }
