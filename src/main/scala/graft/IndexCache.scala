@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * that q104/q105 exercise through the catalog.
   *
   * The BM25 postings index persists as parquet under `target/graft_idx/`
-  * and survives across JVMs; a sidecar doc-count marker invalidates it if
-  * the corpus changes (cheap metadata count, no column scan). The IVF
+  * and survives across JVMs; a sidecar [[contentStamp]] marker invalidates
+  * it if the corpus changes (file metadata only, no Spark job). The IVF
   * vector index persists through the session catalog ([[graft.similarity.VectorIndex]]
   * needs `bucketBy`, which is table-only), so it is built at most once per
   * (session, source dir) and reused by every probe in that session —
@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   */
 object IndexCache {
 
-  private def key(sfDir: String): String =
+  private[graft] def key(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_").stripSuffix("_")
 
   /** Metadata-only content fingerprint of a source table: xor-fold of
@@ -61,20 +61,17 @@ object IndexCache {
     * bench/verify query loop is sequential, but specs may share a session. */
   def ensure(spark: SparkSession, sfDir: String): (String, String) = synchronized {
     val pRoot = postingsRoot(sfDir)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val nDocs = docs.count()
-    buildOnce(spark, pRoot, "_GRAFT_N_DOCS",
-        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}") {
-      graft.text.PostingsIndex.build(docs, pRoot)
+    buildOnce(spark, pRoot, s"$sfDir/documents.parquet", "postings1") {
+      graft.text.PostingsIndex.build(
+        spark.read.parquet(s"$sfDir/documents.parquet"), pRoot)
     }
     val vName = vectorIndexName(sfDir)
     // The cells/centroids tables live in the session catalog, so a
     // sidecar marker under this cache's namespace carries the stamp —
     // existence alone let a same-session embeddings rewrite serve stale
     // cells to q105/q114/q168/q207.
-    buildOnce(spark, cacheDir(sfDir), "_GRAFT_VEC_STAMP",
-        contentStamp(s"$sfDir/embeddings.parquet").toString,
-        Seq(s"${vName}_centroids", s"${vName}_cells")) {
+    buildOnce(spark, s"${cacheDir(sfDir)}/ivf", s"$sfDir/embeddings.parquet",
+        "ivf1", Seq(s"${vName}_centroids", s"${vName}_cells")) {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select("vec_id", "embedding")
       graft.similarity.VectorIndex.build(emb, vName)
@@ -91,9 +88,8 @@ object IndexCache {
     * freshness as the vector index. */
   def ensureSubstrIndex(spark: SparkSession, sfDir: String): String = synchronized {
     val name = substrIndexName(sfDir)
-    buildOnce(spark, cacheDir(sfDir), "_GRAFT_SUBSTR_STAMP",
-        s"${contentStamp(s"$sfDir/documents.parquet")}:substr2",
-        Seq(s"${name}_windows")) {
+    buildOnce(spark, s"${cacheDir(sfDir)}/substr", s"$sfDir/documents.parquet",
+        "substr2", Seq(s"${name}_windows")) {
       val base = spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(!graft.dedup.DedupQueries.isDelta)
       graft.dedup.SubstrIndex.build(base, name)
@@ -127,9 +123,8 @@ object IndexCache {
     * content-fingerprint freshness discipline as the IVF index. */
   def ensurePq(spark: SparkSession, sfDir: String): String = synchronized {
     val name = pqIndexName(sfDir)
-    buildOnce(spark, cacheDir(sfDir), "_GRAFT_PQ_STAMP",
-        contentStamp(s"$sfDir/embeddings.parquet").toString,
-        Seq(s"${name}_codebook", s"${name}_codes")) {
+    buildOnce(spark, s"${cacheDir(sfDir)}/pq", s"$sfDir/embeddings.parquet",
+        "pq1", Seq(s"${name}_codebook", s"${name}_codes")) {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select("vec_id", "embedding")
       graft.similarity.PqIndex.build(emb, name)
@@ -149,16 +144,13 @@ object IndexCache {
     * exist and are current for `sfDir`; returns the layout root. Same
     * build-once posture as [[ensure]]: the one-time clustered rewrite is
     * the amortized cost (a nightly OPTIMIZE at scale), the per-query cost
-    * is a driver-sized manifest read. Freshness rides a row-count marker
-    * like the postings index — the driver testdata is immutable, so the
-    * marker only exists to survive JVM churn without rebuilding. */
+    * is a driver-sized manifest read. Freshness rides the content-stamp
+    * marker like the postings index. */
   def ensureZLayout(spark: SparkSession, sfDir: String): String = synchronized {
     val root = zlayoutRoot(sfDir)
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val nRows = li.count()
-    buildOnce(spark, root, "_GRAFT_N_ROWS",
-        s"$nRows:${contentStamp(s"$sfDir/lineitem.parquet")}") {
-      graft.operators.ZOrderLayout.write(li,
+    buildOnce(spark, root, s"$sfDir/lineitem.parquet", "zlayout1") {
+      graft.operators.ZOrderLayout.write(
+        spark.read.parquet(s"$sfDir/lineitem.parquet"),
         org.apache.spark.sql.functions.col("l_partkey"),
         org.apache.spark.sql.functions.col("l_suppkey"),
         root, numFiles = 16)
@@ -185,10 +177,7 @@ object IndexCache {
     * arithmetic change retires the cache. */
   def ensureDedupPairs(spark: SparkSession, sfDir: String): String = synchronized {
     val root = dedupPairsRoot(sfDir)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val nDocs = docs.count()
-    buildOnce(spark, root, "_GRAFT_N_DOCS",
-        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:pairs1") {
+    buildOnce(spark, root, s"$sfDir/documents.parquet", "pairs1") {
       graft.dedup.DedupQueries.dedupMethodPairs(spark, sfDir)
         .coalesce(4).write.mode("overwrite").parquet(s"$root/pairs")
     }
@@ -208,11 +197,9 @@ object IndexCache {
     * precedent). */
   def ensureSetSim(spark: SparkSession, sfDir: String): String = synchronized {
     val root = setsimRoot(sfDir)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val nDocs = docs.count()
-    buildOnce(spark, root, "_GRAFT_N_DOCS",
-        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:setsim1") {
-      val base = graft.dedup.DedupQueries.hashedGramsOf(docs)
+    buildOnce(spark, root, s"$sfDir/documents.parquet", "setsim1") {
+      val base = graft.dedup.DedupQueries
+        .hashedGramsOf(spark.read.parquet(s"$sfDir/documents.parquet"))
         .select("doc_id", "grams_h", "n_grams")
         .filter(!graft.dedup.DedupQueries.isDelta)
       graft.dedup.SetSimIndex.build(base, root, tau = 0.5)
@@ -234,10 +221,7 @@ object IndexCache {
     * persisted copy is result-identical under both oracles. */
   def ensureJpegCorpus(spark: SparkSession, sfDir: String): String = synchronized {
     val root = jpegCorpusRoot(sfDir)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val nDocs = docs.count()
-    buildOnce(spark, root, "_GRAFT_N_DOCS",
-        s"$nDocs:${contentStamp(s"$sfDir/documents.parquet")}:jpeg1") {
+    buildOnce(spark, root, s"$sfDir/documents.parquet", "jpeg1") {
       graft.multimodal.Multimodal.jpegFromDocuments(spark, sfDir)
         .write.mode("overwrite").parquet(s"$root/media")
     }
@@ -277,11 +261,9 @@ object IndexCache {
 
   private def warcFixture(spark: SparkSession, sfDir: String, root: String,
       version: String, gzip: Boolean): String = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    buildOnce(spark, root, "_GRAFT_STAMP",
-        s"${docs.count()}:${contentStamp(s"$sfDir/documents.parquet")}:$version") {
+    buildOnce(spark, root, s"$sfDir/documents.parquet", version) {
       import org.apache.spark.sql.functions.col
-      val pages = docs.select(
+      val pages = spark.read.parquet(s"$sfDir/documents.parquet").select(
         col("doc_id").as("page_id"),
         graft.text.UrlOps.syntheticUrl(col("doc_id")).as("url"),
         graft.text.HtmlExtract.syntheticHtml(col("doc_id"), col("text"))
@@ -295,17 +277,21 @@ object IndexCache {
   private def cacheDir(sfDir: String): String = s"target/graft_idx/${key(sfDir)}"
 
   /** The build-once protocol every cached artifact shares: run `build`
-    * unless `dir/marker` holds `stamp` and every catalog table in
-    * `tables` exists, then write `stamp` there. Before the build, each
+    * unless `dir/_GRAFT_STAMP` holds `<contentStamp(source)>:<version>`
+    * and every catalog table in `tables` exists, then write that stamp
+    * there. The content stamp retires the artifact on any rewrite of
+    * `source`; bump `version` to retire it when the BUILD changes. Each
+    * artifact owns its `dir`. Before the build, each
     * of `tables` is dropped and its warehouse directory cleared: a
     * previous JVM may have left a managed-table directory while this
     * session's in-memory catalog has no entry, and saveAsTable would
     * then fail with locationAlreadyExists (the names are derived, so the
     * locations are this cache's own). */
   private[graft] def buildOnce(spark: SparkSession, dir: String,
-      marker: String, stamp: String, tables: Seq[String] = Nil)(
+      source: String, version: String, tables: Seq[String] = Nil)(
       build: => Unit): Unit = {
-    val path = java.nio.file.Paths.get(dir, marker)
+    val path = java.nio.file.Paths.get(dir, "_GRAFT_STAMP")
+    val stamp = s"${contentStamp(source)}:$version"
     val fresh = java.nio.file.Files.isRegularFile(path) &&
       scala.util.Try(java.nio.file.Files.readString(path).trim == stamp)
         .getOrElse(false) && tables.forall(spark.catalog.tableExists)

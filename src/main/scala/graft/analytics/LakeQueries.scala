@@ -21,11 +21,9 @@ object LakeQueries {
   /** Per-SF scratch dir for queries that exercise WRITE paths (JSON
     * interchange, snapshots). Deterministic per source dir so re-runs
     * overwrite their own output; sibling of IndexCache's layout. */
-  private def scratch(sfDir: String, kind: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
-    new java.io.File(s"target/graft_scratch/$kind/$key").getAbsolutePath
-  }
+  private def scratch(sfDir: String, kind: String): String =
+    new java.io.File(s"target/graft_scratch/$kind/${graft.IndexCache.key(sfDir)}")
+      .getAbsolutePath
 
   // ── q122/q126 shared SCD2 timeline SQL (oracle side) ─────────────────
   // One change row per (custkey, orderdate): the min-orderkey order's

@@ -1,8 +1,100 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
+/** graft's native SQL functions, kept once as a table of Spark's own
+  * function descriptions `(FunctionIdentifier, ExpressionInfo,
+  * FunctionBuilder)`. Both session paths read this table:
+  *  - [[register]], in process, on whatever session the caller holds (the
+  *    query catalog's path; idempotent);
+  *  - [[GraftExtensions]], for sessions that infrastructure constructs.
+  *
+  * A builder's argument checks (arity, an integer literal `k`) therefore
+  * hold the same way on either path. */
+object GraftFunctions {
+
+  /** One table entry. `usage` follows the name in the `ExpressionInfo`
+    * usage text and in the arity error. */
+  private def fn[T <: Expression](name: String, arity: Int, usage: String)(
+      build: Seq[Expression] => T)(implicit ct: ClassTag[T])
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(ct.runtimeClass.getName, null, name, name + usage, ""),
+      { exprs =>
+        require(exprs.length == arity, name + usage)
+        build(exprs)
+      })
+
+  val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_dot", 2, "(a, b) takes two arrays")(e => DotProduct(e(0), e(1))),
+    fn("graft_intersect_card", 2, "(a, b) takes two arrays")(
+      e => SortedLongIntersectCard(e(0), e(1))),
+    fn("graft_md5_sig16", 1, "(gram) takes one STRING")(e => Md5Sig16(e(0))),
+    fn("graft_cdc_chunks", 1, "(text) takes one STRING")(e => CdcChunks(e(0))),
+    fn("graft_winnow_fps", 1, "(tokens) takes one ARRAY<STRING>")(e => WinnowFps(e(0))),
+    fn("graft_bpe_apply", 2,
+      "(tk, merges) takes a symbol array and a literal merge array")(
+      e => BpeApplyMerges(e(0), e(1))),
+    fn("graft_byte_bpe_encode", 2,
+      "(word, merges) takes a word and a literal merge array")(
+      e => ByteBpeEncode(e(0), e(1))),
+    fn("graft_zorder", 2, "(a, b) takes two BIGINT keys")(e => ZOrder2(e(0), e(1))),
+    fn("graft_det_ln_long", 1, "(x) takes one BIGINT")(e => DetLnLong(e(0))),
+    fn("graft_det_exp", 1, "(x) takes one DOUBLE")(e => DetExp(e(0))),
+    fn("graft_det_ln_ge1", 1, "(w) takes one DOUBLE")(e => DetLnDoubleGe1(e(0))),
+    fn("graft_bloom_contains", 2,
+      "(key, bloomBytes) takes a key and a foldable binary sketch") { e =>
+      require(e(1).foldable, "graft_bloom_contains: the sketch argument must be " +
+        "a literal (fold the serialized BloomFilter in as lit(bytes))")
+      BloomMightContain(e(0), e(1).eval().asInstanceOf[Array[Byte]])
+    },
+    fn("graft_kll_agg", 2, "(x, k) takes a value and a literal k")(
+      e => KllSketchAgg(e(0), foldableInt(e(1), "graft_kll_agg"))),
+    fn("graft_kll_union", 2, "(blob, k) takes a blob and a literal k")(
+      e => KllUnionAgg(e(0), foldableInt(e(1), "graft_kll_union"))),
+    fn("graft_kll_quantiles", 2,
+      "(blob, ranks) takes a blob and an ARRAY<DOUBLE> of ranks")(
+      e => KllQuantiles(e(0), e(1))),
+    fn("graft_kll_n", 1, "(blob) takes one blob")(e => KllN(e(0))),
+    fn("graft_theta_agg", 2, "(x, nomEntries) takes a value and a literal nomEntries")(
+      e => ThetaSketchAgg(e(0), foldableInt(e(1), "graft_theta_agg"))),
+    fn("graft_theta_union", 2,
+      "(blob, nomEntries) takes a blob and a literal nomEntries")(
+      e => ThetaUnionAgg(e(0), foldableInt(e(1), "graft_theta_union"))),
+    fn("graft_theta_intersect", 2,
+      "(blob, nomEntries) takes a blob and a literal nomEntries")(
+      e => ThetaIntersectAgg(e(0), foldableInt(e(1), "graft_theta_intersect"))),
+    fn("graft_theta_intersect2", 2, "(a, b) takes two blobs")(
+      e => ThetaIntersect2(e(0), e(1))),
+    fn("graft_theta_anotb", 2, "(a, b) takes two blobs")(e => ThetaANotB(e(0), e(1))),
+    fn("graft_theta_estimate", 1, "(blob) takes one blob")(e => ThetaEstimate(e(0))),
+    fn("graft_nfc", 1, "(s) takes one STRING")(e => NfcNormalize(e(0))),
+    fn("graft_nfkc", 1, "(s) takes one STRING")(e => NfkcNormalize(e(0))))
+
+  /** Extract a foldable INT parameter (e.g. a sketch's k) at plan time. */
+  private def foldableInt(e: Expression, fn: String): Int = {
+    require(e.foldable, s"$fn: the k argument must be a literal")
+    e.eval() match {
+      case i: Int => i
+      case l: Long if l.isValidInt => l.toInt
+      case other => throw new IllegalArgumentException(
+        s"$fn: k must be an integer literal, got $other")
+    }
+  }
+
+  /** Register every table entry on `spark` that it does not yet resolve. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    descriptions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+  }
+}
 
 /** SparkSessionExtensions entry point: makes graft's native expressions
   * available to ANY session via config, with no code changes:
@@ -13,190 +105,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * The same builders back [[GraftFunctions.register]], which is the
-  * in-process path used by the query catalog; this class is the deployment
-  * path for clusters where the session is constructed by infrastructure.
-  */
+  * It injects the same [[GraftFunctions.descriptions]] table that
+  * [[GraftFunctions.register]] registers in process. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_dot(a, b) takes two arrays")
-        DotProduct(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_intersect_card"),
-      new ExpressionInfo(classOf[SortedLongIntersectCard].getName, "graft_intersect_card"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_intersect_card(a, b) takes two arrays")
-        SortedLongIntersectCard(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_sig16"),
-      new ExpressionInfo(classOf[Md5Sig16].getName, "graft_md5_sig16"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_md5_sig16(gram) takes one STRING")
-        Md5Sig16(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "graft_cdc_chunks"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_cdc_chunks(text) takes one STRING")
-        CdcChunks(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "graft_winnow_fps"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_winnow_fps(tokens) takes one ARRAY<STRING>")
-        WinnowFps(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_apply"),
-      new ExpressionInfo(classOf[BpeApplyMerges].getName, "graft_bpe_apply"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          "graft_bpe_apply(tk, merges) takes a symbol array and a literal merge array")
-        BpeApplyMerges(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_byte_bpe_encode"),
-      new ExpressionInfo(classOf[ByteBpeEncode].getName, "graft_byte_bpe_encode"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          "graft_byte_bpe_encode(word, merges) takes a word and a literal merge array")
-        ByteBpeEncode(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_det_ln_long"),
-      new ExpressionInfo(classOf[DetLnLong].getName, "graft_det_ln_long"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_det_ln_long(x) takes one BIGINT")
-        DetLnLong(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_det_exp"),
-      new ExpressionInfo(classOf[DetExp].getName, "graft_det_exp"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_det_exp(x) takes one DOUBLE")
-        DetExp(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_det_ln_ge1"),
-      new ExpressionInfo(classOf[DetLnDoubleGe1].getName, "graft_det_ln_ge1"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_det_ln_ge1(w) takes one DOUBLE")
-        DetLnDoubleGe1(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(classOf[ZOrder2].getName, "graft_zorder"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_zorder(a, b) takes two BIGINT keys")
-        ZOrder2(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_agg"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "graft_kll_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "graft_kll_agg(x, k) takes a value and a literal k")
-        KllSketchAgg(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_union"),
-      new ExpressionInfo(classOf[KllUnionAgg].getName, "graft_kll_union"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "graft_kll_union(blob, k) takes a blob and a literal k")
-        KllUnionAgg(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_quantiles"),
-      new ExpressionInfo(classOf[KllQuantiles].getName, "graft_kll_quantiles"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          "graft_kll_quantiles(blob, ranks) takes a blob and an ARRAY<DOUBLE> of ranks")
-        KllQuantiles(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_n"),
-      new ExpressionInfo(classOf[KllN].getName, "graft_kll_n"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_kll_n(blob) takes one blob")
-        KllN(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_contains"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          "graft_bloom_contains(key, bloomBytes) takes a key and a foldable binary sketch")
-        require(exprs(1).foldable,
-          "graft_bloom_contains: the sketch argument must be a literal")
-        BloomMightContain(exprs(0), exprs(1).eval().asInstanceOf[Array[Byte]])
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_agg"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "graft_theta_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "graft_theta_agg(x, nomEntries) takes a value and a literal nomEntries")
-        ThetaSketchAgg(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_union"),
-      new ExpressionInfo(classOf[ThetaUnionAgg].getName, "graft_theta_union"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "graft_theta_union(blob, nomEntries) takes a blob and a literal nomEntries")
-        ThetaUnionAgg(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_intersect"),
-      new ExpressionInfo(classOf[ThetaIntersectAgg].getName, "graft_theta_intersect"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "graft_theta_intersect(blob, nomEntries) takes a blob and a literal nomEntries")
-        ThetaIntersectAgg(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_intersect2"),
-      new ExpressionInfo(classOf[ThetaIntersect2].getName, "graft_theta_intersect2"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_theta_intersect2(a, b) takes two blobs")
-        ThetaIntersect2(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_anotb"),
-      new ExpressionInfo(classOf[ThetaANotB].getName, "graft_theta_anotb"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_theta_anotb(a, b) takes two blobs")
-        ThetaANotB(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "graft_theta_estimate"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_theta_estimate(blob) takes one blob")
-        ThetaEstimate(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_nfc(s) takes one STRING")
-        NfcNormalize(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfkc"),
-      new ExpressionInfo(classOf[NfkcNormalize].getName, "graft_nfkc"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_nfkc(s) takes one STRING")
-        NfkcNormalize(exprs(0))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.descriptions.foreach(ext.injectFunction)
 }

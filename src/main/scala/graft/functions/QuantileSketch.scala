@@ -30,8 +30,8 @@ import org.apache.spark.sql.types._
   * error (k=2048 → ~0.6% rank error) and, below ~k retained values, is
   * EXACT (no compaction has happened) — KllSketchSpec pins that regime.
   *
-  * Registered SQL surface (via [[GraftFunctions.register]] /
-  * [[GraftExtensions]]):
+  * Registered SQL surface (entries of the one [[GraftFunctions.descriptions]]
+  * table, which [[GraftFunctions.register]] and [[GraftExtensions]] both read):
   *  - `graft_kll_agg(x, k)`        → binary sketch blob (aggregate)
   *  - `graft_kll_union(blob, k)`   → binary sketch blob (aggregate)
   *  - `graft_kll_quantiles(blob, array(r1, r2, ...))` → array<double>

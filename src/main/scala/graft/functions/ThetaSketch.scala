@@ -27,8 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * snapshot containment — by set algebra over sketch rows. The raw table
   * is touched once; every subsequent question is metadata-sized.
   *
-  * Registered SQL surface (via [[GraftFunctions.register]] /
-  * [[GraftExtensions]]):
+  * Registered SQL surface (entries of the one [[GraftFunctions.descriptions]]
+  * table, which [[GraftFunctions.register]] and [[GraftExtensions]] both read):
   *  - `graft_theta_agg(x, nomEntries)`   → binary blob (aggregate)
   *  - `graft_theta_union(blob, nomEntries)` → binary blob (aggregate)
   *  - `graft_theta_intersect2(a, b)`     → binary blob (scalar pair op)

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -136,136 +134,4 @@ case class SortedLongIntersectCard(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedLongIntersectCard =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session registration for graft's native SQL functions. Idempotent —
-  * query functions call this on whatever session the driver hands them. */
-object GraftFunctions {
-  private val builders: Map[String, Seq[Expression] => Expression] = Map(
-    "graft_dot" -> { exprs =>
-      require(exprs.length == 2, "graft_dot(a, b) takes two arrays")
-      DotProduct(exprs(0), exprs(1))
-    },
-    "graft_intersect_card" -> { exprs =>
-      require(exprs.length == 2, "graft_intersect_card(a, b) takes two arrays")
-      SortedLongIntersectCard(exprs(0), exprs(1))
-    },
-    "graft_md5_sig16" -> { exprs =>
-      require(exprs.length == 1, "graft_md5_sig16(gram) takes one STRING")
-      Md5Sig16(exprs(0))
-    },
-    "graft_cdc_chunks" -> { exprs =>
-      require(exprs.length == 1, "graft_cdc_chunks(text) takes one STRING")
-      CdcChunks(exprs(0))
-    },
-    "graft_winnow_fps" -> { exprs =>
-      require(exprs.length == 1, "graft_winnow_fps(tokens) takes one ARRAY<STRING>")
-      WinnowFps(exprs(0))
-    },
-    "graft_bpe_apply" -> { exprs =>
-      require(exprs.length == 2,
-        "graft_bpe_apply(tk, merges) takes a symbol array and a literal merge array")
-      BpeApplyMerges(exprs(0), exprs(1))
-    },
-    "graft_byte_bpe_encode" -> { exprs =>
-      require(exprs.length == 2,
-        "graft_byte_bpe_encode(word, merges) takes a word and a literal merge array")
-      ByteBpeEncode(exprs(0), exprs(1))
-    },
-    "graft_zorder" -> { exprs =>
-      require(exprs.length == 2, "graft_zorder(a, b) takes two BIGINT keys")
-      ZOrder2(exprs(0), exprs(1))
-    },
-    "graft_det_ln_long" -> { exprs =>
-      require(exprs.length == 1, "graft_det_ln_long(x) takes one BIGINT")
-      DetLnLong(exprs(0))
-    },
-    "graft_det_exp" -> { exprs =>
-      require(exprs.length == 1, "graft_det_exp(x) takes one DOUBLE")
-      DetExp(exprs(0))
-    },
-    "graft_det_ln_ge1" -> { exprs =>
-      require(exprs.length == 1, "graft_det_ln_ge1(w) takes one DOUBLE")
-      DetLnDoubleGe1(exprs(0))
-    },
-    "graft_bloom_contains" -> { exprs =>
-      require(exprs.length == 2,
-        "graft_bloom_contains(key, bloomBytes) takes a key and a foldable binary sketch")
-      require(exprs(1).foldable,
-        "graft_bloom_contains: the sketch argument must be a literal (fold the " +
-          "serialized BloomFilter in as lit(bytes))")
-      BloomMightContain(exprs(0),
-        exprs(1).eval().asInstanceOf[Array[Byte]])
-    },
-    "graft_kll_agg" -> { exprs =>
-      require(exprs.length == 2, "graft_kll_agg(x, k) takes a value and a literal k")
-      KllSketchAgg(exprs(0), foldableInt(exprs(1), "graft_kll_agg"))
-    },
-    "graft_kll_union" -> { exprs =>
-      require(exprs.length == 2, "graft_kll_union(blob, k) takes a blob and a literal k")
-      KllUnionAgg(exprs(0), foldableInt(exprs(1), "graft_kll_union"))
-    },
-    "graft_kll_quantiles" -> { exprs =>
-      require(exprs.length == 2,
-        "graft_kll_quantiles(blob, ranks) takes a blob and an ARRAY<DOUBLE> of ranks")
-      KllQuantiles(exprs(0), exprs(1))
-    },
-    "graft_kll_n" -> { exprs =>
-      require(exprs.length == 1, "graft_kll_n(blob) takes one blob")
-      KllN(exprs(0))
-    },
-    "graft_theta_agg" -> { exprs =>
-      require(exprs.length == 2,
-        "graft_theta_agg(x, nomEntries) takes a value and a literal nomEntries")
-      ThetaSketchAgg(exprs(0), foldableInt(exprs(1), "graft_theta_agg"))
-    },
-    "graft_theta_union" -> { exprs =>
-      require(exprs.length == 2,
-        "graft_theta_union(blob, nomEntries) takes a blob and a literal nomEntries")
-      ThetaUnionAgg(exprs(0), foldableInt(exprs(1), "graft_theta_union"))
-    },
-    "graft_theta_intersect" -> { exprs =>
-      require(exprs.length == 2,
-        "graft_theta_intersect(blob, nomEntries) takes a blob and a literal nomEntries")
-      ThetaIntersectAgg(exprs(0), foldableInt(exprs(1), "graft_theta_intersect"))
-    },
-    "graft_theta_intersect2" -> { exprs =>
-      require(exprs.length == 2, "graft_theta_intersect2(a, b) takes two blobs")
-      ThetaIntersect2(exprs(0), exprs(1))
-    },
-    "graft_theta_anotb" -> { exprs =>
-      require(exprs.length == 2, "graft_theta_anotb(a, b) takes two blobs")
-      ThetaANotB(exprs(0), exprs(1))
-    },
-    "graft_theta_estimate" -> { exprs =>
-      require(exprs.length == 1, "graft_theta_estimate(blob) takes one blob")
-      ThetaEstimate(exprs(0))
-    },
-    "graft_nfc" -> { exprs =>
-      require(exprs.length == 1, "graft_nfc(s) takes one STRING")
-      NfcNormalize(exprs(0))
-    },
-    "graft_nfkc" -> { exprs =>
-      require(exprs.length == 1, "graft_nfkc(s) takes one STRING")
-      NfkcNormalize(exprs(0))
-    })
-
-  /** Extract a foldable INT parameter (e.g. a sketch's k) at plan time. */
-  private def foldableInt(e: Expression, fn: String): Int = {
-    require(e.foldable, s"$fn: the k argument must be a literal")
-    e.eval() match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"$fn: k must be an integer literal, got $other")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 }

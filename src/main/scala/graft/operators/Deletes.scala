@@ -36,21 +36,10 @@ object Deletes {
     val spark = base.sparkSession
     val k = keys.select(keyCols.map(c => col(c).as(s"__k_$c")): _*).distinct()
     val keyMatch = keyCols.map(c => base(c) <=> k(s"__k_$c")).reduce(_ && _)
-    // partitions holding at least one doomed key — collected as METADATA
-    // (distinct partition values), raw + writer-string form as in Upsert
-    val touched: Array[(Any, String)] = base.join(k, keyMatch, "left_semi")
-      .select(col(partCol), col(partCol).cast("string"))
-      .distinct()
-      .collect().map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1)))
+    // partitions holding at least one doomed key
+    val touched = PartitionRewrite.touched(base.join(k, keyMatch, "left_semi"), partCol)
     if (touched.isEmpty) return 0L
-    val touchedVals = touched.map(_._1)
-    val hasNull = touchedVals.contains(null)
-    val nonNull = touchedVals.filter(_ != null)
-    val inTouched =
-      (if (nonNull.nonEmpty) col(partCol).isin(nonNull.toIndexedSeq: _*)
-       else lit(false)) ||
-      (if (hasNull) col(partCol).isNull else lit(false))
-    val slice = base.filter(inTouched)
+    val slice = base.filter(PartitionRewrite.inTouched(touched, partCol))
     val sliceCount = slice.count()
     val sliceMatch = keyCols.map(c => slice(c) <=> k(s"__k_$c")).reduce(_ && _)
     val survivors = slice.join(k, sliceMatch, "left_anti")

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
-/** Shared bottom half of the touched-partition rewrite operators
-  * ([[Upsert.writeMerged]], [[Deletes.purgeKeys]]): materialize the
+/** Shared touched-partition code of the rewrite operators
+  * ([[Upsert.writeMerged]], [[Deletes.purgeKeys]]): collect the touched
+  * partition values, prune the base scan to them, materialize the
   * resolved slice to a staging dir, dynamic-partition-overwrite exactly
   * the touched partitions, delete partitions the rewrite EMPTIED (dynamic
   * overwrite only replaces partitions present in the output), and clean
@@ -14,6 +16,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[operators] object PartitionRewrite {
 
+  /** The distinct `partCol` values of `parts`, collected to the driver as
+    * METADATA (days-scale per batch). Each is kept BOTH raw (for
+    * [[inTouched]]) and in Spark's cast-to-string form — the SAME cast the
+    * partition writer uses for dir names, so timestamp values don't render
+    * as Timestamp.toString ("...00:00:00.0") and miss the on-disk dir in
+    * the emptied-partition cleanup. */
+  def touched(parts: DataFrame, partCol: String): Array[(Any, String)] =
+    parts.select(col(partCol), col(partCol).cast("string"))
+      .distinct()
+      .collect().map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1)))
+
+  /** `partCol IN touched`, null-aware: a NULL partition value (the default
+    * partition) is kept, never silently lost. */
+  def inTouched(touched: Array[(Any, String)], partCol: String): Column = {
+    val vals = touched.map(_._1)
+    val nonNull = vals.filter(_ != null)
+    (if (nonNull.nonEmpty) col(partCol).isin(nonNull.toIndexedSeq: _*) else lit(false)) ||
+      (if (vals.contains(null)) col(partCol).isNull else lit(false))
+  }
+
   /** Overwrite `dest`'s touched partitions with `resolved`.
     * @param touchedStrings the touched partition values in Spark's
     *   cast-to-string form (the same form the partition writer uses for
@@ -21,7 +43,6 @@ private[operators] object PartitionRewrite {
     * @return number of rows in the staged (committed) output slice */
   def overwriteTouched(spark: SparkSession, resolved: DataFrame,
       touchedStrings: Array[String], partCol: String, dest: String): Long = {
-    import org.apache.spark.sql.functions.col
     val staging = dest.stripSuffix("/") + ".__graft_merge_staging_" +
       java.util.UUID.randomUUID().toString.take(8)
     val stagingPath = new org.apache.hadoop.fs.Path(staging)

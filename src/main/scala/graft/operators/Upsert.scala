@@ -69,29 +69,16 @@ object Upsert {
     // copy, so its old partition rewrites too). NULL-SAFE key equality:
     // latestWins groups NULL keys together, so the touched set must too.
     val keyMatch = keyCols.map(c => base(c) <=> updKeys(s"__k_$c")).reduce(_ && _)
-    // collect each touched value BOTH raw (for the pruning filter) and in
-    // Spark's cast-to-string form — the SAME cast the partition writer uses
-    // for dir names, so timestamp values don't render as Timestamp.toString
-    // ("...00:00:00.0") and miss the on-disk dir in the cleanup below
-    val touched: Array[(Any, String)] = updates.select(col(partCol))
-      .union(base.join(updKeys, keyMatch, "left_semi").select(col(partCol)))
-      .distinct()
-      .select(col(partCol), col(partCol).cast("string"))
-      .collect().map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1)))
+    val touched = PartitionRewrite.touched(updates.select(col(partCol))
+      .union(base.join(updKeys, keyMatch, "left_semi").select(col(partCol))), partCol)
     if (touched.isEmpty) return // empty batch: nothing to do
-    val touchedVals = touched.map(_._1)
-    val hasNull = touchedVals.contains(null)
-    val nonNull = touchedVals.filter(_ != null)
-    val inTouched =
-      (if (nonNull.nonEmpty) col(partCol).isin(nonNull.toIndexedSeq: _*)
-       else lit(false)) ||
-      (if (hasNull) col(partCol).isNull else lit(false))
     // resolve over only the affected slice of base — statically
     // partition-pruned scan, shuffle bounded by the batch footprint.
     // Staging/overwrite/emptied-partition semantics (why staging beats
     // persist(), unique staging names, failure-path preservation, the
     // moved-key emptied-partition cleanup) live in [[PartitionRewrite]].
-    val resolved = merged(base.filter(inTouched), updates, keyCols, orderCol)
+    val resolved = merged(base.filter(PartitionRewrite.inTouched(touched, partCol)),
+      updates, keyCols, orderCol)
     PartitionRewrite.overwriteTouched(
       spark, resolved, touched.map(_._2), partCol, dest)
     ()

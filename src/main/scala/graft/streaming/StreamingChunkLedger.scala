@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Pins
+
 /** Streaming chunk-ledger ingest — the continuous counterpart of q221's
   * standing content-defined-chunking ledger, for the crawl RE-FETCH
   * stream: pages arrive again and again (recrawls, mirrors, boilerplate
@@ -54,24 +56,25 @@ object StreamingChunkLedger {
       .start()
 
   private[streaming] def chunkBatch(batch: DataFrame, outPath: String,
-      ledgerPath: String): Unit = {
-    val (survivors, newChunks) = survivorsOf(batch, ledgerPath)
+      ledgerPath: String): Unit = Pins.scope { pins =>
+    val (survivors, newChunks) = survivorsOf(pins, batch, ledgerPath)
     // survivors FIRST: materializes the joins against the ledger listing
     // pinned at read() time, before ledgerPath gains this batch's files
     survivors.write.mode("append").parquet(outPath)
     newChunks.write.mode("append").parquet(ledgerPath)
   }
 
-  /** (survivor rows, this batch's NEW ledger rows). Callers must
-    * materialize survivors before appending the ledger rows. */
-  private[streaming] def survivorsOf(batch: DataFrame,
+  /** (survivor rows, this batch's NEW ledger rows), both reading a pin of
+    * `pins`. Callers must materialize survivors before appending the
+    * ledger rows. */
+  private[streaming] def survivorsOf(pins: Pins, batch: DataFrame,
       ledgerPath: String): (DataFrame, DataFrame) = {
     val spark = batch.sparkSession
     // pinned: the chunk table feeds the within-batch witness agg, the
     // per-doc stats AND the ledger append — the expensive narrow map
     // must run once (q221's pinning rule; chunks are hash+length rows)
-    val chunks = graft.dedup.DedupQueries.cdcChunkTable(
-      batch.select("doc_id", "text")).localCheckpoint(true)
+    val chunks = pins.checkpoint(graft.dedup.DedupQueries.cdcChunkTable(
+      batch.select("doc_id", "text")))
     // explicit schema via LedgerIO: an exists-but-fileless ledger dir
     // (crash between mkdir and the first part-file commit) must read as
     // empty, not wedge every restart on schema inference

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.Pins
+
 /** Streaming training-block packing — the continuous form of q94/q253's
   * final stage: an unbounded curated-doc feed is byte-BPE encoded under
   * a FROZEN tokenizer and cut into fixed B-token blocks that cross BOTH
@@ -80,30 +82,32 @@ object StreamingPackIngest {
     if (committed(s, cursorDir)) return // replay of a committed batch
     // a partial own cursor dir (crash mid-commit) must not feed the sum
     fs(s, cursorDir).delete(new org.apache.hadoop.fs.Path(cursorDir), true)
-    val perdoc = graft.text.TextQueries
-      .byteBpeDocTokens(batch.select("doc_id", "text"), merges)
-      .localCheckpoint(true) // feeds offsets AND the cursor total
-    val cursor = LedgerIO
-      .readOrEmpty(s, s"$outRoot/cursor", CursorSchema, recursive = true)
-      .agg(coalesce(sum("n"), lit(0L))).collect()(0).getLong(0)
-    val spans = graft.operators.GlobalOrder
-      .withRunningTotals(perdoc, Seq(col("doc_id")), col("n_tokens"))
-      .withColumn("tstart", col("tstart") + lit(cursor))
-      .withColumn("tend", col("tend") + lit(cursor))
-    spans
-      .withColumn("block_id", explode(sequence(
-        expr(s"tstart div ${blockTokens}L"),
-        expr(s"(tend - 1) div ${blockTokens}L"))))
-      .groupBy("block_id")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(least(col("tend"), (col("block_id") + 1) * blockTokens) -
-          greatest(col("tstart"), col("block_id") * blockTokens))
-          .as("block_tokens"))
-      .write.mode("overwrite").parquet(s"$outRoot/blocks/b$batchId")
-    val total = perdoc.agg(coalesce(sum("n_tokens"), lit(0L)))
-      .collect()(0).getLong(0)
-    import s.implicits._
-    Seq(total).toDF("n").write.mode("overwrite").parquet(cursorDir)
+    Pins.scope { pins =>
+      // pinned: feeds the offsets AND the cursor total
+      val perdoc = pins.checkpoint(graft.text.TextQueries
+        .byteBpeDocTokens(batch.select("doc_id", "text"), merges))
+      val cursor = LedgerIO
+        .readOrEmpty(s, s"$outRoot/cursor", CursorSchema, recursive = true)
+        .agg(coalesce(sum("n"), lit(0L))).collect()(0).getLong(0)
+      val spans = graft.operators.GlobalOrder
+        .withRunningTotals(perdoc, Seq(col("doc_id")), col("n_tokens"))
+        .withColumn("tstart", col("tstart") + lit(cursor))
+        .withColumn("tend", col("tend") + lit(cursor))
+      spans
+        .withColumn("block_id", explode(sequence(
+          expr(s"tstart div ${blockTokens}L"),
+          expr(s"(tend - 1) div ${blockTokens}L"))))
+        .groupBy("block_id")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(least(col("tend"), (col("block_id") + 1) * blockTokens) -
+            greatest(col("tstart"), col("block_id") * blockTokens))
+            .as("block_tokens"))
+        .write.mode("overwrite").parquet(s"$outRoot/blocks/b$batchId")
+      val total = perdoc.agg(coalesce(sum("n_tokens"), lit(0L)))
+        .collect()(0).getLong(0)
+      import s.implicits._
+      Seq(total).toDF("n").write.mode("overwrite").parquet(cursorDir)
+    }
   }
 
   /** The served view: per-block composition aggregated over all landed

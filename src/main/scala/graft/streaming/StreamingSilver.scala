@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.model.Schemas
 import graft.transform.{Audit, Silver}
 
 /** Structured Streaming variant of the SILVER stage — extends the streaming
@@ -24,15 +25,16 @@ import graft.transform.{Audit, Silver}
 object StreamingSilver {
 
   /** File-source stream over the BRONZE parquet zone (job-boundary parity:
-    * the batch silver job also reads materialized bronze, not raw). */
+    * the batch silver job also reads materialized bronze, not raw). Read
+    * by the bronze contract schema, like the batch registration: no footer
+    * inference job, and a bronze zone with no data files yet streams as
+    * empty. */
   def readBronzeStream(spark: SparkSession, bronzeDir: String,
-      maxFilesPerTrigger: Int = 10): DataFrame = {
-    val schema = spark.read.parquet(bronzeDir).schema
+      maxFilesPerTrigger: Int = 10): DataFrame =
     spark.readStream
-      .schema(schema)
+      .schema(Schemas.bronze)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(bronzeDir)
-  }
 
   /** Validation + audit split as one streaming stage: valid rows append to
     * the silver zone, rejects to the audit zone, both txn_date-partitioned

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Pins
 import graft.text.{HtmlExtract, TextClean, TextSignals, UrlOps}
 
 /** The crawl front door run CONTINUOUSLY — the streaming twin of
@@ -54,8 +55,10 @@ object StreamingWebCurate {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  private[streaming] def curateBatch(batch: DataFrame, outRoot: String,
-      maxPerDomain: Long, minQuality: Double, minJ: Double): Unit = {
+  /** One micro-batch through every stage. Its pins (the checkpointed
+    * stage frames) are released when the batch's appends have run. */
+  private[graft] def curateBatch(batch: DataFrame, outRoot: String,
+      maxPerDomain: Long, minQuality: Double, minJ: Double): Unit = Pins.scope { pins =>
     val spark = batch.sparkSession
     // explicit schema via LedgerIO: an exists-but-fileless ledger dir
     // (crash between mkdir and the first part-file commit) must read as
@@ -73,11 +76,10 @@ object StreamingWebCurate {
     // pinned: urlKept feeds the cap stage AND its own ledger append —
     // unpinned, the canonicalize window would re-run per consumer (the
     // q221/q182 pinning rule; frames here are batch-sized)
-    val urlKept = canon
+    val urlKept = pins.checkpoint(canon
       .withColumn("__rn", row_number().over(wUrl))
       .filter(col("__rn") === 1).drop("__rn")
-      .join(urlLedger, Seq("url_canon"), "left_anti")
-      .localCheckpoint(true)
+      .join(urlLedger, Seq("url_canon"), "left_anti"))
 
     // 2. domain cap: lifetime kept-count per canonical host
     val dom = urlKept.withColumn("domain", UrlOps.domain(col("url_canon")))
@@ -85,12 +87,12 @@ object StreamingWebCurate {
       dom.groupBy("domain").agg(count(lit(1)).as("n")))
       .groupBy("domain").agg(sum("n").as("prior_n"))
     val wDom = Window.partitionBy("domain").orderBy("page_id")
-    val capped = dom
+    // pinned: feeds the extract chain + the domain_counts append
+    val capped = pins.checkpoint(dom
       .withColumn("__dr", row_number().over(wDom))
       .join(priorCounts, Seq("domain"), "left_outer")
       .filter(coalesce(col("prior_n"), lit(0L)) + col("__dr") <= maxPerDomain)
-      .drop("__dr", "prior_n")
-      .localCheckpoint(true) // feeds extract chain + domain_counts append
+      .drop("__dr", "prior_n"))
 
     // 3. extract + repair; empty shells drop; html bytes stop here
     val texts = capped
@@ -112,11 +114,10 @@ object StreamingWebCurate {
     // pinned: fpKept feeds survivorsOf's three internal consumers
     // (grams, signatures, the anti-join base) plus the fp ledger append
     // — and pinning here caps the whole extract+quality chain at ONE run
-    val fpKept = fped
+    val fpKept = pins.checkpoint(fped
       .withColumn("__rn", row_number().over(wFp))
       .filter(col("__rn") === 1).drop("__rn")
-      .join(fpLedger, Seq("fp"), "left_anti")
-      .localCheckpoint(true)
+      .join(fpLedger, Seq("fp"), "left_anti"))
 
     // 6. near-dup dedup against the standing signature table
     val (survivors, sigRows) = StreamingDocIngest.survivorsOf(

@@ -98,6 +98,15 @@ class PinHygieneSpec extends SparkSpec {
       }
   }
 
+  test("one StreamingWebCurate.curateBatch call leaves no persisted RDD") {
+    val out = java.nio.file.Files.createTempDirectory("graft-pin-webcurate")
+    val before = allIds
+    graft.streaming.StreamingWebCurate.curateBatch(pages, out.toString, 3L, 1.0, 0.6)
+    assert(spark.read.parquet(s"$out/curated").count() > 0)
+    val leaked = allIds -- before
+    assert(leaked.isEmpty, s"a curateBatch call left persisted RDDs: $leaked")
+  }
+
   test("a scope whose body throws still releases every pin it took") {
     val before = allIds
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.gen.FixtureGen
+import graft.model.Schemas
 import graft.transform.{Audit, Silver}
 
 /** The streaming silver stage must agree row-for-row with the batch silver
@@ -46,5 +47,19 @@ class StreamingSilverSpec extends SparkSpec {
       s"$root/silver", s"$root/audit", s"$root/ckpt-silver")
     qs2.awaitTermination(60000)
     assert(spark.read.parquet(s"$root/silver").count() == batchSilver.count())
+  }
+
+  test("a bronze zone holding only _SUCCESS streams as empty, by the contract schema") {
+    val root = Files.createTempDirectory("graft-stream-silver-empty").toString
+    Files.createDirectories(Paths.get(s"$root/bronze"))
+    Files.createFile(Paths.get(s"$root/bronze/_SUCCESS"))
+    val stream = StreamingSilver.readBronzeStream(spark, s"$root/bronze")
+    assert(stream.schema.map(f => f.name -> f.dataType) ==
+      Schemas.bronze.map(f => f.name -> f.dataType))
+    val qs = StreamingSilver.writeSilver(stream,
+      s"$root/silver", s"$root/audit", s"$root/ckpt-silver")
+    qs.awaitTermination(60000)
+    assert(qs.exception.isEmpty)
+    assert(LedgerIO.readOrEmpty(spark, s"$root/silver", Schemas.silver).isEmpty)
   }
 }
