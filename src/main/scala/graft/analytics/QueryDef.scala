@@ -73,4 +73,22 @@ object Ops {
     * Oracle twin: CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE)/COUNT(*). */
   def davg(c: Column, scale: Int = 4): Column =
     dsum(c, scale) / count(lit(1))
+
+  /** An all-pairs correctness BASELINE is quadratic by design: pointed at a
+    * billion-row `table` it would run for a week, so past the conf-keyed
+    * bound (`key`, -1 disables) it fails loudly instead. The count is a
+    * parquet metadata count (no column scan); `scalePath` names the
+    * queries to use at scale. */
+  def guardBruteForce(s: SparkSession, d: String, query: String,
+      table: String, key: String, default: Long, pairs: String, rows: String,
+      scalePath: String): Unit = {
+    val limit = s.conf.get(key, default.toString).toLong
+    if (limit >= 0) {
+      val n = t(s, d, table).count()
+      require(n <= limit,
+        s"$query is an $pairs correctness BASELINE: input has $n $rows " +
+          s"(> $key=$limit). Use $scalePath at scale, or raise the conf to " +
+          "opt out.")
+    }
+  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Pins
 import graft.analytics.{Ops, QueryDef}
+import graft.text.TextSignals
 import Ops._
 
 /** Deduplication operator family over `documents` — exact, MinHash+LSH,
@@ -71,23 +72,13 @@ object DedupQueries {
   val MaxBruteForceDocsKey = "spark.graft.dedup.maxBruteForceDocs"
   private val DefaultMaxBruteForceDocs = 50000L
 
-  /** q38's within-source self-join is quadratic by design (it is the
-    * exactness twin of the q36/q62 LSH path) — if one source dominates, the
-    * block is O(n²) and silently pointing it at a billion-doc corpus would
-    * run for a week. Fail loudly instead: a parquet metadata count (no
-    * column scan) against the configurable bound. */
-  private def guardBruteForce(s: SparkSession, d: String, query: String): Unit = {
-    val limit = s.conf.get(MaxBruteForceDocsKey,
-      DefaultMaxBruteForceDocs.toString).toLong
-    if (limit >= 0) {
-      val n = t(s, d, "documents").count()
-      require(n <= limit,
-        s"$query is an all-pairs-within-source correctness BASELINE: input " +
-          s"has $n docs (> $MaxBruteForceDocsKey=$limit). Use q36_minhash_lsh " +
-          "candidates / q62_dup_clusters_lsh (LSH candidates + exact verify " +
-          "of candidates only) at scale, or raise the conf to opt out.")
-    }
-  }
+  /** q38's within-source self-join is the exactness twin of the q36/q62
+    * LSH path; one dominant source makes it O(n²). */
+  private def guardBruteForce(s: SparkSession, d: String, query: String): Unit =
+    Ops.guardBruteForce(s, d, query, "documents", MaxBruteForceDocsKey,
+      DefaultMaxBruteForceDocs, "all-pairs-within-source", "docs",
+      "q36_minhash_lsh candidates / q62_dup_clusters_lsh (LSH candidates " +
+        "+ exact verify of candidates only)")
 
   /** The incremental family's delta split (q149/q166/q202/q251/q252 and
     * the IndexCache base builds): the ~10% of doc ids whose md5 hex starts
@@ -179,37 +170,41 @@ object DedupQueries {
 
   /** LSH candidate pairs (doc_a < doc_b, distinct) from a signature frame:
     * band the signature, bucket-join within (band_id, band_hash), with the
-    * hot-bucket guard capping the quadratic tail (see [[MaxBucketReps]]).
-    *
-    * NO SILENT CAPS: the guard's effect is observed in-flow (an `observe`
-    * node over the ranked bucket rows — zero extra jobs) as metrics
-    * `capped_buckets` / `skipped_pairs` under the name "q36_lsh_guard",
-    * and a session QueryExecutionListener WARN-logs whenever a run
-    * actually capped, so recall changes are visible across versions/scales. */
+    * hot-bucket guard capping the quadratic tail (see [[MaxBucketReps]]),
+    * observed as "q36_lsh_guard". */
   private[graft] def lshCandidatePairs(sig: DataFrame): DataFrame = {
-    ensureGuardListener(sig.sparkSession)
-    val banded = bandsOf(sig)
-    // candidate pairs = docs sharing any (band_id, band_hash) bucket,
-    // with the hot-bucket guard: rank docs within their bucket (same
-    // partitioning the join shuffle needs anyway) and let only the first
-    // MaxBucketReps act as the left/"rep" side.
-    val wBucket = org.apache.spark.sql.expressions.Window
-      .partitionBy("band_id", "band_hash").orderBy("doc_id")
-    val ranked = banded.withColumn("rn", row_number().over(wBucket))
-    // guard metrics ride the full-ranked side of the self-join: rn == cap+1
-    // marks a bucket crossing the cap once; every row past the cap skips
-    // (rn - cap - 1) non-rep partners, summing to C(size-cap, 2) per bucket.
-    val observed = ranked.observe("q36_lsh_guard",
-      count(when(col("rn") === MaxBucketReps + 1, lit(1))).as("capped_buckets"),
-      coalesce(sum(when(col("rn") > MaxBucketReps,
-        (col("rn") - MaxBucketReps - 1).cast("long"))), lit(0L)).as("skipped_pairs"))
-    val reps = ranked.filter(col("rn") <= MaxBucketReps)
+    val (reps, observed) = hotBucketGuard(bandsOf(sig), "q36_lsh_guard",
+      Seq("band_id", "band_hash"), "doc_id", MaxBucketReps)
     reps.as("a").join(observed.as("b"),
         col("a.band_id") === col("b.band_id") &&
         col("a.band_hash") === col("b.band_hash") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
+  }
+
+  /** The hot-bucket guard of a bucket self-join: ranks `rows` within each
+    * `bucket` by `order` (the partitioning the join shuffle needs anyway)
+    * and returns (reps, observed) — the first `cap` rows per bucket, which
+    * act as the join's left side, and every ranked row. Both carry `rn`.
+    *
+    * NO SILENT CAPS: `observed` carries an in-flow `observe` node named
+    * `name` (zero extra jobs): `capped_buckets` counts buckets crossing
+    * the cap (rn == cap+1), `skipped_pairs` sums the (rn - cap - 1)
+    * non-rep partners each row past the cap loses — C(size-cap, 2) per
+    * bucket. The guard registers `name` with the session listener, which
+    * WARNs whenever a run actually capped. */
+  private[graft] def hotBucketGuard(rows: DataFrame, name: String,
+      bucket: Seq[String], order: String, cap: Int): (DataFrame, DataFrame) = {
+    watchGuard(rows.sparkSession, name)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(bucket.map(col): _*).orderBy(order)
+    val ranked = rows.withColumn("rn", row_number().over(w))
+    val observed = ranked.observe(name,
+      count(when(col("rn") === cap + 1, lit(1))).as("capped_buckets"),
+      coalesce(sum(when(col("rn") > cap,
+        (col("rn") - cap - 1).cast("long"))), lit(0L)).as("skipped_pairs"))
+    (ranked.filter(col("rn") <= cap), observed)
   }
 
   /** q141 candidate-volume observability threshold: the exact prefix-filter
@@ -236,8 +231,9 @@ object DedupQueries {
     * missed only when ALL of its earliest `cap` matches are decoys).
     * NO SILENT CAPS: capped_hashes / skipped_windows ride an in-flow
     * observe() node named `substr_guard_<tag>` (tags keep names unique
-    * when one query guards several sides) and [[ensureGuardListener]]
-    * WARNs whenever a run actually capped. */
+    * when one query guards several sides), WARNed like every guard's.
+    * Its own ranking, not [[hotBucketGuard]]'s: it counts skipped
+    * windows, not pair slots. */
   private[graft] def substrSourceGuard(sSide: DataFrame,
       tag: String): DataFrame = {
     val sess = sSide.sparkSession
@@ -245,11 +241,11 @@ object DedupQueries {
       .map(_.trim.toInt).getOrElse(0)
     if (cap <= 0) sSide
     else {
-      ensureGuardListener(sess)
+      watchGuard(sess, s"substr_guard_$tag")
       val ord =
         (if (sSide.columns.contains("s_delta")) Seq(col("s_delta").asc)
          else Nil) ++ Seq(col("src_id").asc, col("spos").asc)
-      // partition by the FULL pair key when h2 rides along (ADVICE r13):
+      // partition by the FULL pair key when h2 rides along:
       // the candidate join keys on (h, h2), so budgeting per h alone
       // would make distinct windows whose 31-bit h values collide share
       // one cap — tighter than the documented per-true-window cap and
@@ -269,9 +265,19 @@ object DedupQueries {
     }
   }
 
-  /** One WARN line per execution whose LSH guard actually capped a bucket —
-    * the observable trail for the recall-affecting cap. Registered at most
-    * once per session. */
+  /** Observe-node names of the guards that ran in this JVM: the listener
+    * WARNs on exactly these. */
+  private val guardNames = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def watchGuard(s: SparkSession, name: String): Unit = {
+    guardNames.add(name)
+    ensureGuardListener(s)
+  }
+
+  /** One WARN line per execution and guard that actually capped (first
+    * metric > 0), named by the guard's observe node and metric columns —
+    * the observable trail for a recall-affecting cap — plus q141's
+    * candidate-volume WARN. Registered at most once per session. */
   private val guardListenerSessions = java.util.Collections.synchronizedSet(
     java.util.Collections.newSetFromMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
@@ -281,43 +287,25 @@ object DedupQueries {
       s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
         override def onSuccess(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit =
-          {
-            qe.observedMetrics.get("q36_lsh_guard").foreach { row =>
-              val capped = if (row.isNullAt(0)) 0L else row.getLong(0)
-              if (capped > 0L)
-                log.warn(s"q36 LSH hot-bucket guard capped $capped bucket(s), " +
-                  s"skipped ${row.getLong(1)} non-rep candidate pair slots " +
-                  s"(MaxBucketReps=$MaxBucketReps) — recall differs from unguarded LSH")
+            durationNs: Long): Unit = {
+          def first(row: org.apache.spark.sql.Row) =
+            if (row.isNullAt(0)) 0L else row.getLong(0)
+          qe.observedMetrics.foreach { case (name, row) =>
+            if (guardNames.contains(name) && first(row) > 0L) {
+              val f = row.schema.fieldNames
+              log.warn(s"hot-bucket guard [$name] ${f(0)}=${first(row)}, " +
+                s"${f(1)}=${row.getLong(1)} — recall differs from the " +
+                "unguarded join")
             }
-            qe.observedMetrics.get("q208_ahash_guard").foreach { row =>
-              val capped = if (row.isNullAt(0)) 0L else row.getLong(0)
-              if (capped > 0L)
-                log.warn(s"q208 aHash hot-bucket guard capped $capped " +
-                  s"distinct-hash bucket(s), skipped ${row.getLong(1)} " +
-                  s"non-rep class-pair slots (MaxBucketReps=$MaxBucketReps) " +
-                  "— near-dup recall differs from the unguarded pigeonhole")
-            }
-            qe.observedMetrics.get("q141_setsim").foreach { row =>
-              val cands = if (row.isNullAt(0)) 0L else row.getLong(0)
-              if (cands > SetSimCandidateWarn)
-                log.warn(s"q141 prefix-filter join produced $cands candidate " +
-                  s"rows (> $SetSimCandidateWarn): the corpus is near-dup " +
-                  "dense enough that the EXACT join approaches quadratic — " +
-                  "switch to the LSH path (q36/q62) or dedup upstream first")
-            }
-            qe.observedMetrics.iterator
-              .filter(_._1.startsWith("substr_guard")).foreach {
-                case (name, row) =>
-                  val capped = if (row.isNullAt(0)) 0L else row.getLong(0)
-                  if (capped > 0L)
-                    log.warn(s"ExactSubstr hot-window guard [$name] capped " +
-                      s"$capped window-hash bucket(s), skipped " +
-                      s"${row.getLong(1)} source windows " +
-                      s"($SubstrHotWindowCapKey) — coverage can differ " +
-                      "from the exact unguarded join")
-              }
           }
+          qe.observedMetrics.get("q141_setsim").map(first)
+            .filter(_ > SetSimCandidateWarn).foreach { cands =>
+              log.warn(s"q141 prefix-filter join produced $cands candidate " +
+                s"rows (> $SetSimCandidateWarn): the corpus is near-dup " +
+                "dense enough that the EXACT join approaches quadratic — " +
+                "switch to the LSH path (q36/q62) or dedup upstream first")
+            }
+        }
         override def onFailure(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution,
             exception: Exception): Unit = ()
@@ -685,9 +673,7 @@ object DedupQueries {
     val cov = substrCoverage(cand, plain, plain)
     docs.filter(if (incremental) col("is_delta") else lit(true))
       .select(col("doc_id"),
-        size(filter(split(col("text"), " "),
-          (w: org.apache.spark.sql.Column) => length(w) > lit(0)))
-          .cast("long").as("n_tokens"))
+        size(TextSignals.words(col("text"))).cast("long").as("n_tokens"))
       .join(cov, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("nd"), lit(0L)).as("n_dup_tokens"),
@@ -703,8 +689,7 @@ object DedupQueries {
       passthrough: Seq[String] = Nil): DataFrame =
     docs
       .select((col("doc_id") +: passthrough.map(col)) :+
-        posexplode(filter(split(col("text"), " "),
-          (w: org.apache.spark.sql.Column) => length(w) > lit(0))): _*)
+        posexplode(TextSignals.words(col("text"))): _*)
       .select((col("doc_id") +: passthrough.map(col)) ++
         Seq((col("pos") + 1).as("pos"), col("col").as("tok")): _*)
 
@@ -1153,7 +1138,7 @@ object DedupQueries {
     // bucketing; plan-asserted by BucketedJoinSpec's q70 case).
     QueryDef("q70_incremental_dedup", (s, d) => {
       val docs = t(s, d, "documents")
-        .withColumn("fp", graft.text.TextSignals.normalizedFingerprint(col("text")))
+        .withColumn("fp", TextSignals.normalizedFingerprint(col("text")))
         .withColumn("is_batch",
           substring(md5(col("doc_id").cast("string")), 1, 2) <= "28")
       val base = docs.filter(!col("is_batch"))
@@ -1291,8 +1276,7 @@ object DedupQueries {
     // n_doc_pairs = Σ cnt_a·cnt_b counts document-level collisions
     // without ever materializing document pairs.
     QueryDef("q93_source_overlap", (s, d) => {
-      val toks = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toks = TextSignals.words(col("text"))
       val g = t(s, d, "documents")
         .select(col("source"), md5(array_join(slice(toks, 1, 15), " ")).as("fp"))
         .groupBy("fp", "source").agg(count(lit(1)).as("cnt"))
@@ -1748,8 +1732,7 @@ object DedupQueries {
     // nested loop over 20 one-blob rows — metadata, not data.
     QueryDef("q154_theta_overlap", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      val toks = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toks = TextSignals.words(col("text"))
       // localCheckpoint: both pair-matrix sides read this |sources|-row
       // blob table — un-checkpointed, each side would re-sketch the
       // corpus (Spark shares no subtrees), and "touched once" is the
@@ -1889,16 +1872,14 @@ object DedupQueries {
     // strictly q130's shapes with a sliding grid.
     QueryDef("q161_substr_dedup", (s, d) => {
       val tk = t(s, d, "documents").select(col("doc_id"),
-        filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0)).as("t"))
+        TextSignals.words(col("text")).as("t"))
         .persist() // two consumers: the window explode and the token explode
       // sliding 8-token windows, 1-based start positions (q151's
       // filter-sequence guard handles docs shorter than the window).
-      // r14: the window string is HASHED to a long AT THE EXPLODE (the
-      // form this scaladoc always declared as the scale shape, and the
+      // The window string is HASHED to a long AT THE EXPLODE (the
       // q38/q64 Spark-hashes-vs-oracle-strings precedent — identical
       // results modulo 2^-64 collisions): dup detection and mark-back
-      // now shuffle 8-byte longs, not 8-token strings. PINNED: dup agg
+      // shuffle 8-byte longs, not 8-token strings. PINNED: dup agg
       // + cov join both consume it.
       val wins = tk.select(col("doc_id"),
           posexplode(expr(
@@ -1970,12 +1951,11 @@ object DedupQueries {
     // index stand-in), delta the q161 shapes over ~10% of the corpus;
     // mark-back joins are window-keyed equi joins throughout.
     QueryDef("q166_substr_incremental", (s, d) => {
-      // Same r14 staging as q161: pinned token arrays, window hashed to a
+      // Same staging as q161: pinned token arrays, window hashed to a
       // long at the explode (q38/q64 precedent), pinned window frame
       // (THREE consumers: baseWins, deltaDup, cov).
       val tk = t(s, d, "documents").select(col("doc_id"),
-        filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0)).as("t"))
+        TextSignals.words(col("text")).as("t"))
         .withColumn("is_delta", isDelta)
         .persist()
       val wins = tk.select(col("doc_id"), col("is_delta"),
@@ -2473,8 +2453,7 @@ object DedupQueries {
     // integer-first (f7235c6 idiom).
     QueryDef("q205_effective_tokens", (s, d) => {
       val docs = t(s, d, "documents").select(col("source"), col("doc_id"),
-        (length(col("text")) - length(replace(col("text"), lit(" "), lit("")))
-          + lit(1)).cast("long").as("ntok"),
+        TextSignals.nTokens(col("text")).cast("long").as("ntok"),
         md5(col("text")).as("fp"))
       val canon = docs.groupBy("fp").agg(min(col("doc_id")).as("canon_id"))
       docs.join(canon, Seq("fp"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.LakeCatalog
+import graft.text.TextSignals
 
 /** Persisted ExactSubstr WINDOW-HASH index — the fourth persisted
   * structure beside the BM25 postings, the IVF cells, and the set-sim
@@ -118,9 +119,7 @@ object SubstrIndex {
     val cov = DedupQueries.substrCoverage(cand, dToks, sToks)
     deltaDocs
       .select(col("doc_id"),
-        size(filter(split(col("text"), " "),
-          (w: org.apache.spark.sql.Column) => length(w) > lit(0)))
-          .cast("long").as("n_tokens"))
+        size(TextSignals.words(col("text"))).cast("long").as("n_tokens"))
       .join(cov, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("nd"), lit(0L)).as("n_dup_tokens"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.analytics.QueryDef
 import graft.analytics.Ops.t
 import graft.functions.{DetMath, DetMathSql}
+import graft.text.TextSignals
 
 /** Distributed training of a tiny quality/routing classifier — gradient
   * descent expressed as aggregation, the dataflow every data-parallel
@@ -65,9 +66,8 @@ object MlQueries {
     docs.select(
       col("doc_id"),
       (col("n_chars").cast("double") / lit(1000.0)).as("x1"),
-      ((length(text) - length(replace(text, lit(" "), lit(""))) + lit(1))
-        .cast("double") / lit(100.0)).as("x2"),
-      (graft.text.TextSignals.stopwordHits(text) / lit(10.0)).as("x3"),
+      (TextSignals.nTokens(text).cast("double") / lit(100.0)).as("x2"),
+      (TextSignals.stopwordHits(text) / lit(10.0)).as("x3"),
       when(col("lang") === "en", lit(1.0)).otherwise(lit(0.0)).as("y"))
   }
 
@@ -214,10 +214,8 @@ object MlQueries {
   private[ml] def stumpHistogram(docs: DataFrame): DataFrame = {
     val feats = docs.select(
       col("n_chars").cast("long").as("f_chars"),
-      (length(col("text")) - length(replace(col("text"), lit(" "),
-        lit(""))) + lit(1)).cast("long").as("f_tokens"),
-      graft.text.TextSignals.stopwordHits(col("text")).cast("long")
-        .as("f_stop"),
+      TextSignals.nTokens(col("text")).cast("long").as("f_tokens"),
+      TextSignals.stopwordHits(col("text")).cast("long").as("f_stop"),
       when(col("lang") === "en", 1L).otherwise(0L).as("y"))
     feats.select(col("y"), explode(array(
         struct(lit("f_chars").as("feature"), col("f_chars").as("v"),
@@ -236,8 +234,7 @@ object MlQueries {
     * with its 256-way md5 bucket, every non-text input column preserved
     * (so split/class flags ride through the explode). */
   private[graft] def nbTokens(docs: DataFrame): DataFrame =
-    docs.withColumn("tok", explode(filter(split(col("text"), " "),
-        (x: Column) => length(x) > lit(0))))
+    docs.withColumn("tok", explode(TextSignals.words(col("text"))))
       .withColumn("b",
         conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("long"))
       .drop("text", "tok")
@@ -945,8 +942,8 @@ object MlQueries {
       val base = docs.select(
         (u < 0.5).as("arm_a1"),
         (col("n_chars") >= 300).as("arm_a2"),
-        (graft.text.TextSignals.qualityScore(col("text")) >= 0.5).as("m1"),
-        (graft.text.TextSignals.stopwordHits(col("text")) >= lit(2.0))
+        (TextSignals.qualityScore(col("text")) >= 0.5).as("m1"),
+        (TextSignals.stopwordHits(col("text")) >= lit(2.0))
           .as("m2"))
       def expRow(name: String, arm: String, metric: String) = {
         val a = col(arm); val m = col(metric)

@@ -791,13 +791,12 @@ object Multimodal {
     * class sizes — n_neardups(h) = (cnt(h) − 1) [same-hash others,
     * Hamming 0] + Σ cnt(h′) over matched classes h′ ≠ h. Degeneracy
     * (near-dup-dense corpora) HELPS instead of fanning the join out
-    * quadratically. For full-entropy corpora (distinct ~ n) the q36
-    * observe-guard caps each (block-index, block-value) bucket at `cap`
-    * distinct-hash reps: capped buckets and skipped candidate slots are
-    * observed in-flow under `observeName` (WARN-logged by the registered
-    * guard listener when it fires) — recall differs from the unguarded
-    * pigeonhole ONLY when a bucket exceeds `cap` distinct hashes, never
-    * on dup mass, which the collapse already absorbed.
+    * quadratically. For full-entropy corpora (distinct ~ n) the
+    * [[graft.dedup.DedupQueries.hotBucketGuard]] caps each (block-index,
+    * block-value) bucket at `cap` distinct-hash reps, observed under
+    * `observeName` and WARN-logged when it fires — recall differs from
+    * the unguarded pigeonhole ONLY when a bucket exceeds `cap` distinct
+    * hashes, never on dup mass, which the collapse already absorbed.
     *
     * Observability caveat (the CAP always applies; only its METRIC is
     * affected): AQE's post-stage re-planning can elide the
@@ -816,14 +815,8 @@ object Multimodal {
           shiftrightunsigned(col("ahash"), 16 * j).bitwiseAND(lit(0xFFFFL))
             .as("blk"))): _*)).as("p"))
       .select(col("ahash"), col("cnt"), col("p.j"), col("p.blk"))
-    val wBucket = org.apache.spark.sql.expressions.Window
-      .partitionBy("j", "blk").orderBy("ahash")
-    val ranked = blocks.withColumn("rn", row_number().over(wBucket))
-    val observed = ranked.observe(observeName,
-      count(when(col("rn") === cap + 1, lit(1))).as("capped_buckets"),
-      coalesce(sum(when(col("rn") > cap,
-        (col("rn") - cap - 1).cast("long"))), lit(0L)).as("skipped_pairs"))
-    val reps = ranked.filter(col("rn") <= cap)
+    val (reps, observed) = graft.dedup.DedupQueries.hotBucketGuard(blocks,
+      observeName, Seq("j", "blk"), "ahash", cap)
     // undirected class pairs (lo < hi), then mirrored so each class
     // sees its full neighbor sum — all frames here are |distinct|-sized
     val pairs = reps.as("a").join(observed.as("b"),

@@ -60,7 +60,20 @@ object CorpusCurate {
     require(inputDocs == qualityDropped + exactDupDropped + nearDupDropped +
       containmentDropped + semanticDropped + keptDocs,
       s"manifest does not partition the input: $this")
+
+    /** The manifest's JSON fields, in declaration order. */
+    def fields: Seq[(String, Long)] = Seq("input_docs" -> inputDocs,
+      "quality_dropped" -> qualityDropped, "exact_dup_dropped" -> exactDupDropped,
+      "near_dup_dropped" -> nearDupDropped,
+      "containment_dropped" -> containmentDropped,
+      "semantic_dropped" -> semanticDropped, "kept_docs" -> keptDocs,
+      "kept_tokens" -> keptTokens, "shards" -> shards)
   }
+
+  /** One flat JSON object of counts — the manifest artifact both curation
+    * CLIs write. */
+  private[graft] def manifestJson(fields: Seq[(String, Long)]): String =
+    fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 
   /** Curate `docs` (doc_id, source, text, ...) → (curated frame with
     * quality_score/fp/n_tokens/shard_id columns, per-stage manifest).
@@ -192,15 +205,8 @@ object CorpusCurate {
           .option("compression", "snappy").parquet(s"$outRoot/curated")
         m
       }
-      val json =
-        s"""{"input_docs":${m.inputDocs},"quality_dropped":${m.qualityDropped},""" +
-          s""""exact_dup_dropped":${m.exactDupDropped},"near_dup_dropped":${m.nearDupDropped},""" +
-          s""""containment_dropped":${m.containmentDropped},"semantic_dropped":${m.semanticDropped},""" +
-          s""""kept_docs":${m.keptDocs},"kept_tokens":${m.keptTokens},"shards":${m.shards}}"""
-      val dir = java.nio.file.Paths.get(outRoot)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.write(dir.resolve("manifest.json"),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val json = manifestJson(m.fields)
+      JobStatus.writeText(spark, s"$outRoot/manifest.json", json)
       println(s"CORPUS_CURATE_OK $json")
     } finally spark.stop()
   }

@@ -17,6 +17,17 @@ object JobStatus {
   /** The local property Spark shows as a job's description. */
   val JobDescription = "spark.job.description"
 
+  /** Writes `content` through the Hadoop FileSystem API, so an artifact
+    * lands on the SAME filesystem as the data beside it (hdfs://, s3a://
+    * or local) — java.nio would take a remote URI for a local path. */
+  private[graft] def writeText(spark: SparkSession, path: String,
+      content: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+  }
+
   final case class StageReport(stage: String, status: String, startMs: Long,
       durationMs: Long, error: Option[String], metricsJson: Option[String],
       attempt: Int = 1) {
@@ -132,11 +143,7 @@ object JobStatus {
       } catch { case _: java.io.IOException => () } // best-effort hygiene
     }
 
-    private def write(r: StageReport, suffix: String = ""): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/${r.stage}_$runDate$suffix.json")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      try out.write((r.toJson + "\n").getBytes("UTF-8")) finally out.close()
-    }
+    private def write(r: StageReport, suffix: String = ""): Unit =
+      writeText(spark, s"$outDir/${r.stage}_$runDate$suffix.json", r.toJson + "\n")
   }
 }

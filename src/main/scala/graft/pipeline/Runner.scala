@@ -92,7 +92,8 @@ object Runner {
         }
         val dqJson = reporter.stageWithMetrics("audit_summary") {
           val json = Audit.dqJson(dq, runDate)
-          writeText(spark, s"${zones.auditSummary}/dq_summary_$runDate.json", json)
+          JobStatus.writeText(spark, s"${zones.auditSummary}/dq_summary_$runDate.json",
+            json)
           json
         }(Some(_))
         (dq, dqJson)
@@ -145,16 +146,6 @@ object Runner {
   /** A scan of a zone with no data files reports no metrics: 0 rows. */
   private def rows(obs: Observation): Long =
     obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
-
-  /** Writes through the Hadoop FileSystem API so the audit summary lands in
-    * the SAME filesystem as the lake zones (hdfs://, s3a://, or local) —
-    * java.io would silently write a bogus local path for remote roots. */
-  private def writeText(spark: SparkSession, path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
 
   /** Local end-to-end demo: generate fixtures, run the lake, print counts. */
   def main(args: Array[String]): Unit = {

@@ -44,6 +44,12 @@ object WebCurate {
     require(pages == urlDupDropped + domainCapDropped +
       emptyExtractDropped + curated.inputDocs,
       s"web manifest does not partition the crawl: $this")
+
+    /** The crawl-level fields, then the inner manifest's. */
+    def fields: Seq[(String, Long)] = Seq("pages" -> pages,
+      "url_dup_dropped" -> urlDupDropped,
+      "domain_cap_dropped" -> domainCapDropped,
+      "empty_extract_dropped" -> emptyExtractDropped) ++ curated.fields
   }
 
   /** `pages` must expose (page_id, url, html, source). Returns the
@@ -134,18 +140,8 @@ object WebCurate {
           .option("compression", "snappy").parquet(s"$outRoot/curated")
         m
       }
-      val c = m.curated
-      val json =
-        s"""{"pages":${m.pages},"url_dup_dropped":${m.urlDupDropped},""" +
-          s""""domain_cap_dropped":${m.domainCapDropped},""" +
-          s""""empty_extract_dropped":${m.emptyExtractDropped},""" +
-          s""""input_docs":${c.inputDocs},"quality_dropped":${c.qualityDropped},""" +
-          s""""exact_dup_dropped":${c.exactDupDropped},"near_dup_dropped":${c.nearDupDropped},""" +
-          s""""kept_docs":${c.keptDocs},"kept_tokens":${c.keptTokens},"shards":${c.shards}}"""
-      val dir = java.nio.file.Paths.get(outRoot)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.write(dir.resolve("manifest.json"),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val json = CorpusCurate.manifestJson(m.fields)
+      JobStatus.writeText(spark, s"$outRoot/manifest.json", json)
       println(s"WEB_CURATE_OK $json")
     } finally spark.stop()
   }

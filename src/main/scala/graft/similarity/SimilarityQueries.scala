@@ -59,22 +59,11 @@ object SimilarityQueries {
   val MaxBruteForceRowsKey = "spark.graft.similarity.maxBruteForceRows"
   private val DefaultMaxBruteForceRows = 50000L
 
-  /** q39/q40 are quadratic by design (correctness baselines); silently
-    * pointing them at a billion-vector table would run for a week. Fail
-    * loudly instead: a parquet metadata count (no column scan) against the
-    * configurable bound. q41 (LSH) / q42b (IVF) are the scale paths. */
-  private def guardBruteForce(s: SparkSession, d: String, query: String): Unit = {
-    val limit = s.conf.get(MaxBruteForceRowsKey,
-      DefaultMaxBruteForceRows.toString).toLong
-    if (limit >= 0) {
-      val n = t(s, d, "embeddings").count()
-      require(n <= limit,
-        s"$query is an all-pairs correctness BASELINE: input has $n vectors " +
-          s"(> $MaxBruteForceRowsKey=$limit). Use q41_ann_lsh / q42b_ann_ivf " +
-          "(top-k) or q68_cosine_pairs_lsh (pair mining) at scale, or raise " +
-          "the conf to opt out.")
-    }
-  }
+  /** q41 (LSH) / q42b (IVF) are the scale paths of the q39/q40 baselines. */
+  private def guardBruteForce(s: SparkSession, d: String, query: String): Unit =
+    Ops.guardBruteForce(s, d, query, "embeddings", MaxBruteForceRowsKey,
+      DefaultMaxBruteForceRows, "all-pairs", "vectors",
+      "q41_ann_lsh / q42b_ann_ivf (top-k) or q68_cosine_pairs_lsh (pair mining)")
 
   /** Multi-table sign-LSH bucket assignment: (vec_id, v, norm, table_id,
     * bucket) — one row per (vector, table). OR-amplification: L tables × k

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.functions.ThetaSketch
+import graft.text.TextSignals
 
 /** Per-source per-batch novelty snapshot: of `n_batch` distinct
   * fingerprints that arrived this micro-batch, `n_new` had NEVER been
@@ -51,8 +52,7 @@ object StreamingNovelty {
     * whitespace tokens. Input needs `source` and `text`; output feeds
     * [[monitor]]. */
   def fingerprints(docs: DataFrame): DataFrame = {
-    val toks = filter(split(col("text"), " "),
-      (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+    val toks = TextSignals.words(col("text"))
     docs.select(col("source"),
       md5(array_join(slice(toks, 1, 15), " ")).as("fp"))
   }

@@ -16,20 +16,17 @@ import org.apache.spark.sql.functions._
   * Probe cost model at 100 TB: the query-term filter pushes into the
   * postings parquet scan (PushedFilters on `tok`), so only the queried
   * terms' postings are read — never the corpus; the doc-keyed join to
-  * docstats is proportional to the MATCHED postings. Scoring reproduces
+  * docstats is proportional to the MATCHED postings. Tokens come from the
+  * scan path's own [[TextQueries.bm25TokenStreamOf]]; scoring reproduces
   * [[TextQueries.bm25MicroScores]]'s micro-unit integer arithmetic
   * term-for-term, so the index path ranks BIT-IDENTICALLY to the q86
   * scan path (PostingsIndexSpec pins row-for-row parity).
   */
 object PostingsIndex {
 
-  private def tokens(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(filter(split(col("text"), " "),
-      (x: org.apache.spark.sql.Column) => length(x) > lit(0))).as("tok"))
-
   /** One corpus pass → the four index tables. */
   def build(docs: DataFrame, root: String): Unit = {
-    val toks = tokens(docs)
+    val toks = TextQueries.bm25TokenStreamOf(docs)
     toks.groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
       .write.mode("overwrite").parquet(s"$root/postings")
     toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
@@ -55,7 +52,7 @@ object PostingsIndex {
     * IncrementalIndexSpec pins append == full rebuild on a split corpus. */
   def append(docs: DataFrame, root: String): Unit = {
     val spark = docs.sparkSession
-    val toks = tokens(docs)
+    val toks = TextQueries.bm25TokenStreamOf(docs)
     toks.groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
       .write.mode("append").parquet(s"$root/postings")
     toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))

@@ -47,9 +47,8 @@ object TextQueries {
     * integer scores. Every double sub-expression is mirrored term-for-
     * term in the q86/q88 oracles (explicit DOUBLE casts, integer-
     * preserving idf form); see q86's scaladoc for the rationale.
-    * r15: doc lengths and the static-term tf rows come from ONE fused
-    * tokenize pass ([[bm25DocLengthsAndTf]]) — the scorer previously
-    * paid two. */
+    * Doc lengths and the static-term tf rows come from ONE fused
+    * tokenize pass ([[bm25DocLengthsAndTf]]). */
   private[graft] def bm25MicroScores(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val (dl, tf) = bm25DocLengthsAndTf(s, d, Bm25Terms)
@@ -59,11 +58,11 @@ object TextQueries {
   private[graft] val Bm25Terms = Seq("query", "dup", "scan")
 
   /** The token stream (doc_id, tok) of any (doc_id, text, ...) frame —
-    * NOT pinned: every consumer must aggregate it down before reuse. */
+    * the BM25 scan path's and the [[PostingsIndex]]'s. NOT pinned: every
+    * consumer must aggregate it down before reuse. */
   private[graft] def bm25TokenStreamOf(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.select(col("doc_id"), explode(filter(split(col("text"), " "),
-      (x: org.apache.spark.sql.Column) => length(x) > lit(0))).as("tok"))
+    docs.select(col("doc_id"), explode(TextSignals.words(col("text"))).as("tok"))
 
   /** The corpus token stream (doc_id, tok) — see [[bm25TokenStreamOf]]. */
   private[graft] def bm25TokenStream(s: org.apache.spark.sql.SparkSession,
@@ -414,8 +413,7 @@ object TextQueries {
   private def byteBpeWords(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     t(s, d, "documents")
-      .select(explode(filter(split(TextClean.nfkc(col("text")), " "),
-        (w: org.apache.spark.sql.Column) => length(w) > lit(0))).as("word"))
+      .select(explode(TextSignals.words(TextClean.nfkc(col("text")))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true)
 
@@ -462,8 +460,7 @@ object TextQueries {
       merges: Seq[(Long, String, Long)]): org.apache.spark.sql.DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val dw = docs.select(col("doc_id"),
-      explode(filter(split(TextClean.nfc(col("text")), " "),
-        (w: org.apache.spark.sql.Column) => length(w) > lit(0))).as("word"))
+      explode(TextSignals.words(TextClean.nfc(col("text")))).as("word"))
     val enc = dw.select("word").distinct()
       .select(col("word"), expr(byteBpeEncodeExpr(merges.map(_._2))).as("tk"))
     dw.join(enc.select(col("word"), size(col("tk")).cast("long").as("n_syms")),
@@ -516,11 +513,10 @@ object TextQueries {
     val merges = graft.IndexCache.ensureByteBpeMerges(s, d)
     graft.functions.GraftFunctions.register(s)
     val dw = curated.select(col("doc_id"),
-      explode(filter(split(col("text"), " "),
-        (w: org.apache.spark.sql.Column) => length(w) > lit(0))).as("word"))
+      explode(TextSignals.words(col("text"))).as("word"))
     // apply-only encode: the trained merges against the CURATED vocab
     // (vocab-sized work; byte fallback means no OOV by construction),
-    // ONE compiled expression (r15 — was a per-merge interpreted chain)
+    // ONE compiled expression
     val enc = dw.select("word").distinct()
       .select(col("word"), expr(byteBpeEncodeExpr(merges.map(_._2))).as("tk"))
     val wenc = enc.select(col("word"),
@@ -747,8 +743,7 @@ object TextQueries {
   private def knScoredDocs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val docs = t(s, d, "documents")
-    val toksCol = filter(split(col("text"), " "),
-      (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+    val toksCol = TextSignals.words(col("text"))
     val bigrams = docs.select(col("doc_id"), toksCol.as("tk"))
       .select(col("doc_id"), explode(expr(
         """transform(
@@ -1056,12 +1051,8 @@ object TextQueries {
       t(s, d, "documents").select(
         col("doc_id"),
         length(text).cast("long").as("n_chars_actual"),
-        (length(text) - length(replace(text, lit(" "), lit(""))) + lit(1))
-          .cast("long").as("n_tokens"),
-        // mean token length = non-space chars / tokens, exact double division
-        (length(replace(text, lit(" "), lit(""))).cast("double") /
-          (length(text) - length(replace(text, lit(" "), lit(""))) + lit(1)))
-          .as("mean_token_len"))
+        TextSignals.nTokens(text).cast("long").as("n_tokens"),
+        TextSignals.meanTokenLength(text).as("mean_token_len"))
     }, Some("""
       SELECT doc_id,
         CAST(length(text) AS BIGINT) AS n_chars_actual,
@@ -1725,21 +1716,15 @@ object TextQueries {
     // contract, now over baseline-JPEG bytes). Shapes: bytes decode in
     // place, 8-byte hashes + block keys are all that shuffles.
     QueryDef("q208_jpeg_ahash", (s, d) => {
-      // r9 ran the pigeonhole self-join over PER-IMAGE rows; a
-      // near-dup-dense corpus (this fixture: 5000 images, 38 distinct
-      // hashes, 937k true pairs) fanned the join out quadratically
-      // (8.7M candidate rows, 4.1 s — judge-flagged weak). The scale
-      // shape is to COLLAPSE TO DISTINCT-HASH CLASSES first: byte-dup
-      // and hash-dup mass becomes one weighted row, the pigeonhole join
-      // runs over |distinct| rows, and per-image counts reconstruct
-      // EXACTLY from class sizes — n_neardups(h) = (cnt(h) - 1)
-      // [same-hash others, Hamming 0] + sum of cnt(h') over matched
-      // classes h' != h. Degeneracy now HELPS instead of hurting, and
-      // the gate stays exact. For full-entropy corpora (distinct ~ n)
-      // the q36 observe-guard caps the distinct-hash buckets: observed
-      // in-flow, WARN-logged when it fires (never on byte-dup mass,
-      // which the collapse already absorbed).
-      graft.dedup.DedupQueries.ensureGuardListener(s)
+      // The pigeonhole self-join runs over DISTINCT-HASH CLASSES, not
+      // per-image rows: on a near-dup-dense corpus (this fixture: 5000
+      // images, 38 distinct hashes, 937k true pairs) byte-dup and
+      // hash-dup mass becomes one weighted row, and per-image counts
+      // reconstruct EXACTLY from class sizes — n_neardups(h) =
+      // (cnt(h) - 1) [same-hash others, Hamming 0] + sum of cnt(h') over
+      // matched classes h' != h. For full-entropy corpora (distinct ~ n)
+      // the hot-bucket guard caps the distinct-hash buckets (observed
+      // in-flow, WARN-logged when it fires).
       // localCheckpoint: hs feeds the class agg AND the final join —
       // unpinned, the encode+decode of the whole JPEG corpus would
       // re-run (q182 single-pass rule; hashes are 16 bytes/row)
@@ -2297,8 +2282,7 @@ object TextQueries {
         expr("octet_length(word)").cast("long").as("n_b"),
         size(col("tk")).cast("long").as("n_syms"))
       val dw = t(s, d, "documents").select(col("doc_id"),
-        explode(filter(split(TextClean.nfkc(col("text")), " "),
-          (w: org.apache.spark.sql.Column) => length(w) > lit(0))).as("word"))
+        explode(TextSignals.words(TextClean.nfkc(col("text")))).as("word"))
       dw.join(wenc, Seq("word"))
         .groupBy("doc_id")
         .agg(sum(col("n_b")).as("n_bytes"),
@@ -2342,8 +2326,7 @@ object TextQueries {
             .as("idstr"),
           expr("aggregate(ids, 0L, (a, x) -> a + x)").as("idsum"))
       val dw = t(s, d, "documents").select(col("doc_id"),
-          posexplode(filter(split(TextClean.nfkc(col("text")), " "),
-            (w: org.apache.spark.sql.Column) => length(w) > lit(0))))
+          posexplode(TextSignals.words(TextClean.nfkc(col("text")))))
         .select(col("doc_id"), col("pos").as("wpos"), col("col").as("word"))
       dw.join(wid, Seq("word"))
         .groupBy("doc_id")
@@ -2482,9 +2465,7 @@ object TextQueries {
       val C = 48L
       val S = 32L
       t(s, d, "documents")
-        .select(col("doc_id"),
-          filter(split(col("text"), " "),
-            (w: org.apache.spark.sql.Column) => length(w) > lit(0)).as("ws"))
+        .select(col("doc_id"), TextSignals.words(col("text")).as("ws"))
         .withColumn("n", size(col("ws")).cast("long"))
         .filter(col("n") > 0)
         .withColumn("k", expr(
@@ -2551,8 +2532,7 @@ object TextQueries {
     // (exact dups of an earlier doc, block-aligned) still emit a row —
     // the left join keeps the audit total.
     QueryDef("q226_line_dedup", (s, d) => {
-      val ws = filter(split(col("text"), " "),
-        (x: org.apache.spark.sql.Column) => length(x) > lit(0))
+      val ws = TextSignals.words(col("text"))
       val docs = t(s, d, "documents")
         .select(col("doc_id"), ws.as("ws"))
         .select(col("doc_id"),
@@ -2636,8 +2616,7 @@ object TextQueries {
     QueryDef("q227_boilerplate_lines", (s, d) => {
       val banner = concat(lit("site"), (col("doc_id") % 40).cast("string"),
         lit(" cookie banner privacy terms notice follow us on social "))
-      val ws = filter(split(concat(banner, col("text")), " "),
-        (x: org.apache.spark.sql.Column) => length(x) > lit(0))
+      val ws = TextSignals.words(concat(banner, col("text")))
       val docs = t(s, d, "documents")
         .select(col("doc_id"),
           concat(lit("site"), (col("doc_id") % 40).cast("string"),
@@ -2902,8 +2881,7 @@ object TextQueries {
     QueryDef("q231_step_provenance", (s, d) => {
       val B = 512L
       val seqsPerStep = 32L
-      val toks = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toks = TextSignals.words(col("text"))
       val docs = t(s, d, "documents")
         .select(col("doc_id"), size(toks).cast("long").as("n_tokens"))
         .filter(col("n_tokens") > 0)
@@ -3357,8 +3335,7 @@ object TextQueries {
     // judged against. Budgets inline as a CASE for oracle parity; a real
     // run would broadcast-join a budget table.
     QueryDef("q79_token_budget_mix", (s, d) => {
-      val toks = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toks = TextSignals.words(col("text"))
       val stratum = expr("try_cast(substring(source, 4) AS int) % 4")
       val budget = when(stratum === 0, 900L).when(stratum === 1, 700L)
         .when(stratum === 2, 500L).otherwise(300L)
@@ -3409,8 +3386,7 @@ object TextQueries {
     // written as a curation audit table.
     QueryDef("q80_curation_pipeline", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val toks = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toks = TextSignals.words(col("text"))
       val docs = t(s, d, "documents").select(
         col("doc_id"), col("source"), col("n_chars"),
         md5(array_join(slice(toks, 1, 3), " ")).as("fp"),
@@ -3541,8 +3517,7 @@ object TextQueries {
     // overlap tax) — the fan-out is bounded and proportional, never
     // quadratic; empty docs emit no chunks by construction.
     QueryDef("q84_doc_chunks", (s, d) => {
-      val toksCol = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toksCol = TextSignals.words(col("text"))
       t(s, d, "documents")
         .select(col("doc_id"), toksCol.as("tk"))
         .filter(size(col("tk")) > 0)
@@ -3637,8 +3612,7 @@ object TextQueries {
     // join + one doc-keyed agg.
     QueryDef("q87_proximity", (s, d) => {
       val tagged = t(s, d, "documents")
-        .select(col("doc_id"), posexplode(filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0)))
+        .select(col("doc_id"), posexplode(TextSignals.words(col("text")))
           .as(Seq("p0", "tok")))
         .filter(col("tok").isin("query", "scan"))
         .select(col("doc_id"), (col("p0") + 1).cast("long").as("p"), col("tok"))
@@ -3685,8 +3659,7 @@ object TextQueries {
     // exact in that regime, plus determinism). Rows-only: the sketch
     // registers and error bounds are engine-specific.
     QueryDef("q92_heavy_hitters", (s, d) => {
-      val toks = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toks = TextSignals.words(col("text"))
       t(s, d, "documents")
         .select(col("source"), explode(toks).as("token"))
         .groupBy("source")
@@ -3713,8 +3686,7 @@ object TextQueries {
     // global sort, no driver loop.
     QueryDef("q94_sequence_pack", (s, d) => {
       val B = 512L
-      val toks = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toks = TextSignals.words(col("text"))
       val docs = t(s, d, "documents")
         .select(col("doc_id"), size(toks).cast("long").as("n_tokens"))
         .filter(col("n_tokens") > 0)
@@ -3810,8 +3782,7 @@ object TextQueries {
     // (the q48 contract) — no order-sensitive double summation anywhere.
     QueryDef("q102_temperature_mix", (s, d) => {
       val docs = t(s, d, "documents").select(col("doc_id"), col("source"),
-        (length(col("text")) - length(replace(col("text"), lit(" "), lit("")))
-          + lit(1)).cast("long").as("n_tokens"))
+        TextSignals.nTokens(col("text")).cast("long").as("n_tokens"))
       val bySrc = docs.groupBy("source").agg(sum("n_tokens").as("src_tokens"))
       val medRow = bySrc.agg(expr("percentile(src_tokens, 0.5)").as("med"))
       val rates = bySrc.crossJoin(broadcast(medRow))
@@ -3942,8 +3913,7 @@ object TextQueries {
     // division), so fully oracle-gated, hash-checked.
     QueryDef("q109_split_manifest", (s, d) => {
       val docs = t(s, d, "documents").select(col("doc_id"), col("source"),
-        (length(col("text")) - length(replace(col("text"), lit(" "), lit("")))
-          + lit(1)).cast("long").as("n_tokens"))
+        TextSignals.nTokens(col("text")).cast("long").as("n_tokens"))
       val u = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
         .cast("double") / lit(1152921504606846976L) // 2^60
       val tagged = docs.withColumn("split",
@@ -3996,14 +3966,13 @@ object TextQueries {
     // join is Zipf-skewed at scale — same posture as q77: broadcast the
     // top-V model or let AQE skew-join split the hot keys. Exactness:
     // ln is DetMath.detLnRatio (bit-identical cross-engine by
-    // construction — the r07 q143 lesson), and per-doc
+    // construction), and per-doc
     // sums use the round(ln·1e6)-to-BIGINT micro-unit trick (q56/q77) so
     // summation order cannot drift. Docs with < 2 tokens keep a row with
     // n_bigrams 0 / score 0.0 via the left join.
     QueryDef("q111_bigram_lm", (s, d) => {
       val docs = t(s, d, "documents")
-      val toksCol = filter(split(col("text"), " "),
-        (tk: org.apache.spark.sql.Column) => length(tk) > lit(0))
+      val toksCol = TextSignals.words(col("text"))
       val bi = docs.select(col("doc_id"), toksCol.as("tk"))
         .select(col("doc_id"), explode(expr(
           """transform(
@@ -4289,9 +4258,8 @@ object TextQueries {
       val text = col("text")
       val nTok = TextSignals.nTokens(text)
       val stop = TextSignals.stopwordHits(text)
-      val tkf = filter(split(text, " "),
-        (x: org.apache.spark.sql.Column) => length(x) > lit(0))
-      val mwl = length(replace(text, lit(" "), lit(""))).cast("double") / nTok
+      val tkf = TextSignals.words(text)
+      val mwl = TextSignals.meanTokenLength(text)
       val uniq = size(array_distinct(tkf)).cast("double") /
         greatest(size(tkf), lit(1))
       val rWc = when(nTok >= 20 && nTok <= 80, 1L).otherwise(0L)
@@ -4734,8 +4702,7 @@ object TextQueries {
     QueryDef("q152_dsir_weights", (s, d) => {
       val docs = t(s, d, "documents")
       val toks = docs.select(col("doc_id"), col("lang"),
-        explode(filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0))).as("tok"))
+        explode(TextSignals.words(col("text"))).as("tok"))
         .withColumn("b",
           conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("long"))
       // pass 1: raw + target bucket counts in ONE agg over one explode
@@ -4834,8 +4801,7 @@ object TextQueries {
     QueryDef("q153_source_kl", (s, d) => {
       val docs = t(s, d, "documents")
       val toks = docs.select(col("source"),
-        explode(filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0))).as("tok"))
+        explode(TextSignals.words(col("text"))).as("tok"))
         .withColumn("b",
           conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("long"))
       val cs = toks.groupBy("source", "b").agg(count(lit(1)).as("cs"))
@@ -4921,8 +4887,7 @@ object TextQueries {
     // |sources| metadata rows (broadcast 1-row totals).
     QueryDef("q164_epoch_mix", (s, d) => {
       val docs = t(s, d, "documents").select(col("source"),
-        (length(col("text")) - length(replace(col("text"), lit(" "), lit("")))
-          + lit(1)).cast("long").as("n_tokens"))
+        TextSignals.nTokens(col("text")).cast("long").as("n_tokens"))
       // localCheckpoint: totals and the final projection both read the
       // |sources|-row table; un-checkpointed, each would rescan the docs
       val bySrc = docs.groupBy("source")
@@ -4990,8 +4955,7 @@ object TextQueries {
     // + rank pass over |vocab| rows + one 1-row moment agg.
     QueryDef("q165_zipf_fit", (s, d) => {
       val vocab = t(s, d, "documents")
-        .select(explode(filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0))).as("tok"))
+        .select(explode(TextSignals.words(col("text"))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("freq"))
       val ranked = graft.operators.GlobalOrder.withRowNumbers(
         vocab, Seq(col("freq").desc, col("tok").asc), out = "rank")
@@ -5066,9 +5030,7 @@ object TextQueries {
     // Shapes: one narrow length projection + ONE source-keyed agg —
     // nothing else, at any corpus size.
     QueryDef("q169_pad_pack", (s, d) => {
-      val nTok = (length(col("text"))
-        - length(replace(col("text"), lit(" "), lit(""))) + lit(1))
-        .cast("long")
+      val nTok = TextSignals.nTokens(col("text")).cast("long")
       t(s, d, "documents")
         .select(col("source"), nTok.as("n_tokens"),
           ((nTok + lit(511L)) / lit(512L)).cast("long").as("doc_blocks"))
@@ -5458,8 +5420,7 @@ object TextQueries {
     // the q130/q161 reassembly machinery pointed at an objective.
     QueryDef("q172_span_corruption", (s, d) => {
       val tk = t(s, d, "documents").select(col("doc_id"),
-        filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0)).as("t"))
+        TextSignals.words(col("text")).as("t"))
       val toks = tk.select(col("doc_id"), posexplode(col("t")).as(Seq("p0", "tok")))
         .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
           col("tok"))
@@ -5572,8 +5533,7 @@ object TextQueries {
         col("doc_id").cast("string"), lit(salt))), 1, 15), 16, 10)
         .cast("long")
       val tk = t(s, d, "documents").select(col("doc_id"),
-        filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0)).as("t"))
+        TextSignals.words(col("text")).as("t"))
         .withColumn("n", size(col("t")).cast("long"))
       val u = h("apply").cast("double") / lit(1152921504606846976L) // 2^60
       val fim = tk
@@ -5646,8 +5606,7 @@ object TextQueries {
     // doc never divides (the CASE guard) and renders empty spans.
     QueryDef("q174_chat_template", (s, d) => {
       val tk = t(s, d, "documents").select(col("doc_id"),
-        filter(split(col("text"), " "),
-          (x: org.apache.spark.sql.Column) => length(x) > lit(0)).as("tkn"))
+        TextSignals.words(col("text")).as("tkn"))
         .withColumn("n", size(col("tkn")).cast("long"))
         .withColumn("n_user", least(col("n"),
           greatest(lit(1L), floor(col("n") / lit(4)).cast("long"))))
@@ -6323,9 +6282,7 @@ object TextQueries {
     // exact integer arithmetic; waste_ratio is the q169 6-dp idiom.
     QueryDef("q212_length_batching", (s, d) => {
       val B = 8
-      val nTok = (length(col("text"))
-        - length(replace(col("text"), lit(" "), lit(""))) + lit(1))
-        .cast("long")
+      val nTok = TextSignals.nTokens(col("text")).cast("long")
       val docs = t(s, d, "documents").select(col("doc_id"), nTok.as("ntok"))
       val ranked = graft.operators.GlobalOrder.withRowNumbersMulti(
         docs, Seq("doc_id"),

@@ -10,10 +10,25 @@ import org.apache.spark.sql.functions._
   * All narrow codegen'd expressions: no shuffle, no state. */
 object TextSignals {
 
+  /** The words of `text`: split on single spaces, empty tokens dropped —
+    * the one token definition of the lexical queries, the dedup windows
+    * and the BM25 postings index. Null text gives a null array. */
+  def words(text: Column): Column =
+    filter(split(text, " "), w => length(w) > lit(0))
+
   /** Whitespace token count via length arithmetic (engine-portable; the
-    * q30 form). */
+    * q30 form): spaces + 1, so it also counts the empty tokens between
+    * doubled spaces and differs from `size(words(text))` on purpose —
+    * each query's oracle mirrors the rule that query uses. */
   def nTokens(text: Column): Column =
-    length(text) - length(replace(text, lit(" "), lit(""))) + lit(1)
+    length(text) - nonSpaceChars(text) + lit(1)
+
+  /** Mean token length: non-space characters per [[nTokens]] token. */
+  def meanTokenLength(text: Column): Column =
+    nonSpaceChars(text).cast("double") / nTokens(text)
+
+  private def nonSpaceChars(text: Column): Column =
+    length(replace(text, lit(" "), lit("")))
 
   /** Occurrences of `word` as a standalone token (\b boundaries — counts
     * adjacent repeats correctly, identical ASCII semantics across
