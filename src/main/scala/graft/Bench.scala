@@ -1,38 +1,34 @@
 package graft
 import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
+import BenchAdj.{selected, shortId}
 object Bench {
+  /** Untimed read of every parquet table under `dir` into a noop sink: the
+    * one-time cold page-cache read lands here, not in a timed run. */
+  private[graft] def warmRead(spark: SparkSession, dir: String,
+      tag: String): Unit =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach { f =>
+        try spark.read.parquet(f.getPath)
+          .write.mode("overwrite").format("noop").save()
+        catch { case NonFatal(e) =>
+          System.err.println(s"[$tag] warm-read ${f.getName} failed: ${e.getMessage}")
+        }
+      }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Fail fast, BEFORE the warm-up + timed loops: a colliding catalog
     // entry must abort in milliseconds, not after a full wasted bench run.
-    def shortId(name: String): String = name.takeWhile(_ != '_')
     require(SparkEntry.queries.keys.map(shortId).toSet.size ==
       SparkEntry.queries.size,
       "short query ids must stay unique — rename the colliding catalog entry")
-    // Dev-only knobs (the driver sets neither): SPARK_GRAFT_ONLY filters
-    // the warm-up + timed loops to comma-separated FULL-NAME prefixes
-    // (median-of-N single-query adjudication, the r08 regression
-    // protocol); SPARK_GRAFT_CONF injects "k=v;k=v" session confs (AQE
-    // on/off skew profiling). Prebuild always runs — serve-path queries
-    // need their indexes regardless of the subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    def selected(name: String) = only.forall(_.exists(name.startsWith))
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).filter(_.nonEmpty)
-      .map(_.split("=", 2)).collect { // split ONCE: values may contain '='
-        case Array(k, v) => (k.trim, v.trim)
-      }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // BenchAdj.selected filters the warm-up + timed loops (median-of-N
+    // single-query adjudication, the r08 regression protocol). Prebuild
+    // always runs — serve-path queries need their indexes regardless of
+    // the subset.
+    val spark = LocalSession(LocalSession.cpus())
     // Warm-up at the smallest SF: triggers codegen compilation + JIT for
     // every query shape so the timed run measures execution, not JVM warmup.
     val warmDir = {
@@ -70,15 +66,7 @@ object Bench {
     // corpus (q01 measured 9.6 s driver vs 1.3 s quiet-box in r10 — a
     // phantom regression three rounds running). One pass over every table
     // in sfDir moves that one-time cost out of the first timed slot.
-    new java.io.File(sfDir).listFiles().toSeq
-      .filter(f => f.getName.endsWith(".parquet"))
-      .foreach { f =>
-        try spark.read.parquet(f.getPath)
-          .write.mode("overwrite").format("noop").save()
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] warm-read ${f.getName} failed: ${e.getMessage}")
-        }
-      }
+    warmRead(spark, sfDir, "bench")
     // MANDATORY cache isolation between timed queries (r14): several
     // queries now `persist()` their internal multi-consumer frames, and
     // Spark's CacheManager matches CANONICALIZED PLANS — without an

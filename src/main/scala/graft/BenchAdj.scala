@@ -39,6 +39,12 @@ object BenchAdj {
   /** Short id ("q107b") of a full catalog name ("q107b_lsh_canonical_md5"). */
   def shortId(name: String): String = name.takeWhile(_ != '_')
 
+  /** The dev-only subset filter of Bench and Verify: `$SPARK_GRAFT_ONLY`,
+    * comma-separated FULL-NAME prefixes, selects catalog queries; unset
+    * selects all. */
+  def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY").forall(_.split(',').exists(name.startsWith))
+
   /** Parse the committed reference artifact's per-query map. The scan is
     * SCOPED TO THE `"queries":{...}` OBJECT — the full-map artifact also
     * carries a `ts` object with the SAME q-shaped keys holding start

@@ -1,9 +1,5 @@
 package graft
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.SparkSession
-
 /** Scaling datapoints for the per-query baseline comparison (BASELINE.md):
   * run the named catalog queries at sf0.001 / sf0.01 / sf0.1 in ONE JVM
   * (median of 3 noop-sink materializations after a codegen warm-up pass)
@@ -34,22 +30,7 @@ object ScalingBench {
 
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Dev-only (same contract as Bench): SPARK_GRAFT_CONF injects "k=v;k=v"
-    // session confs — A/B adjudication of conf-keyed paths (e.g.
-    // spark.graft.substr.hotWindowCap=64 re-measures the capped q249).
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).filter(_.nonEmpty)
-      .map(_.split("=", 2)).collect { case Array(k, v) => (k.trim, v.trim) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus("32"))
     def run(name: String, sf: String): Unit = {
       // cache-cold per invocation (the r14 Bench contract): queries that
       // persist() internal frames must never serve a later run from the
@@ -66,18 +47,8 @@ object ScalingBench {
     // cache mid-session, so without this the first timed run of a query
     // absorbs a cold parquet read and subset medians carry a 2-5 s box
     // spread (the r14 q62/q107 adjudication noise).
-    Sfs.map(sf => if (sf.startsWith("/")) sf else s"/root/testdata/$sf")
-      .foreach { dir =>
-        Option(new java.io.File(dir).listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach { f =>
-            try spark.read.parquet(f.getPath)
-              .write.mode("overwrite").format("noop").save()
-            catch { case NonFatal(e) =>
-              System.err.println(s"[scaling] warm-read ${f.getPath} failed: ${e.getMessage}")
-            }
-          }
-      }
+    Sfs.foreach(sf => Bench.warmRead(spark,
+      if (sf.startsWith("/")) sf else s"/root/testdata/$sf", "scaling"))
     val out = names.map { n =>
       val per = Sfs.map(sf => s""""$sf":${f"${median3(run(n, sf))}%.3f"}""")
       s""""$n":{${per.mkString(",")}}"""

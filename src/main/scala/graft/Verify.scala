@@ -1,31 +1,16 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.BenchAdj.selected
+import graft.pipeline.JobStatus.jsonString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts encoding has varied across driver testdata rounds:
-      // TIMESTAMP(NANOS) (refused by Spark 4 unless read as LONG via this
-      // flag) or TIMESTAMP(MICROS) (read as a timestamp type and converted
-      // to the same nanos LONG at the scan — Ops.normalizeEventTs). Keep
-      // the flag so BOTH encodings land on the catalog's LONG contract.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus())
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated name prefixes); the driver
-    // never sets it, so the gate always runs the full catalog.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    def selected(name: String) = only.forall(_.exists(name.startsWith))
+    // the driver never sets SPARK_GRAFT_ONLY: the gate runs the full catalog
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try {
         // cache-cold per query (the r14 Bench contract): internal
@@ -38,20 +23,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every string escaped (control chars too): a tab or CR in
+    // builder-authored SQL must not make the driver's json.load fail
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -218,9 +218,6 @@ object DetMathSql {
     s"((CAST($e AS DOUBLE) * $LN2) + ((CAST(2.0 AS DOUBLE) * $z) * (CAST(1.0 AS DOUBLE) + ($z2 * $p))))"
   }
 
-  /** ln(a/b) as ln a − ln b, both inline. */
-  def lnRatio(a: String, b: String): String = s"(${lnLong(a)} - ${lnLong(b)})"
-
   // ── detExp staging (see DetMath.detExp). The Taylor argument r appears
   // once per Horner level, so exp sites STAGE k/r/k1/k2 as CTE columns
   // (short names) and splice these four fragments.

@@ -43,7 +43,6 @@ object Compaction {
     val sizes = partitionSizes(spark, root)
     require(sizes.nonEmpty,
       s"no 'col=' partition directories under $root — compact() expects a partitioned dataset")
-    val totalBytes = math.max(sizes.values.sum, 1L)
     val totalFiles = math.max(
       sizes.values.map(b => math.ceil(b.toDouble / targetBytesPerFile).toLong).sum,
       1L)

@@ -68,10 +68,6 @@ object Snapshots {
   def latestVersion(spark: SparkSession, root: String): Option[Long] =
     state(spark, root).map(_._1)
 
-  /** Highest version ever committed (≥ the pointer after a rollback). */
-  def maxCommitted(spark: SparkSession, root: String): Option[Long] =
-    state(spark, root).map(_._2)
-
   /** Commit `df` as the next version; returns the new version number (1
     * for the first commit). Pointer is moved only after the data write
     * commits. A commit after a rollback claims the slot AFTER the

@@ -187,27 +187,29 @@ object CorpusCurate {
   /** CLI: `runMain graft.pipeline.CorpusCurate <docsParquetDir> <outRoot>` —
     * curates, lands the shard-assigned corpus at `<outRoot>/curated`, and
     * writes the manifest as a JobStatus-style JSON artifact beside it. */
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    cli(args, "CORPUS_CURATE_OK") { (pins, in) =>
+      val (curated, m) = run(pins, in)
+      (curated, m.fields)
+    }
+
+  /** The curation CLI: `curate` the parquet at `args(0)` inside one pin
+    * scope, land `<outRoot>/curated` and the manifest JSON beside it, and
+    * print `<okTag> <json>`. */
+  private[pipeline] def cli(args: Array[String], okTag: String)(
+      curate: (Pins, DataFrame) => (DataFrame, Seq[(String, Long)])): Unit = {
     val Array(inDir, outRoot) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-corpus-curate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(graft.LocalSession.cpus())
     try {
-      val m = Pins.scope { pins =>
-        val (curated, m) = run(pins, spark.read.parquet(inDir))
+      val fields = Pins.scope { pins =>
+        val (curated, fields) = curate(pins, spark.read.parquet(inDir))
         curated.write.mode("overwrite")
           .option("compression", "snappy").parquet(s"$outRoot/curated")
-        m
+        fields
       }
-      val json = manifestJson(m.fields)
+      val json = manifestJson(fields)
       JobStatus.writeText(spark, s"$outRoot/manifest.json", json)
-      println(s"CORPUS_CURATE_OK $json")
+      println(s"$okTag $json")
     } finally spark.stop()
   }
 }

@@ -28,20 +28,24 @@ object JobStatus {
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
+  /** A JSON string literal: quotes, backslash and ALL control chars
+    * (< 0x20) escaped — a tab or CR in a stage error or in builder-authored
+    * oracle SQL must not make the consumer's JSON parse fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   final case class StageReport(stage: String, status: String, startMs: Long,
       durationMs: Long, error: Option[String], metricsJson: Option[String],
       attempt: Int = 1) {
     def toJson: String = {
-      def esc(s: String): String = s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      val err = error.map(e => "\"" + esc(e) + "\"").getOrElse("null")
+      val err = error.map(jsonString).getOrElse("null")
       // metricsJson is embedded raw ONLY if it actually parses as JSON —
       // a stage whose metrics mapper returns junk must not produce a
       // malformed artifact (the monitor consuming it is the whole point).
@@ -60,9 +64,9 @@ object JobStatus {
             if (node == null || node.isMissingNode)
               throw new IllegalArgumentException("empty metrics")
             m
-          } catch { case _: Exception => "\"" + esc(m) + "\"" }
+          } catch { case _: Exception => jsonString(m) }
       }
-      s"""{"stage":"${esc(stage)}","status":"$status","start_ms":$startMs,""" +
+      s"""{"stage":${jsonString(stage)},"status":"$status","start_ms":$startMs,""" +
         s""""duration_ms":$durationMs,"attempt":$attempt,"error":$err,"metrics":$met}"""
     }
   }

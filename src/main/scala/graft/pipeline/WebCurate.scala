@@ -122,27 +122,9 @@ object WebCurate {
   /** CLI: `runMain graft.pipeline.WebCurate <pagesParquetDir> <outRoot>` —
     * mirrors [[CorpusCurate.main]]: lands `<outRoot>/curated` plus a
     * two-level manifest JSON. */
-  def main(args: Array[String]): Unit = {
-    val Array(inDir, outRoot) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-web-curate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val m = Pins.scope { pins =>
-        val (curated, m) = run(pins, spark.read.parquet(inDir))
-        curated.write.mode("overwrite")
-          .option("compression", "snappy").parquet(s"$outRoot/curated")
-        m
-      }
-      val json = CorpusCurate.manifestJson(m.fields)
-      JobStatus.writeText(spark, s"$outRoot/manifest.json", json)
-      println(s"WEB_CURATE_OK $json")
-    } finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    CorpusCurate.cli(args, "WEB_CURATE_OK") { (pins, in) =>
+      val (curated, m) = run(pins, in)
+      (curated, m.fields)
+    }
 }

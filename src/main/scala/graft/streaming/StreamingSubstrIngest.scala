@@ -67,8 +67,6 @@ import graft.dedup.SubstrIndex
   * the island-mass interval union; driver state is nil. */
 object StreamingSubstrIngest {
 
-  private val LedgerSchema =
-    StructType(Seq(StructField("batch_id", LongType)))
   private val CovSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("n_tokens", LongType),
     StructField("n_dup_tokens", LongType),

@@ -25,8 +25,6 @@ object Audit {
   val ReasonBadAmount = "null_or_nonpositive_amount"
   val ReasonBadCurrency = "invalid_currency"
   val ReasonBadStatus = "invalid_status"
-  /** Audit-only observation; does not filter (parity with reference). */
-  val FlagBlankUser = "blank_user"
 
   /** First-match reject reason over `Silver.rules`, NULL when the row passes
     * silver validation. A NULL rule result counts as a failure, because

@@ -10,8 +10,8 @@ class QueryCatalogSpec extends SparkSpec {
 
   QueryCatalog.all.foreach { q: QueryDef =>
     test(s"${q.name} runs at sf0.001 and is deterministic") {
-      val df1 = q.fn(spark, sf)
-      val n1 = df1.count()
+      // first run: the catalog snapshot's cache-cold build and count
+      val (_, n1) = SparkSpec.catalogEntry(q.name)
       assert(n1 >= 0)
       val n2 = q.fn(spark, sf).count()
       assert(n1 == n2, s"${q.name} row count changed between runs")
@@ -1005,10 +1005,11 @@ class QueryCatalogSpec extends SparkSpec {
   test("oracleSql column names appear in the Spark result (alias contract)") {
     // The driver compare sorts columns by name — a misaligned alias breaks
     // the hash even when values match. Guard: every Spark output column
-    // name must appear verbatim in the oracle SQL text.
+    // name must appear verbatim in the oracle SQL text. Columns come from
+    // the catalog snapshot (one cache-cold build per query).
     QueryCatalog.all.foreach { q =>
       q.oracle.foreach { sql =>
-        val cols = q.fn(spark, sf).columns
+        val cols = SparkSpec.catalogEntry(q.name)._1.columns
         cols.foreach { c =>
           assert(sql.toLowerCase.contains(c.toLowerCase),
             s"${q.name}: column '$c' not mentioned in oracle SQL")

@@ -13,16 +13,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = LocalSession("4")
+
+  /** The catalog snapshot: every query built ONCE per test JVM at sf0.001,
+    * cache-cold, by the plan audit's own pass — its plan record plus the
+    * row count of that same frame. The full-catalog plan contracts and the
+    * per-row determinism case all read it instead of rebuilding the
+    * catalog each. */
+  lazy val catalog: ExplainAudit.Report[Long] =
+    ExplainAudit.audit(session, "/root/testdata/sf0.001")((_, df) => df.count())
+
+  /** One query's snapshot entry; a query that failed to build fails here
+    * with its build error. */
+  def catalogEntry(name: String): (ExplainAudit.PlanRecord, Long) =
+    catalog.records.find(_._1.query == name).getOrElse(
+      throw new IllegalStateException(s"$name is not in the catalog " +
+        s"snapshot: ${catalog.failures.toMap.getOrElse(name, "not built")}"))
 }

@@ -7,7 +7,8 @@ package graft
   * No Partition Defined` warnings in a Verify run are provably the
   * declared bounded sites, and a new unbounded global window (the
   * canonical 100 TB killer) fails the build instead of hiding in the
-  * warning noise.
+  * warning noise. The sites come from the catalog snapshot (one
+  * cache-cold `ExplainAudit.audit` pass per test JVM).
   *
   * Source-level inventory (SCALE.md "Unpartitioned windows"): q184's two
   * 10-row rank windows (plan-visible below TakeOrderedAndProject) and
@@ -18,8 +19,8 @@ package graft
 class WindowAuditSpec extends SparkSpec {
 
   test("every unpartitioned window in the catalog sits over a bounded frame") {
-    val WindowAudit.Report(sites, failures) = WindowAudit.audit(spark,
-      "/root/testdata/sf0.001", SparkEntry.queries.keys.toSeq.sorted)
+    val failures = SparkSpec.catalog.failures
+    val sites = SparkSpec.catalog.sites
     // a query whose plan cannot be built has unknown sites: it fails the
     // gate rather than passing it silently
     assert(failures.isEmpty, s"queries failed to plan: $failures")

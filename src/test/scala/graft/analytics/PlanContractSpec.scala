@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
+import graft.SparkSpec.catalog
 
 /** SCALE.md's physical-plan claims as build-failing contracts. Each
   * assertion encodes a property the 100 TB posture depends on (pushed
@@ -295,11 +296,13 @@ class PlanContractSpec extends SparkSpec {
       "q242_kn_perplexity_gate", // GlobalOrder offsets + 1-row count cross join (q144 shape)
       "q244_ivfpq", // index probe: broadcast centroid argmax (q105 allowance)
       "q250_pair_neardup") // q74's broadcast centroid assignment (ivfAssign)
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val p = fn(spark, sf).queryExecution.executedPlan.toString
-      assert(!p.contains("CartesianProduct"), s"$name plans a cartesian product")
+    // read from the catalog snapshot: one cache-cold build per query
+    assert(catalog.failures.isEmpty, s"queries failed to plan: ${catalog.failures}")
+    catalog.records.foreach { case (r, _) =>
+      val name = r.query
+      assert(!r.cartesian, s"$name plans a cartesian product")
       if (!bnljWhitelist(name))
-        assert(!p.contains("BroadcastNestedLoopJoin"),
+        assert(!r.nestedLoop,
           s"$name gained an unplanned nested-loop join")
     }
   }
@@ -532,23 +535,24 @@ class PlanContractSpec extends SparkSpec {
   }
 
   test("multi-scan ratchet: no query re-reads a source table more than its recorded bound") {
-    // The q182/q210 defect-class backstop (judge-ordered after q210
-    // shipped a 4x corpus scan one round after the rule was written
-    // down): ExplainAudit.tableScanCounts counts FileSourceScanExec
-    // nodes per root path in each query's PHYSICAL plan. Pinned frames
-    // (localCheckpoint) read as RDD scans, so a correctly-pinned
-    // multi-consumer dataflow counts its corpus pass ONCE. This is a
-    // RATCHET: the table below records each query's current worst
-    // per-table scan count (>= 3 only — 1-2 is the default allowance
-    // for self-joins / second passes); a new query or an edit may only
-    // LOWER a bound, never raise it. The remaining >= 3 rows are
-    // design-adjudicated: multi-statistic audits over cheap narrow
-    // scans (q99's six FK checks, q112's profile), inherently
-    // multi-pass algorithms (q124's greedy rounds, q172's per-span
+    // The q182/q210 defect-class backstop (judge-ordered after q210 shipped a
+    // 4x corpus scan one round after the rule was written down):
+    // ExplainAudit.tableScanCounts counts FileSourceScanExec nodes per root
+    // path in each query's PHYSICAL plan, read from the catalog snapshot's
+    // CACHE-COLD builds (a warm session serves earlier queries' persisted
+    // frames and hides their scans: q124/q172 read 0 there, 6 cold). Pinned
+    // frames (localCheckpoint) read as RDD scans, so a correctly-pinned
+    // multi-consumer dataflow counts its corpus pass ONCE. This is a RATCHET:
+    // the table below records each query's current worst per-table scan count
+    // (>= 3 only — 1-2 is the default allowance for self-joins / second
+    // passes); a new query or an edit may only LOWER a bound, never raise it.
+    // The remaining >= 3 rows are design-adjudicated: multi-statistic audits
+    // over cheap narrow scans (q99's six FK checks, q112's profile),
+    // inherently multi-pass algorithms (q124's greedy rounds, q172's per-span
     // passes), or LSH/sketch families whose bands re-read a doc-sized
-    // signature frame — none re-derives an EXPENSIVE corpus transform
-    // per consumer (those are the pinned ones: q140 was x30, q150 x17,
-    // q88 x15, q95 x12, q210 x4 before round 10).
+    // signature frame — none re-derives an EXPENSIVE corpus transform per
+    // consumer (those are the pinned ones: q140 was x30, q150 x17, q88 x15,
+    // q95 x12, q210 x4 before round 10).
     val ratchet = Map(
       "q101_mad_outliers" -> 4, "q102_temperature_mix" -> 3,
       "q104_hybrid_indexed" -> 3, "q110_interdup_coverage" -> 3,
@@ -591,9 +595,9 @@ class PlanContractSpec extends SparkSpec {
     // Driver-action builder queries are SKIPPED, not ratcheted: their
     // builders execute a whole eager pipeline (driver actions +
     // localCheckpoint pins) and return a frame whose physical plan is a
-    // local/RDD relation with ZERO file scans — the ratchet would pay the
-    // full pipeline runtime to inspect a plan it is structurally blind
-    // to. Each carries its own scan contract instead: q224/q80 are pinned
+    // local/RDD relation with ZERO file scans — a plan the ratchet is
+    // structurally blind to. Each carries its own scan contract instead:
+    // q224/q80 are pinned
     // by WebCurateSpec's scanned-exactly-twice contract and
     // CorpusCurateSpec; q208's corpus encode/decode passes are pinned by
     // JpegCodecSpec + the observe-guard.
@@ -605,10 +609,10 @@ class PlanContractSpec extends SparkSpec {
       "q247_byte_bpe_train") // 3-round driver-held trainer -> local relation
       // (q248 stays ratcheted: its returned plan scans documents once for
       // the doc-word join; training pins are eager and plan-invisible)
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(kv => driverActionBuilders(kv._1)).flatMap {
-      case (name, fn) =>
-        val counts = graft.ExplainAudit.tableScanCounts(fn(spark, sf))
+    assert(catalog.failures.isEmpty, s"queries failed to plan: ${catalog.failures}")
+    val offenders = catalog.records.map(_._1)
+      .filterNot(r => driverActionBuilders(r.query)).flatMap { r =>
+        val (name, counts) = (r.query, r.scanCounts)
         val worst = if (counts.isEmpty) 0 else counts.values.max
         val allowed = ratchet.getOrElse(name, 2)
         if (worst > allowed)
