@@ -1,26 +1,11 @@
 package graft
 
 /** Regenerates CATALOG.md — the human-readable index of every catalog
-  * query — straight from [[QueryCatalog.all]], so the document can never
-  * drift from the code. Run after adding queries:
+  * query — straight from [[QueryCatalog.families]], one section per
+  * family, so the document can never drift from the code. Run after
+  * adding queries:
   * {{{ sbt "runMain graft.CatalogDoc" }}} */
 object CatalogDoc {
-
-  private val families = Seq(
-    "analytics/Relational.scala" -> graft.analytics.Relational.defs,
-    "text/TextQueries.scala" -> graft.text.TextQueries.defs,
-    "text/UnigramLm.scala" -> graft.text.UnigramLm.defs,
-    "dedup/DedupQueries.scala" -> graft.dedup.DedupQueries.defs,
-    "similarity/SimilarityQueries.scala" -> graft.similarity.SimilarityQueries.defs,
-    "analytics/GoldQueries.scala" -> graft.analytics.GoldQueries.defs,
-    "ml/MlQueries.scala" -> graft.ml.MlQueries.defs,
-    "analytics/LakeQueries.scala" -> graft.analytics.LakeQueries.defs)
-
-  // every catalog entry must appear in exactly one family section, so the
-  // rendered index can never silently drop a query family
-  require(families.flatMap(_._2).map(_.name).sorted ==
-    QueryCatalog.all.map(_.name).sorted,
-    "CatalogDoc.families is out of sync with QueryCatalog.all")
 
   def render(): String = {
     val sb = new StringBuilder
@@ -34,7 +19,7 @@ object CatalogDoc {
       "(engine-specific hash / approximate / sequential-merge / sketch), " +
       "each pinned by a named parity/recall/property spec " +
       "(see QueryCatalogSpec's rows-only allowlist).\n")
-    families.foreach { case (file, defs) =>
+    QueryCatalog.families.foreach { case (file, defs) =>
       sb.append(s"\n## src/main/scala/graft/$file (${defs.size} queries)\n\n")
       sb.append("| query | gate | what it does |\n|---|---|---|\n")
       defs.foreach { q =>

@@ -14,10 +14,11 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * rest on: output columns, cartesian / nested-loop joins, per-table scan
   * counts, unpartitioned-window sites, and a hash of the normalized
   * optimized plan. The tool prints `.explain("formatted")`, the scan
-  * counts and a `PLAN <name> <hash>` line per query, then the window
-  * inventory; it exits 2 when a query fails to build or an unpartitioned
-  * window has no row bound below it. Plan identity between two commits is
-  * a `diff` of their `PLAN` lines. Usage:
+  * counts and a `PLAN <name> <hash>` line per query, an `ORACLE <name>
+  * <hash>` line per query with a DuckDB oracle, then the window inventory;
+  * it exits 2 when a query fails to build or an unpartitioned window has
+  * no row bound below it. Plan and oracle identity between two commits
+  * are a `diff` of their `PLAN` and `ORACLE` lines. Usage:
   *   runMain graft.ExplainAudit <sfDir> [queryName...]
   */
 object ExplainAudit {
@@ -105,9 +106,15 @@ object ExplainAudit {
       case (text, (re, to)) => re.replaceAllIn(text, to)
     }
 
-  def planHash(df: DataFrame): String =
-    MessageDigest.getInstance("SHA-256")
-      .digest(normalizedPlan(df).getBytes("UTF-8"))
+  def planHash(df: DataFrame): String = hash(normalizedPlan(df))
+
+  /** The identity of a query's oracle: its SQL with whitespace collapsed,
+    * so re-indenting a spliced fragment keeps the hash and any token
+    * change moves it. */
+  def oracleHash(sql: String): String = hash(sql.trim.replaceAll("\\s+", " "))
+
+  private def hash(text: String): String =
+    MessageDigest.getInstance("SHA-256").digest(text.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
 
   def record(query: String, df: DataFrame): PlanRecord = {
@@ -142,6 +149,9 @@ object ExplainAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val report = audit(spark, sfDir, names)(show)
+    val oracles = SparkEntry.oracleSql
+    names.filter(oracles.contains).foreach(n =>
+      println(s"ORACLE $n ${oracleHash(oracles(n))}"))
     report.failures.foreach { case (n, msg) =>
       println(s"WINDOW-AUDIT-FAILED: $n $msg")
     }

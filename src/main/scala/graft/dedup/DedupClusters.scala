@@ -50,6 +50,23 @@ object DedupClusters {
   def connectedComponents(pairs: DataFrame): DataFrame =
     connectedComponents(pairs, LocalEdgeLimit)
 
+  /** DuckDB twin of [[connectedComponents]]' reachability: the `edges`
+    * and recursive `reach(src, dst)` CTEs over the `pairs` CTE's
+    * `(doc_a, doc_b)` rows, for a statement opened with `WITH RECURSIVE`. */
+  private[graft] def reachSql(pairs: String): String = s"""edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM $pairs
+        UNION SELECT doc_b, doc_a FROM $pairs),
+      reach(src, dst) AS (
+        SELECT src, dst FROM edges
+        UNION
+        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)"""
+
+  /** The min-label query over [[reachSql]]'s `reach`: (doc_id,
+    * cluster_id = min doc_id reachable), as [[connectedComponents]]. */
+  private[graft] def clusterLabelSql: String =
+    """SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
+        FROM reach GROUP BY src"""
+
   /** [[connectedComponents]] with the local bound as a parameter, so
     * specs reach both paths (0 forces the distributed loop). */
   private[dedup] def connectedComponents(pairs: DataFrame, localLimit: Int)

@@ -42,6 +42,15 @@ object DedupQueries {
       "i -> i < size(__toks) - 2), " +
       "i -> concat_ws(' ', slice(__toks, i + 1, 3))))"
 
+  /** DuckDB twin of [[shinglesOfToks]]: the distinct word 3-grams of the
+    * SQL expression `text`, split on single spaces. */
+  private[graft] def gramSetSql(text: String = "text"): String =
+    s"""list_distinct(list_transform(
+          range(1, greatest(len(string_split($text, ' ')) - 1, 1)),
+          i -> string_split($text, ' ')[i] || ' ' ||
+               string_split($text, ' ')[i+1] || ' ' ||
+               string_split($text, ' ')[i+2]))"""
+
   private[dedup] def tokenized(df: DataFrame): DataFrame =
     df.withColumn("__toks", split(col("text"), " "))
 
@@ -85,6 +94,49 @@ object DedupQueries {
     * at or below 19 play the new batch; the rest is the standing base. */
   private[graft] val isDelta: Column =
     substring(md5(col("doc_id").cast("string")), 1, 2) <= "19"
+
+  /** The held-out eval split of the contamination family (q64, q203/q209,
+    * q211/q213): the ~4% of ids whose md5 hex starts at or below 0a. */
+  private[graft] def isEval(id: Column): Column =
+    substring(md5(id.cast("string")), 1, 2) <= "0a"
+
+  /** DuckDB twin of [[isEval]] over the SQL id column `id`. */
+  private[graft] def isEvalSql(id: String): String =
+    s"substr(md5(CAST($id AS VARCHAR)), 1, 2) <= '0a'"
+
+  /** DuckDB twin of `!isEval(id)`: the training side of the split. */
+  private[graft] def isTrainSql(id: String): String =
+    s"substr(md5(CAST($id AS VARCHAR)), 1, 2) > '0a'"
+
+  /** DuckDB twin of the exact gram-set Jaccard that [[ngramJaccard]] and
+    * [[SetSimIndex.verify]] compute: |a ∩ b| / |a ∪ b| over the `grams`
+    * lists of the relations aliased `a` and `b`. */
+  private[graft] def jaccardSql(a: String, b: String): String =
+    s"""CAST(len(list_intersect($a.grams, $b.grams)) AS DOUBLE) /
+            (len($a.grams) + len($b.grams) - len(list_intersect($a.grams, $b.grams)))"""
+
+  /** DuckDB twin of [[SetSimIndex.verify]] at tau 0.5 over
+    * `g(doc_id, grams)` self-joined as `a`/`b` on `on`: the pairs
+    * (doc_a, doc_b, jaccard) rounded to 6 places, ending the statement. */
+  private[graft] def setSimPairsSql(on: String): String = s"""p AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+          len(list_intersect(a.grams, b.grams)) AS inter,
+          len(a.grams) AS sa, len(b.grams) AS sb
+        FROM g a JOIN g b ON $on)
+      SELECT doc_a, doc_b,
+        round(CAST(inter AS DOUBLE) / (sa + sb - inter), 6) AS jaccard
+      FROM p
+      WHERE CAST(inter AS DOUBLE) / nullif(sa + sb - inter, 0) >= 0.5"""
+
+  /** DuckDB twin of q57's edge set, [[ngramJaccard]]'s within-source
+    * pairs kept at Jaccard >= 0.6: the body of a `pairs(doc_a, doc_b)`
+    * CTE over `g(doc_id, source, grams)`. */
+  private[graft] def sourcePairsSql: String = s"""
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id
+                          AND len(a.grams) + len(b.grams) > 0
+        WHERE ${jaccardSql("a", "b")}
+          >= 0.6"""
 
   /** Docs with their 3-gram shingle sets hashed to SORTED long arrays —
     * the shared exact-verification input (q38 all-pairs, q62 candidate
@@ -458,15 +510,11 @@ object DedupQueries {
     * positives, so both queries compute the same relation by construction
     * — one oracle string keeps that claim honest the same way q202 shares
     * q149's. */
-  private[dedup] val decontamOracleSql = """
+  private[dedup] val decontamOracleSql = s"""
       WITH g AS (
         SELECT doc_id,
-          substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '0a' AS is_eval,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${isEvalSql("doc_id")} AS is_eval,
+          ${gramSetSql()} AS grams
         FROM documents),
       ev AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE is_eval),
       tr AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE NOT is_eval),
@@ -796,11 +844,11 @@ object DedupQueries {
   /** Shared oracle for q251 (inline incremental) and q252 (the same
     * semantics served from the persisted window-hash index): brute
     * all-50-grams with base-first ordering, delta rows only. */
-  private val exactSubstrIncrOracle: String = """
+  private val exactSubstrIncrOracle: String = s"""
       WITH tkt AS (
         SELECT doc_id,
           substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '19' AS is_delta,
-          list_filter(string_split(text, ' '), w -> len(w) > 0) AS tk
+          ${TextSignals.wordsSql()} AS tk
         FROM documents),
       g AS (
         SELECT doc_id, is_delta, s.pos AS pos, s.gram AS gram FROM (
@@ -830,33 +878,20 @@ object DedupQueries {
   /** Shared oracle for q149 (inline delta-vs-base set-sim join) and q202
     * (the same pairs served from the persisted [[SetSimIndex]]): brute
     * all delta × base string-set Jaccard ≥ 0.5. */
-  private val setSimIncrOracle: String = """
+  private val setSimIncrOracle: String = s"""
       WITH g AS (
         SELECT doc_id,
           substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '19' AS is_delta,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
-      p AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          len(list_intersect(a.grams, b.grams)) AS inter,
-          len(a.grams) AS sa, len(b.grams) AS sb
-        FROM g a JOIN g b ON (NOT a.is_delta) AND b.is_delta)
-      SELECT doc_a, doc_b,
-        round(CAST(inter AS DOUBLE) / (sa + sb - inter), 6) AS jaccard
-      FROM p
-      WHERE CAST(inter AS DOUBLE) / nullif(sa + sb - inter, 0) >= 0.5"""
+      ${setSimPairsSql("(NOT a.is_delta) AND b.is_delta")}"""
 
   val defs: Seq[QueryDef] = Seq(
 
     // ── ExactSubstr span dedup (see exactSubstrDedup block scaladoc) ───
-    QueryDef("q249_exact_substr", (s, d) => exactSubstrDedup(s, d), Some("""
+    QueryDef("q249_exact_substr", (s, d) => exactSubstrDedup(s, d), Some(s"""
       WITH tkt AS (
-        SELECT doc_id, list_filter(string_split(text, ' '),
-          w -> len(w) > 0) AS tk
+        SELECT doc_id, ${TextSignals.wordsSql()} AS tk
         FROM documents),
       g AS (
         SELECT doc_id, s.pos AS pos, s.gram AS gram FROM (
@@ -963,18 +998,13 @@ object DedupQueries {
       guardBruteForce(s, d, "q38_ngram_jaccard")
       ngramJaccard(hashedGrams(s, d).persist())
     },
-      Some("""
+      Some(s"""
       WITH g AS (
         SELECT doc_id, source,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents)
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-          (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
+        ${jaccardSql("a", "b")}
           AS jaccard
       FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id
                         AND len(a.grams) + len(b.grams) > 0"""),
@@ -994,31 +1024,14 @@ object DedupQueries {
       val jac = ngramJaccard(pins.persist(hashedGrams(s, d)))
       DedupClusters.connectedComponents(
         jac.filter(col("jaccard") >= 0.6).select("doc_a", "doc_b"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE g AS (
         SELECT doc_id, source,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
-      pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id
-                          AND len(a.grams) + len(b.grams) > 0
-        WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-          (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
-          >= 0.6),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-      SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-      FROM reach GROUP BY src"""),
+      pairs AS ($sourcePairsSql),
+      ${DedupClusters.reachSql("pairs")}
+      ${DedupClusters.clusterLabelSql}"""),
       notes = "near-dup clusters: min-label-propagation CC over jaccard>=0.6 pairs"),
 
     // ── Duplicate-cluster resolution, SCALE PATH (LSH-fed) ─────────────
@@ -1055,11 +1068,10 @@ object DedupQueries {
     // joins the gram strings — identical counts modulo 2^-64 collisions,
     // the same argument as q38.
     QueryDef("q64_contamination", (s, d) => {
-      val isEval = substring(md5(col("doc_id").cast("string")), 1, 2) <= "0a"
-      // PINNED (r14): one explode+hash pass serves the eval and train
+      // PINNED: one explode+hash pass serves the eval and train
       // splits (it ran 3x unpinned — ev, tr's cap agg, tr's join side).
       val grams = tokenized(t(s, d, "documents"))
-        .select(col("doc_id"), isEval.as("is_eval"),
+        .select(col("doc_id"), isEval(col("doc_id")).as("is_eval"),
           explode(expr(shinglesOfToks)).as("gram"))
         .select(col("doc_id"), col("is_eval"), xxhash64(col("gram")).as("g"))
         .persist()
@@ -1094,20 +1106,16 @@ object DedupQueries {
           // eval docs with zero grams never emit gram rows, so n_eval_grams
           // here is always > 0 — the division is total
           (col("n_shared").cast("double") / col("n_eval_grams")).as("overlap"))
-    }, Some("""
+    }, Some(s"""
       WITH g AS (
         SELECT doc_id,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
       ex AS (SELECT doc_id, unnest(grams) AS gram FROM g),
       ev AS (SELECT doc_id AS eval_doc, gram FROM ex
-             WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '0a'),
+             WHERE ${isEvalSql("doc_id")}),
       tr AS (SELECT doc_id AS train_doc, gram FROM ex
-             WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) > '0a'),
+             WHERE ${isTrainSql("doc_id")}),
       keep AS (SELECT gram FROM tr GROUP BY gram
                HAVING count(DISTINCT train_doc) <= 64),
       shared AS (
@@ -1183,21 +1191,13 @@ object DedupQueries {
         when(total > 0,
           lit(1.0) - distinctG.cast("double") / total.cast("double"))
           .otherwise(lit(0.0)).as("rep_fraction"))
-    }, Some("""
+    }, Some(s"""
       SELECT doc_id,
         CAST(greatest(len(string_split(text, ' ')) - 2, 0) AS BIGINT)
           AS n_grams_total,
-        CAST(len(list_distinct(list_transform(
-          range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-          i -> string_split(text, ' ')[i] || ' ' ||
-               string_split(text, ' ')[i+1] || ' ' ||
-               string_split(text, ' ')[i+2]))) AS BIGINT) AS n_grams_distinct,
+        CAST(len(${gramSetSql()}) AS BIGINT) AS n_grams_distinct,
         CASE WHEN len(string_split(text, ' ')) - 2 > 0
-          THEN 1.0 - CAST(len(list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2]))) AS DOUBLE)
+          THEN 1.0 - CAST(len(${gramSetSql()}) AS DOUBLE)
             / (len(string_split(text, ' ')) - 2)
           ELSE 0.0 END AS rep_fraction
       FROM documents"""),
@@ -1227,32 +1227,15 @@ object DedupQueries {
         .select("doc_a", "doc_b")
       canonicalElection(DedupClusters.connectedComponents(pairs),
         t(s, d, "documents"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE g AS (
         SELECT doc_id, source,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
-      pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id
-                          AND len(a.grams) + len(b.grams) > 0
-        WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-          (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
-          >= 0.6),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      pairs AS ($sourcePairsSql),
+      ${DedupClusters.reachSql("pairs")},
       clusters AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-        FROM reach GROUP BY src),
+        ${DedupClusters.clusterLabelSql}),
       ranked AS (
         SELECT c.cluster_id, c.doc_id, d.n_chars,
           row_number() OVER (PARTITION BY c.cluster_id
@@ -1287,11 +1270,11 @@ object DedupQueries {
         .groupBy("source_a", "source_b")
         .agg(count(lit(1)).as("n_shared_fps"),
           sum(col("cnt_a") * col("cnt_b")).as("n_doc_pairs"))
-    }, Some("""
+    }, Some(s"""
       WITH f AS (
         SELECT source,
           md5(array_to_string(
-            list_filter(string_split(text, ' '), t -> len(t) > 0)[1:15], ' '))
+            ${TextSignals.wordsSql()}[1:15], ' '))
             AS fp
         FROM documents),
       g AS (SELECT fp, source, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1317,14 +1300,10 @@ object DedupQueries {
     // see. Shapes: gram-keyed shuffles + id-keyed candidate dedup; no
     // quadratic stage.
     QueryDef("q95_containment",
-      (s, d) => containmentPairsOf(t(s, d, "documents"), 0.8), Some("""
+      (s, d) => containmentPairsOf(t(s, d, "documents"), 0.8), Some(s"""
       WITH g AS (
         SELECT doc_id,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
       ex AS (SELECT doc_id, unnest(grams) AS gram FROM g),
       keep AS (SELECT gram FROM ex GROUP BY gram
@@ -1415,14 +1394,10 @@ object DedupQueries {
           coalesce(col("n_shared"), lit(0L)).as("n_shared"),
           coalesce(col("n_shared").cast("double") / col("n_grams"), lit(0.0))
             .as("dup_frac"))
-    }, Some("""
+    }, Some(s"""
       WITH g AS (
         SELECT doc_id,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
       ex AS (SELECT doc_id, unnest(grams) AS gram FROM g),
       gdf AS (SELECT gram, count(DISTINCT doc_id) AS df FROM ex GROUP BY gram),
@@ -1578,24 +1553,12 @@ object DedupQueries {
         .distinct()
       SetSimIndex.verify(cand, docs, tau)
         .withColumn("jaccard", round(col("jaccard"), 6))
-    }, Some("""
+    }, Some(s"""
       WITH g AS (
         SELECT doc_id,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
-      p AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          len(list_intersect(a.grams, b.grams)) AS inter,
-          len(a.grams) AS sa, len(b.grams) AS sb
-        FROM g a JOIN g b ON a.doc_id < b.doc_id)
-      SELECT doc_a, doc_b,
-        round(CAST(inter AS DOUBLE) / (sa + sb - inter), 6) AS jaccard
-      FROM p
-      WHERE CAST(inter AS DOUBLE) / nullif(sa + sb - inter, 0) >= 0.5"""),
+      ${setSimPairsSql("a.doc_id < b.doc_id")}"""),
       notes = "exact corpus-wide Jaccard>=0.5 join via rarest-first prefix filtering (lossless candidate generation, per-doc local sorts only) + codegen intersect verify vs the oracle's brute n^2"),
 
     // ── Incremental exact near-dup: delta vs base (the serving shape) ──
@@ -1754,11 +1717,11 @@ object DedupQueries {
           expr("""CAST(round(graft_theta_estimate(
                     graft_theta_anotb(sk_a, sk_b))) AS BIGINT)""")
             .as("n_only_a"))
-    }, Some("""
+    }, Some(s"""
       WITH f AS (
         SELECT source,
           md5(array_to_string(
-            list_filter(string_split(text, ' '), t -> len(t) > 0)[1:15], ' '))
+            ${TextSignals.wordsSql()}[1:15], ' '))
             AS fp
         FROM documents),
       g AS (SELECT DISTINCT source, fp FROM f),
@@ -1803,32 +1766,15 @@ object DedupQueries {
       grouped.withColumn("split",
         when(u < 0.90, lit("train")).when(u < 0.95, lit("val"))
           .otherwise(lit("test")))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE g AS (
         SELECT doc_id, source,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
-      pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id
-                          AND len(a.grams) + len(b.grams) > 0
-        WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-          (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
-          >= 0.6),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      pairs AS ($sourcePairsSql),
+      ${DedupClusters.reachSql("pairs")},
       cl AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-        FROM reach GROUP BY src),
+        ${DedupClusters.clusterLabelSql}),
       grouped AS (
         SELECT d.doc_id,
           COALESCE(cl.cluster_id, d.doc_id) AS group_id,
@@ -1911,10 +1857,9 @@ object DedupQueries {
           array_join(expr(
             "transform(array_sort(collect_list(CASE WHEN c IS NULL THEN " +
               "struct(pos, tok) END)), x -> x.tok)"), " ").as("clean_text"))
-    }, Some("""
+    }, Some(s"""
       WITH tk AS (
-        SELECT doc_id, list_filter(string_split(text, ' '),
-          x -> len(x) > 0) AS t
+        SELECT doc_id, ${TextSignals.wordsSql()} AS t
         FROM documents),
       w AS (
         SELECT doc_id, i AS pos, array_to_string(t[i : i + 7], ' ') AS win
@@ -1989,10 +1934,10 @@ object DedupQueries {
           array_join(expr(
             "transform(array_sort(collect_list(CASE WHEN c IS NULL THEN " +
               "struct(pos, tok) END)), x -> x.tok)"), " ").as("clean_text"))
-    }, Some("""
+    }, Some(s"""
       WITH tk AS (
         SELECT doc_id,
-          list_filter(string_split(text, ' '), x -> len(x) > 0) AS t,
+          ${TextSignals.wordsSql()} AS t,
           substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '19' AS is_delta
         FROM documents),
       w AS (
@@ -2062,14 +2007,10 @@ object DedupQueries {
           round(coalesce(col("n_both"), lit(0L)).cast("double") /
             (col("n_a") + col("n_b") - coalesce(col("n_both"), lit(0L))), 6)
             .as("set_jaccard"))
-    }, Some("""
+    }, Some(s"""
       WITH g AS (
         SELECT doc_id, source,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
       m1 AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2188,7 +2129,7 @@ object DedupQueries {
         .select(col("cluster_id"), col("n_members"), col("n_entities"),
           (-col("g.nk")).as("golden_rec_id"),
           col("g.ab").as("golden_acctbal"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE rec AS (
         SELECT c_custkey * 2 AS rec_id, c_custkey AS entity_key,
           substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12) AS name,
@@ -2206,16 +2147,9 @@ object DedupQueries {
          AND (substr(a.name, 1, 6) = substr(b.name, 1, 6)
            OR substr(a.name, 7, 6) = substr(b.name, 7, 6))
         WHERE levenshtein(a.name, b.name) <= 1),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      ${DedupClusters.reachSql("pairs")},
       cc AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-        FROM reach GROUP BY src),
+        ${DedupClusters.clusterLabelSql}),
       mem AS (
         SELECT cc.cluster_id, r.rec_id, r.entity_key, r.c_acctbal
         FROM cc JOIN rec r ON r.rec_id = cc.doc_id),
@@ -2338,11 +2272,7 @@ object DedupQueries {
     }, Some(s"""
       WITH g AS (
         SELECT doc_id,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
       ex AS (SELECT doc_id, unnest(grams) AS gram FROM g),
       sig AS (
@@ -2434,10 +2364,9 @@ object DedupQueries {
     // Total per-doc contract: gramless (<= 2 token) train docs keep a
     // row with n_grams 0 / kept.
     QueryDef("q203_decontaminate", (s, d) => {
-      val isEval = substring(md5(col("doc_id").cast("string")), 1, 2) <= "0a"
       val docs = t(s, d, "documents")
-      decontaminateAgainst(docs.filter(!isEval),
-        evalGramSetOf(docs.filter(isEval)))
+      decontaminateAgainst(docs.filter(!isEval(col("doc_id"))),
+        evalGramSetOf(docs.filter(isEval(col("doc_id")))))
     }, Some(decontamOracleSql),
       notes = "eval-set decontamination removal (q64's enforcement twin): train docs vs the eval UNION gram set — ratio >= 1/2 or absolute >= 8 shared shingles drops the doc; set-membership join (fan-out <= 1, no DF cap, nothing pairwise), one gram join + one doc agg at any scale"),
 
@@ -2539,11 +2468,7 @@ object DedupQueries {
       s"""
       WITH RECURSIVE g AS (
         SELECT doc_id,
-          list_distinct(list_transform(
-            range(1, greatest(len(string_split(text, ' ')) - 1, 1)),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i+1] || ' ' ||
-                 string_split(text, ' ')[i+2])) AS grams
+          ${gramSetSql()} AS grams
         FROM documents),
       ex AS (SELECT doc_id, unnest(grams) AS gram FROM g),
       sig AS (
@@ -2567,19 +2492,10 @@ object DedupQueries {
         JOIN g gb ON gb.doc_id = c.doc_b
         WHERE len(ga.grams) + len(gb.grams)
                 - len(list_intersect(ga.grams, gb.grams)) > 0
-          AND CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE) /
-              (len(ga.grams) + len(gb.grams)
-                - len(list_intersect(ga.grams, gb.grams))) >= 0.6),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+          AND ${jaccardSql("ga", "gb")} >= 0.6),
+      ${DedupClusters.reachSql("pairs")},
       cc AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-        FROM reach GROUP BY src),
+        ${DedupClusters.clusterLabelSql}),
       ranked AS (
         SELECT c.cluster_id, c.doc_id, d.n_chars,
           row_number() OVER (PARTITION BY c.cluster_id
@@ -2656,7 +2572,7 @@ object DedupQueries {
           col("base_match").isNull.cast("long").as("is_new"),
           (col("base_match").isNull && col("cluster_id").isNotNull)
             .cast("long").as("merged_in_delta"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE base AS (
         SELECT c_custkey * 2 AS rec_id, c_custkey AS entity_key,
           substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12) AS name
@@ -2694,16 +2610,9 @@ object DedupQueries {
          AND (substr(a.name, 1, 6) = substr(b.name, 1, 6)
            OR substr(a.name, 7, 6) = substr(b.name, 7, 6))
         WHERE levenshtein(a.name, b.name) <= 1),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM rpairs
-        UNION SELECT doc_b, doc_a FROM rpairs),
-      reach(src, dst) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      ${DedupClusters.reachSql("rpairs")},
       cc AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-        FROM reach GROUP BY src)
+        ${DedupClusters.clusterLabelSql})
       SELECT jd.rec_id, jd.entity_key,
         CAST(jd.base_match IS NOT NULL AS BIGINT) AS matched,
         COALESCE(jd.base_match, cc.cluster_id, jd.rec_id)
@@ -2761,13 +2670,13 @@ object DedupQueries {
     // that the semi join then adjudicates on the real gram).
     QueryDef("q209_decontaminate_bloom", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      val isEval = substring(md5(col("doc_id").cast("string")), 1, 2) <= "0a"
       val docs = t(s, d, "documents")
       // Eval grams are consumed three times (count for sketch sizing,
       // sketch build, exact verify) — pin once; the eval side is bounded
       // by contract (it is the EVAL set), so materializing it is the
       // cheap side of the trade.
-      val ev = evalGramSetOf(docs.filter(isEval)).localCheckpoint(true)
+      val ev = evalGramSetOf(docs.filter(isEval(col("doc_id"))))
+        .localCheckpoint(true)
       val nEval = math.max(ev.count(), 1L)
       val sketch = ev.select(xxhash64(col("gram")).as("h"))
         .stat.bloomFilter("h", nEval, 0.01)
@@ -2776,7 +2685,7 @@ object DedupQueries {
         sketch.writeTo(out)
         out.toByteArray
       }
-      val train = docs.filter(!isEval)
+      val train = docs.filter(!isEval(col("doc_id")))
       val g = tokenized(train)
         .select(col("doc_id"), explode(expr(shinglesOfToks)).as("gram"))
       val perDoc = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))

@@ -526,8 +526,7 @@ object MlQueries {
         SELECT doc_id, lang, is_train,
           CAST('0x' || substr(md5(tok), 1, 2) AS BIGINT) AS b
         FROM (SELECT doc_id, lang, is_train,
-                unnest(list_filter(string_split(text, ' '),
-                  t -> len(t) > 0)) AS tok
+                unnest(${TextSignals.wordsSql()}) AS tok
               FROM split)),
       cb AS (SELECT b,
           SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS c_en,
@@ -870,8 +869,7 @@ object MlQueries {
         SELECT doc_id, lang, source,
           CAST('0x' || substr(md5(tok), 1, 2) AS BIGINT) AS b
         FROM (SELECT doc_id, lang, source,
-                unnest(list_filter(string_split(text, ' '),
-                  t -> len(t) > 0)) AS tok
+                unnest(${TextSignals.wordsSql()}) AS tok
               FROM documents)),
       cb AS (SELECT b,
           SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS c_en,
@@ -1190,8 +1188,7 @@ object MlQueries {
         SELECT doc_id, lang,
           CAST('0x' || substr(md5(tok), 1, 2) AS BIGINT) AS b
         FROM (SELECT doc_id, lang,
-                unnest(list_filter(string_split(text, ' '),
-                  t -> len(t) > 0)) AS tok
+                unnest(${TextSignals.wordsSql()}) AS tok
               FROM documents)),
       cb AS (SELECT b,
           SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS c_en,

@@ -616,14 +616,38 @@ object Multimodal {
   /** 8×8 DCT-II basis at 1e6 integer scale: B(u)(x) = round(c(u) ·
     * cos(π(2x+1)u/16) · 1e6) with c(0) = √(1/8), c(u>0) = 1/2.
     * StrictMath (fdlibm bit-specified) so the constants are identical on
-    * every JVM; the q241 oracle string interpolates THIS array, so both
-    * engines share the same integer basis by construction. */
+    * every JVM; the pHash oracles interpolate THIS array ([[dctBasisSql]]),
+    * so both engines share the same integer basis by construction. */
   private[graft] val DctBasisMicro: Array[Array[Long]] =
     Array.tabulate(8, 8) { (u, x) =>
       val c = if (u == 0) StrictMath.sqrt(1.0 / 8.0) else 0.5
       StrictMath.round(
         c * StrictMath.cos(StrictMath.PI * (2 * x + 1) * u / 16.0) * 1e6)
     }
+
+  /** DuckDB twin of [[DctBasisMicro]]: the CTE `bas(b)`, the basis as
+    * one flat 64-entry list, row-major by u. */
+  private[graft] def dctBasisSql: String =
+    s"bas AS (SELECT [${DctBasisMicro.flatten.mkString(",")}] AS b)"
+
+  /** DuckDB twin of [[phashOf]] over `px(id, p)`, an image's 64 resampled
+    * pixels: [[dctBasisSql]], the exact integer DCT `co`, the 63-AC lower
+    * median `med`, and the sign-bit hash `sig(id, ph)`. */
+  private[graft] def phashSql: String = s"""$dctBasisSql,
+      co AS (
+        SELECT id, (v*8 + u) AS idx,
+          SUM(p[(y*8+x)+1] * b[(u*8+x)+1] * b[(v*8+y)+1]) AS c
+        FROM px, bas, range(8) tu(u), range(8) tv(v),
+             range(8) tx(x), range(8) ty(y)
+        GROUP BY 1, 2),
+      med AS (SELECT id, c AS m FROM (
+        SELECT id, c, row_number() OVER (PARTITION BY id ORDER BY c, idx)
+          AS rn
+        FROM co WHERE idx >= 1) WHERE rn = 32),
+      sig AS (SELECT co.id, CAST(SUM(CASE WHEN co.c > med.m
+              THEN CAST(1 AS BIGINT) << CAST(co.idx - 1 AS INT)
+              ELSE 0 END) AS BIGINT) AS ph
+            FROM co JOIN med USING (id) WHERE co.idx >= 1 GROUP BY 1)"""
 
   /** pHash — the DCT upgrade of [[imageAHash]]: resample to 8×8 (same
     * nearest-neighbor path, so the two hashes share their input grid),

@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{Ops, QueryDef}
+import graft.dedup.DedupQueries
 import Ops._
-import graft.functions.DetMathSql
+import graft.text.{TextQueries, TextSignals}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -145,6 +146,31 @@ object SimilarityQueries {
         (cl, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq) }
       .toSeq.sortBy(_._1)
 
+  /** DuckDB twin of [[trainedCentroids]]' lowest-id init and first
+    * [[lloydStep]] over `v(vec_id, e)`: seeds `c0` (`vec_id < k`), the
+    * nearest-seed assignment `d1`/`m1`, and the exact micro-unit means
+    * `z1`/`c1`, ending in the step-1 centroids `c1l(cent_id, ce)`. */
+  private def lloydStep1Sql(k: Int): String =
+    s"""c0 AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id < $k),
+      d1 AS (
+        SELECT v.vec_id, c0.cent_id,
+          list_dot_product(v.e, v.e) - 2 * list_dot_product(v.e, c0.ce)
+            + list_dot_product(c0.ce, c0.ce) AS d2
+        FROM v CROSS JOIN c0),
+      m1 AS (
+        SELECT vec_id, cent_id AS cluster FROM d1
+        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) = 1),
+      z1 AS (
+        SELECT m1.cluster, unnest(list_zip(v.e, range(len(v.e)))) AS z
+        FROM v JOIN m1 USING (vec_id)),
+      c1 AS (
+        SELECT cluster, CAST(struct_extract(z, 2) AS BIGINT) AS pos,
+          ROUND(CAST(SUM(CAST(ROUND(struct_extract(z, 1) * 1000000) AS BIGINT)) AS DOUBLE)
+            / (1000000.0 * COUNT(*)), 6) AS cv
+        FROM z1 GROUP BY cluster, pos),
+      c1l AS (SELECT cluster AS cent_id, list(cv ORDER BY pos) AS ce
+              FROM c1 GROUP BY cluster)"""
+
   /** Lloyd-trained coarse quantizer shared by the IVF paths (q42b, q74):
     * deterministic lowest-id init (the q71 contract — ids are dense from 0
     * in the lake, so `vec_id < k` IS the k lowest) followed by `iters`
@@ -170,29 +196,10 @@ object SimilarityQueries {
     * q104 gate. Ends in `c2l(cent_id, ce)` — the stored centroids — and
     * `asg(vec_id, e, cell)` — the stored cells table. Callers open with
     * `WITH`, splice this, and compose probe stages on top (q104 single-
-    * query RRF, q114 multi-query vote). No `$` inside: safe to splice
-    * into s-interpolated oracle strings. */
-  private val IvfIndexSql: String = """
+    * query RRF, q114 multi-query vote). */
+  private def IvfIndexSql: String = s"""
       v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-      c0 AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id < 20),
-      d1 AS (
-        SELECT v.vec_id, c0.cent_id,
-          list_dot_product(v.e, v.e) - 2 * list_dot_product(v.e, c0.ce)
-            + list_dot_product(c0.ce, c0.ce) AS d2
-        FROM v CROSS JOIN c0),
-      m1 AS (
-        SELECT vec_id, cent_id AS cluster FROM d1
-        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) = 1),
-      z1 AS (
-        SELECT m1.cluster, unnest(list_zip(v.e, range(len(v.e)))) AS z
-        FROM v JOIN m1 USING (vec_id)),
-      c1 AS (
-        SELECT cluster, CAST(struct_extract(z, 2) AS BIGINT) AS pos,
-          ROUND(CAST(SUM(CAST(ROUND(struct_extract(z, 1) * 1000000) AS BIGINT)) AS DOUBLE)
-            / (1000000.0 * COUNT(*)), 6) AS cv
-        FROM z1 GROUP BY cluster, pos),
-      c1l AS (SELECT cluster AS cent_id, list(cv ORDER BY pos) AS ce
-              FROM c1 GROUP BY cluster),
+      ${lloydStep1Sql(20)},
       d2i AS (
         SELECT v.vec_id, c1l.cent_id,
           list_dot_product(v.e, v.e) - 2 * list_dot_product(v.e, c1l.ce)
@@ -797,27 +804,9 @@ ${probeCandSql("pc", "cand")}
       val c1 = lloydStep(all, init)
       assignToCentroids(all, c1)
         .select(col("vec_id"), col("cluster"), round(col("d2"), 6).as("d2"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-      c0 AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id < 8),
-      d1 AS (
-        SELECT v.vec_id, c0.cent_id,
-          list_dot_product(v.e, v.e) - 2 * list_dot_product(v.e, c0.ce)
-            + list_dot_product(c0.ce, c0.ce) AS d2
-        FROM v CROSS JOIN c0),
-      m1 AS (
-        SELECT vec_id, cent_id AS cluster FROM d1
-        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) = 1),
-      z1 AS (
-        SELECT m1.cluster, unnest(list_zip(v.e, range(len(v.e)))) AS z
-        FROM v JOIN m1 USING (vec_id)),
-      c1 AS (
-        SELECT cluster, CAST(struct_extract(z, 2) AS BIGINT) AS pos,
-          ROUND(CAST(SUM(CAST(ROUND(struct_extract(z, 1) * 1000000) AS BIGINT)) AS DOUBLE)
-            / (1000000.0 * COUNT(*)), 6) AS cv
-        FROM z1 GROUP BY cluster, pos),
-      c1l AS (SELECT cluster AS cent_id, list(cv ORDER BY pos) AS ce
-              FROM c1 GROUP BY cluster),
+      ${lloydStep1Sql(8)},
       d2s AS (
         SELECT v.vec_id, c1l.cent_id,
           list_dot_product(v.e, v.e) - 2 * list_dot_product(v.e, c1l.ce)
@@ -851,27 +840,9 @@ ${probeCandSql("pc", "cand")}
         t(s, d, "embeddings").select("vec_id", "embedding"))
       assigned.join(dominatedIn(assigned, 0.35), Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("cell"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-      c0 AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id < 20),
-      d1 AS (
-        SELECT v.vec_id, c0.cent_id,
-          list_dot_product(v.e, v.e) - 2 * list_dot_product(v.e, c0.ce)
-            + list_dot_product(c0.ce, c0.ce) AS d2
-        FROM v CROSS JOIN c0),
-      m1 AS (
-        SELECT vec_id, cent_id AS cluster FROM d1
-        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) = 1),
-      z1 AS (
-        SELECT m1.cluster, unnest(list_zip(v.e, range(len(v.e)))) AS z
-        FROM v JOIN m1 USING (vec_id)),
-      c1 AS (
-        SELECT cluster, CAST(struct_extract(z, 2) AS BIGINT) AS pos,
-          ROUND(CAST(SUM(CAST(ROUND(struct_extract(z, 1) * 1000000) AS BIGINT)) AS DOUBLE)
-            / (1000000.0 * COUNT(*)), 6) AS cv
-        FROM z1 GROUP BY cluster, pos),
-      c1l AS (SELECT cluster AS cent_id, list(cv ORDER BY pos) AS ce
-              FROM c1 GROUP BY cluster),
+      ${lloydStep1Sql(20)},
       asg AS (
         SELECT v.vec_id, v.e, c1l.cent_id AS cell
         FROM v CROSS JOIN c1l
@@ -1041,31 +1012,9 @@ ${probeCandSql("pc", "cand")}
           coalesce(col("r_lex"), lit(0L)).as("r_lex"),
           coalesce(col("r_vec"), lit(0L)).as("r_vec"))
     }, Some(s"""
-      WITH toks AS (
-        SELECT doc_id,
-          unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
-        FROM documents),
-      dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-             FROM toks GROUP BY doc_id),
-      stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS t_toks FROM toks),
+      WITH ${TextQueries.bm25CorpusSql},
       q AS (SELECT unnest(['query', 'dup', 'scan']) AS tok),
-      df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-             FROM toks JOIN q USING (tok) GROUP BY tok),
-      tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-             FROM toks JOIN q USING (tok) GROUP BY doc_id, tok),
-      terms AS (
-        SELECT tf.doc_id,
-          CAST(ROUND(
-            (${DetMathSql.lnLong("2 * stats.n_docs + 2")}
-                - ${DetMathSql.lnLong("2 * df.df + 1")})
-            * CAST(tf.tf AS DOUBLE) * 2.2
-            / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25
-                + 0.75 * CAST(dl.dl AS DOUBLE)
-                  / (CAST(tot.t_toks AS DOUBLE) / CAST(stats.n_docs AS DOUBLE))))
-            * 1000000) AS BIGINT) AS micro
-        FROM tf JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN tot
-        JOIN df ON df.tok = tf.tok),
+      ${TextQueries.bm25TermsSql("", "terms")},
       scored AS (SELECT doc_id, SUM(micro) AS s FROM terms GROUP BY doc_id),
       lex AS (
         SELECT doc_id,
@@ -1126,31 +1075,9 @@ ${probeCandSql("pc", "cand")}
     // state), not the one-time build.
     QueryDef("q104_hybrid_indexed",
       (s, d) => hybridIndexed(s, d, nProbe = 6, topN = 100), Some(s"""
-      WITH toks AS (
-        SELECT doc_id,
-          unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
-        FROM documents),
-      dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-             FROM toks GROUP BY doc_id),
-      stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS t_toks FROM toks),
+      WITH ${TextQueries.bm25CorpusSql},
       q AS (SELECT unnest(['query', 'dup', 'scan']) AS tok),
-      df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-             FROM toks JOIN q USING (tok) GROUP BY tok),
-      tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-             FROM toks JOIN q USING (tok) GROUP BY doc_id, tok),
-      terms AS (
-        SELECT tf.doc_id,
-          CAST(ROUND(
-            (${DetMathSql.lnLong("2 * stats.n_docs + 2")}
-                - ${DetMathSql.lnLong("2 * df.df + 1")})
-            * CAST(tf.tf AS DOUBLE) * 2.2
-            / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25
-                + 0.75 * CAST(dl.dl AS DOUBLE)
-                  / (CAST(tot.t_toks AS DOUBLE) / CAST(stats.n_docs AS DOUBLE))))
-            * 1000000) AS BIGINT) AS micro
-        FROM tf JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN tot
-        JOIN df ON df.tok = tf.tok),
+      ${TextQueries.bm25TermsSql("", "terms")},
       scored AS (SELECT doc_id, SUM(micro) AS s FROM terms GROUP BY doc_id),
       lex AS (
         SELECT doc_id,
@@ -1659,7 +1586,7 @@ ${probeCandSql("pc", "cand")}
     // is a train-keyed window (partition size = n_eval, bounded) with
     // the total (cos_sim desc, eval_id asc) tiebreak on both engines.
     QueryDef("q211_semantic_decontaminate", (s, d) => {
-      val isEval = substring(md5(col("vec_id").cast("string")), 1, 2) <= "0a"
+      val isEval = DedupQueries.isEval(col("vec_id"))
       val all = vecs(s, d)
       val ev = all.filter(isEval).toDF("eval_id", "ev", "en")
       val nEval = ev.count()
@@ -1678,10 +1605,10 @@ ${probeCandSql("pc", "cand")}
         .select(col("train_id"), col("eval_id").as("nearest_eval"),
           col("cos_sim").as("max_sim"),
           (col("cos_sim") >= 0.35).cast("long").as("dropped"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-          substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) <= '0a' AS is_eval
+          ${DedupQueries.isEvalSql("vec_id")} AS is_eval
         FROM embeddings),
       scored AS (
         SELECT t.vec_id AS train_id, q.vec_id AS eval_id,
@@ -1721,7 +1648,7 @@ ${probeCandSql("pc", "cand")}
     // quantizer.
     QueryDef("q213_semantic_decontaminate_indexed", (s, d) => {
       val (_, vName) = graft.IndexCache.ensure(s, d)
-      val isEval = substring(md5(col("vec_id").cast("string")), 1, 2) <= "0a"
+      val isEval = DedupQueries.isEval(col("vec_id"))
       val cents = s.table(s"${vName}_centroids")
       val cells = s.table(s"${vName}_cells")
       val emb = t(s, d, "embeddings")
@@ -1764,7 +1691,7 @@ ${probeCandSql("pc", "cand")}
     }, Some(s"""
       WITH ${IvfIndexSql}
       ev AS (SELECT vec_id FROM v
-             WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) <= '0a'),
+             WHERE ${DedupQueries.isEvalSql("vec_id")}),
       tq AS (SELECT vec_id AS query_id, e AS qe FROM v
              WHERE vec_id NOT IN (SELECT vec_id FROM ev)),
 ${probeCellsSql("tq", "tpc", 8)}
@@ -1792,7 +1719,7 @@ ${probeCandSql("epc", "ecand",
         b.cos_sim AS max_sim,
         COALESCE(CAST(b.cos_sim >= 0.35 AS BIGINT), 0) AS dropped
       FROM tq t LEFT JOIN best b ON b.train_id = t.query_id"""),
-      // HASH-GATED since r11: both probe directions (train->eval top-1,
+      // HASH-GATED: both probe directions (train->eval top-1,
       // eval->train threshold range search) replayed over the unrolled
       // stored quantizer — the q114 promotion applied to the
       // decontamination serving path.
@@ -2208,46 +2135,13 @@ ${probeCandSql("spc", "scand", " AND asg.vec_id % 50 = 0")}
           i -> (id*31 + (((i // 8) * h // 8) * w + ((i % 8) * w // 8)) * 7)
                % 256) AS p
         FROM im),
-      bas AS (SELECT [${graft.multimodal.Multimodal.DctBasisMicro
-        .flatten.mkString(",")}] AS b),
-      co AS (
-        SELECT id, (v*8 + u) AS idx,
-          SUM(p[(y*8+x)+1] * b[(u*8+x)+1] * b[(v*8+y)+1]) AS c
-        FROM px, bas, range(8) tu(u), range(8) tv(v),
-             range(8) tx(x), range(8) ty(y)
-        GROUP BY 1, 2),
-      med AS (SELECT id, c AS m FROM (
-        SELECT id, c, row_number() OVER (PARTITION BY id ORDER BY c, idx)
-          AS rn
-        FROM co WHERE idx >= 1) WHERE rn = 32),
-      sig AS (SELECT co.id, CAST(SUM(CASE WHEN co.c > med.m
-              THEN CAST(1 AS BIGINT) << CAST(co.idx - 1 AS INT)
-              ELSE 0 END) AS BIGINT) AS ph
-            FROM co JOIN med USING (id) WHERE co.idx >= 1 GROUP BY 1),
+      ${graft.multimodal.Multimodal.phashSql},
       ipairs AS (
         SELECT a.id AS pair_a, b.id AS pair_b
         FROM sig a JOIN sig b ON a.id < b.id
         WHERE bit_count(xor(a.ph, b.ph)) <= 3),
       v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-      c0 AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id < 20),
-      d1 AS (
-        SELECT v.vec_id, c0.cent_id,
-          list_dot_product(v.e, v.e) - 2 * list_dot_product(v.e, c0.ce)
-            + list_dot_product(c0.ce, c0.ce) AS d2
-        FROM v CROSS JOIN c0),
-      m1 AS (
-        SELECT vec_id, cent_id AS cluster FROM d1
-        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) = 1),
-      z1 AS (
-        SELECT m1.cluster, unnest(list_zip(v.e, range(len(v.e)))) AS z
-        FROM v JOIN m1 USING (vec_id)),
-      c1 AS (
-        SELECT cluster, CAST(struct_extract(z, 2) AS BIGINT) AS pos,
-          ROUND(CAST(SUM(CAST(ROUND(struct_extract(z, 1) * 1000000) AS BIGINT)) AS DOUBLE)
-            / (1000000.0 * COUNT(*)), 6) AS cv
-        FROM z1 GROUP BY cluster, pos),
-      c1l AS (SELECT cluster AS cent_id, list(cv ORDER BY pos) AS ce
-              FROM c1 GROUP BY cluster),
+      ${lloydStep1Sql(20)},
       asg AS (
         SELECT v.vec_id, v.e, c1l.cent_id AS cell
         FROM v CROSS JOIN c1l

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Pins
 import graft.analytics.{Ops, QueryDef}
+import graft.dedup.DedupQueries
 import Ops._
 import graft.functions.{DetMath, DetMathSql}
 
@@ -56,6 +57,40 @@ object TextQueries {
   }
 
   private[graft] val Bm25Terms = Seq("query", "dup", "scan")
+
+  /** DuckDB twin of the corpus side of [[bm25MicroScoresWhere]]: the word
+    * stream `toks(doc_id, tok)`, the doc lengths `dl`, `stats.n_docs` (a
+    * direct documents count) and `tot.t_toks`. */
+  private[graft] def bm25CorpusSql: String = s"""toks AS (
+        SELECT doc_id,
+          unnest(${TextSignals.wordsSql()}) AS tok
+        FROM documents),
+      dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
+             FROM toks GROUP BY doc_id),
+      stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+      tot AS (SELECT CAST(count(*) AS BIGINT) AS t_toks FROM toks)"""
+
+  /** DuckDB twin of [[bm25MicroScoresWhere]]'s scoring over
+    * [[bm25CorpusSql]]: for the query terms in CTE `q$r`, the CTEs `df$r`
+    * and `tf$r`, then `$terms(doc_id, micro)`, the per-(doc, term) BM25
+    * score in micro-units with every double sub-expression mirrored. */
+  private[graft] def bm25TermsSql(r: String, terms: String): String =
+    s"""df$r AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+             FROM toks JOIN q$r USING (tok) GROUP BY tok),
+      tf$r AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
+             FROM toks JOIN q$r USING (tok) GROUP BY doc_id, tok),
+      $terms AS (
+        SELECT tf$r.doc_id,
+          CAST(ROUND(
+            (${DetMathSql.lnLong("2 * stats.n_docs + 2")}
+                - ${DetMathSql.lnLong(s"2 * df$r.df + 1")})
+            * CAST(tf$r.tf AS DOUBLE) * 2.2
+            / (CAST(tf$r.tf AS DOUBLE) + 1.2 * (0.25
+                + 0.75 * CAST(dl.dl AS DOUBLE)
+                  / (CAST(tot.t_toks AS DOUBLE) / CAST(stats.n_docs AS DOUBLE))))
+            * 1000000) AS BIGINT) AS micro
+        FROM tf$r JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN tot
+        JOIN df$r ON df$r.tok = tf$r.tok)"""
 
   /** The token stream (doc_id, tok) of any (doc_id, text, ...) frame —
     * the BM25 scan path's and the [[PostingsIndex]]'s. NOT pinned: every
@@ -578,10 +613,9 @@ object TextQueries {
     * `bwc` carries the weights the selection sums. A def — interpolated
     * from both q247 and q248 oracles. */
   private def byteBpeT0: String =
-    """bwc AS (
+    s"""bwc AS (
       |  SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-      |    SELECT unnest(list_filter(string_split(text, ' '),
-      |      w -> len(w) > 0)) AS word
+      |    SELECT unnest(${TextSignals.wordsSql()}) AS word
       |    FROM documents)
       |  GROUP BY 1),
       |t0 AS (
@@ -624,8 +658,7 @@ object TextQueries {
        |${byteBpeRoundSql(3)},
        |wenc AS (SELECT doc AS word, CAST(count(*) AS BIGINT) AS n_syms
        |         FROM c3 GROUP BY 1),
-       |dw AS (SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-       |    w -> len(w) > 0)) AS word
+       |dw AS (SELECT doc_id, unnest(${TextSignals.wordsSql()}) AS word
        |  FROM documents)
        |SELECT d.doc_id,
        |  CAST(SUM(strlen(d.word)) AS BIGINT) AS n_bytes,
@@ -659,8 +692,7 @@ object TextQueries {
        |${byteBpeRoundSql(2)},
        |${byteBpeRoundSql(3)},
        |cdw AS (
-       |  SELECT page_id, unnest(list_filter(
-       |    string_split(nfc_normalize(ctext), ' '), w -> len(w) > 0)) AS word
+       |  SELECT page_id, unnest(${TextSignals.wordsSql("nfc_normalize(ctext)")}) AS word
        |  FROM sh),
        |cwd AS (SELECT DISTINCT word FROM cdw),
        |e0 AS (
@@ -812,7 +844,7 @@ object TextQueries {
     * the q237 model + per-doc scoring, shared by the q237 and q242
     * oracles. A def (interpolated from both above and below). */
   private def knOracleCore: String = s"""tkt AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> len(t) > 0)
+        SELECT doc_id, ${TextSignals.wordsSql()}
           AS tk
         FROM documents),
       bx AS (
@@ -948,11 +980,11 @@ object TextQueries {
   // q224/q235 share ONE oracle: the manifest is a pure function
   // of the page synthesis, and q235 feeds WebCurate the SAME pages
   // routed through the WARC container — identical numbers by design.
-  // Factored (r13) into the CTE chain + manifest tail so q253 can extend
+  // Factored into the CTE chain + manifest tail so q253 can extend
   // the SAME replay past curation into encode + packing: `webCurateCtes`
   // ends at `sh` (kept docs w/ ctext + shard_id), `webCurateNCte` is the
   // count snapshot, `webCurateManifestCols` the 13 manifest columns.
-  private def webCurateCtes: String = """pages AS (
+  private def webCurateCtes: String = raw"""pages AS (
         SELECT doc_id AS page_id, source, CAST(doc_id % 40 AS INT) AS cls,
           trim(text) || ' Tom & Jerry <3 >> "ok"' AS ctext
         FROM documents),
@@ -984,18 +1016,13 @@ object TextQueries {
           PARTITION BY md5(lower(replace(ctext, ' ', '')))
           ORDER BY page_id) = 1),
       g AS (
-        SELECT page_id, list_distinct(list_transform(
-          range(1, greatest(len(string_split(ctext, ' ')) - 1, 1)),
-          i -> string_split(ctext, ' ')[i] || ' ' ||
-               string_split(ctext, ' ')[i+1] || ' ' ||
-               string_split(ctext, ' ')[i+2])) AS grams
+        SELECT page_id, ${DedupQueries.gramSetSql("ctext")} AS grams
         FROM exact),
       drops AS (
         SELECT DISTINCT b.page_id
         FROM g a JOIN g b ON a.page_id < b.page_id
         WHERE len(a.grams) + len(b.grams) > 0
-          AND CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-            (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
+          AND ${DedupQueries.jaccardSql("a", "b")}
             >= 0.6),
       near AS (
         SELECT * FROM exact
@@ -1532,8 +1559,8 @@ object TextQueries {
     // of stored orientation: a pipeline that skipped the transform
     // produces a permuted raster whose DCT signs differ and the gate
     // goes red. The oracle computes the upright-formula pHash through
-    // the SAME integer DCT bank as q241 (shared DctBasisMicro
-    // interpolation). Scale: decode+hash in place, 3 longs per image.
+    // the SAME integer DCT bank as q241 (Multimodal.phashSql). Scale:
+    // decode+hash in place, 3 longs per image.
     QueryDef("q255_oriented_phash", (s, d) => {
       graft.multimodal.Multimodal.orientedPHash(
         graft.multimodal.Multimodal.jpegOrientedCorpus(s, d)).toDF()
@@ -1548,22 +1575,7 @@ object TextQueries {
           i -> (id*37 + ((((i // 8) * h // 8) // 8) * (w // 8)
                 + (((i % 8) * w // 8) // 8)) * 29) % 256) AS p
         FROM im),
-      bas AS (SELECT [${graft.multimodal.Multimodal.DctBasisMicro
-        .flatten.mkString(",")}] AS b),
-      co AS (
-        SELECT id, (v*8 + u) AS idx,
-          SUM(p[(y*8+x)+1] * b[(u*8+x)+1] * b[(v*8+y)+1]) AS c
-        FROM px, bas, range(8) tu(u), range(8) tv(v),
-             range(8) tx(x), range(8) ty(y)
-        GROUP BY 1, 2),
-      med AS (SELECT id, c AS m FROM (
-        SELECT id, c, row_number() OVER (PARTITION BY id ORDER BY c, idx)
-          AS rn
-        FROM co WHERE idx >= 1) WHERE rn = 32),
-      sig AS (SELECT co.id, CAST(SUM(CASE WHEN co.c > med.m
-              THEN CAST(1 AS BIGINT) << CAST(co.idx - 1 AS INT)
-              ELSE 0 END) AS BIGINT) AS ph
-            FROM co JOIN med USING (id) WHERE co.idx >= 1 GROUP BY 1)
+      ${graft.multimodal.Multimodal.phashSql}
       SELECT im.id AS media_id, CAST(im.ori AS BIGINT) AS orientation,
         sig.ph AS phash
       FROM im JOIN sig ON sig.id = im.id"""),
@@ -1606,8 +1618,7 @@ object TextQueries {
       px AS (
         SELECT id, o, list_transform(range(64), i -> $v) AS p
         FROM im CROSS JOIN range(1, 9) t(o)),
-      bas AS (SELECT [${graft.multimodal.Multimodal.DctBasisMicro
-        .flatten.mkString(",")}] AS b),
+      ${graft.multimodal.Multimodal.dctBasisSql},
       co AS (
         SELECT id, o, (v*8 + u) AS idx,
           SUM(p[(y*8+x)+1] * b[(u*8+x)+1] * b[(v*8+y)+1]) AS c
@@ -2358,9 +2369,8 @@ object TextQueries {
       dwp AS (
         SELECT doc_id, wpos, ws[CAST(wpos AS INT)] AS word FROM (
           SELECT doc_id,
-            list_filter(string_split(text, ' '), w -> len(w) > 0) AS ws,
-            unnest(range(1, len(list_filter(string_split(text, ' '),
-              w -> len(w) > 0)) + 1)) AS wpos
+            ${TextSignals.wordsSql()} AS ws,
+            unnest(range(1, len(${TextSignals.wordsSql()}) + 1)) AS wpos
           FROM documents))
       SELECT d.doc_id,
         CAST(SUM(w.n_syms) AS BIGINT) AS n_tokens,
@@ -2479,10 +2489,10 @@ object TextQueries {
             s"cast(chunk_idx * ${S}L + 1 as int), " +
             s"cast(least(${C}L, n - chunk_idx * ${S}L) as int)))"))
             .as("chunk_md5"))
-    }, Some("""
+    }, Some(s"""
       WITH w AS (
         SELECT doc_id,
-          list_filter(string_split(text, ' '), t -> len(t) > 0) AS ws
+          ${TextSignals.wordsSql()} AS ws
         FROM documents),
       c AS (
         SELECT doc_id, ws, CAST(len(ws) AS BIGINT) AS n,
@@ -2559,10 +2569,10 @@ object TextQueries {
         .select(col("doc_id"), col("n_lines").cast("long").as("n_lines"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"),
           md5(coalesce(col("clean_text"), lit(""))).as("clean_md5"))
-    }, Some("""
+    }, Some(s"""
       WITH w AS (
         SELECT doc_id,
-          list_filter(string_split(text, ' '), t -> len(t) > 0) AS ws
+          ${TextSignals.wordsSql()} AS ws
         FROM documents),
       c AS (
         SELECT doc_id,
@@ -2662,15 +2672,17 @@ object TextQueries {
           col("n_lines").cast("long").as("n_lines"),
           col("n_stripped"),
           md5(coalesce(col("clean_text"), lit(""))).as("clean_md5"))
-    }, Some("""
+    }, Some {
+      val page = """
+            'site' || CAST(doc_id % 40 AS VARCHAR) ||
+            ' cookie banner privacy terms notice follow us on social ' ||
+            text"""
+      s"""
       WITH base AS (
         SELECT doc_id,
           'site' || CAST(doc_id % 40 AS VARCHAR) ||
             CASE WHEN doc_id % 2 = 0 THEN '.com' ELSE '.org' END AS domain,
-          list_filter(string_split(
-            'site' || CAST(doc_id % 40 AS VARCHAR) ||
-            ' cookie banner privacy terms notice follow us on social ' ||
-            text, ' '), t -> len(t) > 0) AS ws
+          ${TextSignals.wordsSql(page)} AS ws
         FROM documents),
       c AS (
         SELECT doc_id, domain,
@@ -2705,7 +2717,8 @@ object TextQueries {
       SELECT c.doc_id, c.domain, CAST(c.n_lines AS BIGINT) AS n_lines,
         COALESCE(k.n_stripped, 0) AS n_stripped,
         md5(COALESCE(k.clean_text, '')) AS clean_md5
-      FROM c LEFT JOIN k ON k.doc_id = c.doc_id"""),
+      FROM c LEFT JOIN k ON k.doc_id = c.doc_id"""
+    },
       notes = "per-domain boilerplate strip: lines on >=3 distinct pages of one canonical domain are template mass and die EVERYWHERE (no keep-first) — the cross-page cleaning per-page link density can't see; ONE corpus pass into a (domain,line_md5) grouped frame carrying occurrence structs (flag in-group, no base rejoin); fixture plants a domain banner as line 0 so every domain fires while shifted original lines stay unique"),
 
     // ── Domain-level quality gate (site reputation, RefinedWeb-style) ──
@@ -2896,10 +2909,10 @@ object TextQueries {
           countDistinct(col("doc_id")).as("n_docs"),
           min("doc_id").as("min_doc"), max("doc_id").as("max_doc"),
           sum_distinct(col("doc_id")).as("doc_id_sum"))
-    }, Some("""
+    }, Some(s"""
       WITH dtok AS (
         SELECT doc_id,
-          CAST(len(list_filter(string_split(text, ' '), t -> len(t) > 0))
+          CAST(len(${TextSignals.wordsSql()})
             AS BIGINT) AS n_tokens
         FROM documents),
       c AS (
@@ -3349,10 +3362,10 @@ object TextQueries {
         .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
         .filter(col("cum_tokens") - col("n_tokens") < col("budget"))
         .select(col("doc_id"), col("source"), col("n_tokens"), col("cum_tokens"))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
         SELECT doc_id, source,
-          CAST(len(list_filter(string_split(text, ' '), t -> len(t) > 0))
+          CAST(len(${TextSignals.wordsSql()})
             AS BIGINT) AS n_tokens,
           CASE TRY_CAST(substr(source, 4) AS INT) % 4
             WHEN 0 THEN 900 WHEN 1 THEN 700 WHEN 2 THEN 500 ELSE 300
@@ -3410,13 +3423,13 @@ object TextQueries {
         count(when(col("status") === "quality", 1)).as("quality_dropped"),
         coalesce(sum(when(col("status") === "kept", col("n_tokens"))), lit(0L))
           .as("kept_tokens"))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
         SELECT doc_id, source, n_chars,
           md5(array_to_string(
-            list_filter(string_split(text, ' '), t -> len(t) > 0)[1:3], ' '))
+            ${TextSignals.wordsSql()}[1:3], ' '))
             AS fp,
-          CAST(len(list_filter(string_split(text, ' '), t -> len(t) > 0))
+          CAST(len(${TextSignals.wordsSql()})
             AS BIGINT) AS n_tokens
         FROM documents),
       ranked AS (
@@ -3528,10 +3541,10 @@ object TextQueries {
             .as("n_chunk_tokens"),
           array_join(slice(col("tk"), col("s") + 1, lit(40)), " ")
             .as("chunk_text"))
-    }, Some("""
+    }, Some(s"""
       WITH toks AS (
         SELECT doc_id,
-          list_filter(string_split(text, ' '), t -> len(t) > 0) AS tk
+          ${TextSignals.wordsSql()} AS tk
         FROM documents),
       chunks AS (
         SELECT doc_id, unnest(range(0, len(tk), 30)) AS s, tk FROM toks)
@@ -3566,31 +3579,9 @@ object TextQueries {
         .select(col("doc_id"),
           round(col("s").cast("double") / 1e6, 6).as("bm25"), col("n_terms"))
     }, Some(s"""
-      WITH toks AS (
-        SELECT doc_id,
-          unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
-        FROM documents),
-      dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-             FROM toks GROUP BY doc_id),
-      stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS t_toks FROM toks),
+      WITH ${bm25CorpusSql},
       q AS (SELECT unnest(['query', 'dup', 'scan']) AS tok),
-      df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-             FROM toks JOIN q USING (tok) GROUP BY tok),
-      tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-             FROM toks JOIN q USING (tok) GROUP BY doc_id, tok),
-      terms AS (
-        SELECT tf.doc_id,
-          CAST(ROUND(
-            (${DetMathSql.lnLong("2 * stats.n_docs + 2")}
-                - ${DetMathSql.lnLong("2 * df.df + 1")})
-            * CAST(tf.tf AS DOUBLE) * 2.2
-            / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25
-                + 0.75 * CAST(dl.dl AS DOUBLE)
-                  / (CAST(tot.t_toks AS DOUBLE) / CAST(stats.n_docs AS DOUBLE))))
-            * 1000000) AS BIGINT) AS micro
-        FROM tf JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN tot
-        JOIN df ON df.tok = tf.tok),
+      ${bm25TermsSql("", "terms")},
       scored AS (
         SELECT doc_id, SUM(micro) AS s, CAST(count(*) AS BIGINT) AS n_terms
         FROM terms GROUP BY doc_id)
@@ -3625,10 +3616,10 @@ object TextQueries {
         .groupBy("doc_id")
         .agg(min(col("dist")).as("min_dist"), count(lit(1)).as("n_pairs"))
         .filter(col("min_dist") <= 2)
-    }, Some("""
+    }, Some(s"""
       WITH toks AS (
         SELECT doc_id,
-          list_filter(string_split(text, ' '), x -> len(x) > 0) AS tk
+          ${TextSignals.wordsSql()} AS tk
         FROM documents),
       pos AS (
         SELECT doc_id, unnest(range(1, len(tk) + 1)) AS p, tk FROM toks),
@@ -3698,10 +3689,10 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"),
           sum(least(col("tend"), (col("block_id") + 1) * B) -
             greatest(col("tstart"), col("block_id") * B)).as("block_tokens"))
-    }, Some("""
+    }, Some(s"""
       WITH dtok AS (
         SELECT doc_id,
-          CAST(len(list_filter(string_split(text, ' '), t -> len(t) > 0))
+          CAST(len(${TextSignals.wordsSql()})
             AS BIGINT) AS n_tokens
         FROM documents),
       c AS (
@@ -4009,7 +4000,7 @@ object TextQueries {
             .cast("long") / lit(1e6), lit(0.0)).as("bigram_lm_score"))
     }, Some(s"""
       WITH tkt AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> len(t) > 0)
+        SELECT doc_id, ${TextSignals.wordsSql()}
           AS tk
         FROM documents),
       bx AS (
@@ -4055,7 +4046,7 @@ object TextQueries {
     // Magnitudes: num ≤ q·c·NB — BIGINT-safe to ~corpus 1e6 bigram types
     // × 1e6 counts; the 100 TB form scales the ratio to DOUBLE with a
     // documented ULP posture (or DECIMAL), noted here rather than
-    // half-built. Shapes (r12, the 2×-gate fix): ONE corpus bigram pass
+    // half-built. Shapes: ONE corpus bigram pass
     // into the pinned per-doc TYPE-count frame (doc, v, w, k) — the
     // corpus type table (v, w, cvw = Σ k) derives from it by
     // re-aggregation, cv/N1v/N1w/NB/n1/n2 derive from THAT (the
@@ -4276,7 +4267,7 @@ object TextQueries {
         rStop.as("r_stop"), rUniq.as("r_uniq"),
         (lit(4L) - rWc - rMwl - rStop - rUniq).as("n_failed"),
         when(rWc + rMwl + rStop + rUniq === 4L, 1L).otherwise(0L).as("keep"))
-    }, Some("""
+    }, Some(raw"""
       WITH q AS (
         SELECT doc_id,
           length(text) - length(replace(text, ' ', '')) + 1 AS n_tokens,
@@ -4286,10 +4277,8 @@ object TextQueries {
           + CAST(len(regexp_extract_all(text, '\ba\b')) AS DOUBLE)
           + CAST(len(regexp_extract_all(text, '\band\b')) AS DOUBLE)
           + CAST(len(regexp_extract_all(text, '\bof\b')) AS DOUBLE) AS stop_hits,
-          CAST(len(list_distinct(list_filter(string_split(text, ' '),
-              x -> len(x) > 0))) AS DOUBLE)
-            / greatest(len(list_filter(string_split(text, ' '),
-                x -> len(x) > 0)), 1) AS uniq_ratio
+          CAST(len(list_distinct(${TextSignals.wordsSql()})) AS DOUBLE)
+            / greatest(len(${TextSignals.wordsSql()}), 1) AS uniq_ratio
         FROM documents),
       f AS (
         SELECT doc_id, n_tokens, mean_tok_len, stop_hits, uniq_ratio,
@@ -4608,31 +4597,9 @@ object TextQueries {
           round(col("s").cast("double") / 1e6, 6).as("bm25_prf"),
           col("n_terms"))
     }, Some(s"""
-      WITH toks AS (
-        SELECT doc_id,
-          unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
-        FROM documents),
-      dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-             FROM toks GROUP BY doc_id),
-      stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS t_toks FROM toks),
+      WITH ${bm25CorpusSql},
       q1 AS (SELECT unnest(['query', 'dup', 'scan']) AS tok),
-      df1 AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-              FROM toks JOIN q1 USING (tok) GROUP BY tok),
-      tf1 AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              FROM toks JOIN q1 USING (tok) GROUP BY doc_id, tok),
-      t1 AS (
-        SELECT tf1.doc_id,
-          CAST(ROUND(
-            (${DetMathSql.lnLong("2 * stats.n_docs + 2")}
-                - ${DetMathSql.lnLong("2 * df1.df + 1")})
-            * CAST(tf1.tf AS DOUBLE) * 2.2
-            / (CAST(tf1.tf AS DOUBLE) + 1.2 * (0.25
-                + 0.75 * CAST(dl.dl AS DOUBLE)
-                  / (CAST(tot.t_toks AS DOUBLE) / CAST(stats.n_docs AS DOUBLE))))
-            * 1000000) AS BIGINT) AS micro
-        FROM tf1 JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN tot
-        JOIN df1 ON df1.tok = tf1.tok),
+      ${bm25TermsSql("1", "t1")},
       s1 AS (SELECT doc_id, SUM(micro) AS s FROM t1 GROUP BY doc_id),
       fb AS (SELECT doc_id FROM s1 ORDER BY s DESC, doc_id ASC LIMIT 10),
       expn AS (
@@ -4640,22 +4607,7 @@ object TextQueries {
         WHERE tok NOT IN ('query', 'dup', 'scan')
         GROUP BY tok ORDER BY count(*) DESC, tok ASC LIMIT 3),
       q2 AS (SELECT tok FROM expn UNION SELECT tok FROM q1),
-      df2 AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-              FROM toks JOIN q2 USING (tok) GROUP BY tok),
-      tf2 AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              FROM toks JOIN q2 USING (tok) GROUP BY doc_id, tok),
-      t2 AS (
-        SELECT tf2.doc_id,
-          CAST(ROUND(
-            (${DetMathSql.lnLong("2 * stats.n_docs + 2")}
-                - ${DetMathSql.lnLong("2 * df2.df + 1")})
-            * CAST(tf2.tf AS DOUBLE) * 2.2
-            / (CAST(tf2.tf AS DOUBLE) + 1.2 * (0.25
-                + 0.75 * CAST(dl.dl AS DOUBLE)
-                  / (CAST(tot.t_toks AS DOUBLE) / CAST(stats.n_docs AS DOUBLE))))
-            * 1000000) AS BIGINT) AS micro
-        FROM tf2 JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN tot
-        JOIN df2 ON df2.tok = tf2.tok),
+      ${bm25TermsSql("2", "t2")},
       s2 AS (SELECT doc_id, SUM(micro) AS s, CAST(count(*) AS BIGINT) AS n_terms
              FROM t2 GROUP BY doc_id)
       SELECT doc_id, round(CAST(s AS DOUBLE) / 1000000.0, 6) AS bm25_prf,
@@ -4742,8 +4694,7 @@ object TextQueries {
         SELECT doc_id, lang,
           CAST('0x' || substr(md5(tok), 1, 2) AS BIGINT) AS b
         FROM (SELECT doc_id, lang,
-                unnest(list_filter(string_split(text, ' '),
-                  t -> len(t) > 0)) AS tok
+                unnest(${TextSignals.wordsSql()}) AS tok
               FROM documents)),
       ct AS (SELECT b, COUNT(*) AS ct FROM toks WHERE lang = 'en' GROUP BY 1),
       cr AS (SELECT b, COUNT(*) AS cr FROM toks GROUP BY 1),
@@ -4833,8 +4784,7 @@ object TextQueries {
       WITH toks AS (
         SELECT source, CAST('0x' || substr(md5(tok), 1, 2) AS BIGINT) AS b
         FROM (SELECT source,
-                unnest(list_filter(string_split(text, ' '),
-                  t -> len(t) > 0)) AS tok
+                unnest(${TextSignals.wordsSql()}) AS tok
               FROM documents)),
       cs AS (SELECT source, b, COUNT(*) AS cs FROM toks GROUP BY 1, 2),
       cc AS (SELECT b, COUNT(*) AS cc FROM toks GROUP BY 1),
@@ -4983,8 +4933,7 @@ object TextQueries {
           .as("r2"))
     }, Some(s"""
       WITH toks AS (
-        SELECT unnest(list_filter(string_split(text, ' '),
-          t -> len(t) > 0)) AS tok
+        SELECT unnest(${TextSignals.wordsSql()}) AS tok
         FROM documents),
       vocab AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq
                 FROM toks GROUP BY 1),
@@ -5184,22 +5133,7 @@ object TextQueries {
           i -> (id*31 + (((i // 8) * h // 8) * w + ((i % 8) * w // 8)) * 7)
                % 256) AS p
         FROM im),
-      bas AS (SELECT [${graft.multimodal.Multimodal.DctBasisMicro
-        .flatten.mkString(",")}] AS b),
-      co AS (
-        SELECT id, (v*8 + u) AS idx,
-          SUM(p[(y*8+x)+1] * b[(u*8+x)+1] * b[(v*8+y)+1]) AS c
-        FROM px, bas, range(8) tu(u), range(8) tv(v),
-             range(8) tx(x), range(8) ty(y)
-        GROUP BY 1, 2),
-      med AS (SELECT id, c AS m FROM (
-        SELECT id, c, row_number() OVER (PARTITION BY id ORDER BY c, idx)
-          AS rn
-        FROM co WHERE idx >= 1) WHERE rn = 32),
-      sig AS (SELECT co.id, CAST(SUM(CASE WHEN co.c > med.m
-              THEN CAST(1 AS BIGINT) << CAST(co.idx - 1 AS INT)
-              ELSE 0 END) AS BIGINT) AS ph
-            FROM co JOIN med USING (id) WHERE co.idx >= 1 GROUP BY 1)
+      ${graft.multimodal.Multimodal.phashSql}
       SELECT a.id AS media_a, b.id AS media_b,
         CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
       FROM sig a JOIN sig b ON a.id < b.id
@@ -5464,10 +5398,9 @@ object TextQueries {
           coalesce(col("n_spans"), lit(0L)).as("n_spans"),
           col("input_text"),
           coalesce(col("target_text"), lit("")).as("target_text"))
-    }, Some("""
+    }, Some(s"""
       WITH tk AS (
-        SELECT doc_id, list_filter(string_split(text, ' '),
-          x -> len(x) > 0) AS t
+        SELECT doc_id, ${TextSignals.wordsSql()} AS t
         FROM documents),
       toks AS (
         SELECT doc_id, i AS pos, t[i] AS tok, len(t) AS n
@@ -5558,10 +5491,10 @@ object TextQueries {
             array_join(expr(
               "slice(t, cast(lo + 1 AS int), cast(hi - lo AS int))"), " ")))
           .otherwise(array_join(col("t"), " ")).as("out_text"))
-    }, Some("""
+    }, Some(s"""
       WITH tk AS (
         SELECT doc_id,
-          list_filter(string_split(text, ' '), x -> len(x) > 0) AS t
+          ${TextSignals.wordsSql()} AS t
         FROM documents),
       base AS (
         SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n,
@@ -5624,10 +5557,10 @@ object TextQueries {
             "slice(tkn, cast(n_user + 1 AS int), cast(n - n_user AS int))"),
             " "),
           lit(" <|end|>")).as("chat_text"))
-    }, Some("""
+    }, Some(s"""
       WITH tk AS (
         SELECT doc_id,
-          list_filter(string_split(text, ' '), x -> len(x) > 0) AS tkn
+          ${TextSignals.wordsSql()} AS tkn
         FROM documents),
       base AS (
         SELECT doc_id, tkn, CAST(len(tkn) AS BIGINT) AS n FROM tk),
@@ -5881,31 +5814,9 @@ object TextQueries {
               col("idcg_u").cast("double") * lit(1e6)).cast("long") / lit(1e6))
             .otherwise(lit(0.0)).as("ndcg"))
     }, Some(s"""
-      WITH toks AS (
-        SELECT doc_id,
-          unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
-        FROM documents),
-      dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-             FROM toks GROUP BY doc_id),
-      stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS t_toks FROM toks),
+      WITH ${bm25CorpusSql},
       q AS (SELECT unnest(['query', 'dup', 'scan']) AS tok),
-      df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-             FROM toks JOIN q USING (tok) GROUP BY tok),
-      tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-             FROM toks JOIN q USING (tok) GROUP BY doc_id, tok),
-      terms AS (
-        SELECT tf.doc_id,
-          CAST(ROUND(
-            (${DetMathSql.lnLong("2 * stats.n_docs + 2")}
-                - ${DetMathSql.lnLong("2 * df.df + 1")})
-            * CAST(tf.tf AS DOUBLE) * 2.2
-            / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25
-                + 0.75 * CAST(dl.dl AS DOUBLE)
-                  / (CAST(tot.t_toks AS DOUBLE) / CAST(stats.n_docs AS DOUBLE))))
-            * 1000000) AS BIGINT) AS micro
-        FROM tf JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN tot
-        JOIN df ON df.tok = tf.tok),
+      ${bm25TermsSql("", "terms")},
       scored AS (
         SELECT doc_id, SUM(micro) AS s, CAST(count(*) AS BIGINT) AS n_terms
         FROM terms GROUP BY doc_id),

@@ -16,6 +16,11 @@ object TextSignals {
   def words(text: Column): Column =
     filter(split(text, " "), w => length(w) > lit(0))
 
+  /** DuckDB twin of [[words]], spliced into the oracle SQL: the words of
+    * the SQL expression `text` as a list. */
+  def wordsSql(text: String = "text"): String =
+    s"list_filter(string_split($text, ' '), x -> len(x) > 0)"
+
   /** Whitespace token count via length arithmetic (engine-portable; the
     * q30 form): spaces + 1, so it also counts the empty tokens between
     * doubled spaces and differs from `size(words(text))` on purpose —

@@ -341,8 +341,7 @@ object UnigramLm {
        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS n_pieces
        |  FROM emit4 GROUP BY word),
        |dwords AS (
-       |  SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-       |    x -> len(x) > 0)) AS word
+       |  SELECT doc_id, unnest(${TextSignals.wordsSql()}) AS word
        |  FROM documents),
        |perdoc AS (
        |  SELECT d.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words_all,

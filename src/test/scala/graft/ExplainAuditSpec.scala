@@ -2,8 +2,9 @@ package graft
 
 /** The per-query plan record: the `PLAN` hash is a function of the plan's
   * shape only (not of the build's expression ids or the layout's file
-  * names), and the scan counts are the query's own even in a session whose
-  * CacheManager already holds the query's persisted frames. */
+  * names), the `ORACLE` hash of the oracle's tokens only (not of its
+  * whitespace), and the scan counts are the query's own even in a session
+  * whose CacheManager already holds the query's persisted frames. */
 class ExplainAuditSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -21,6 +22,15 @@ class ExplainAuditSpec extends SparkSpec {
   test("two different plans hash differently") {
     assert(ExplainAudit.planHash(build("q12_revenue_by_nation")) !=
       ExplainAudit.planHash(build("q13_top_unshipped")))
+  }
+
+  test("an oracle hash ignores re-indentation and moves with a changed literal") {
+    val sql = SparkEntry.oracleSql("q57_dup_clusters")
+    assert(sql.contains(">= 0.6"))
+    assert(ExplainAudit.oracleHash(sql) ==
+      ExplainAudit.oracleHash(sql.replace("\n", "\n    ") + "\n"))
+    assert(ExplainAudit.oracleHash(sql) !=
+      ExplainAudit.oracleHash(sql.replace(">= 0.6", ">= 0.5")))
   }
 
   test("q115's hash is stable across its layout's part-file UUIDs") {

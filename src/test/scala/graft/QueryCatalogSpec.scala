@@ -32,6 +32,8 @@ class QueryCatalogSpec extends SparkSpec {
     assert(sections == SparkEntry.queries.size,
       s"CATALOG.md section counts sum to $sections, catalog has " +
         s"${SparkEntry.queries.size}")
+    assert(text == CatalogDoc.render(), "CATALOG.md is stale — regenerate " +
+      "with `sbt \"runMain graft.CatalogDoc\"`")
   }
 
   test("oracle coverage: every SQL-expressible query declares an oracle") {
